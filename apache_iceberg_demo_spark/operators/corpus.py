@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from apache_iceberg_demo_spark.caching import operator_scope
 from apache_iceberg_demo_spark.io import load
 from apache_iceberg_demo_spark.registry import register
 
@@ -29,24 +30,6 @@ from apache_iceberg_demo_spark.registry import register
 #: the synthetic corpus's docs are 10-120 words, so 8 keeps spans frequent
 #: enough to exercise the cross-doc group-by at every scale factor).
 SPAN_W = 8
-
-# result caches keyed PER OPERATOR (source divergence, CMS heavy
-# hitters): releasing one operator's previous frames never drops the
-# other's returned cache (the multimodal r10 ADVICE class) — same keyed
-# pattern as operators/text.py / operators/roundout.py.
-_live_caches: dict[str, list[DataFrame]] = {}
-
-
-def _release_caches(owner: str) -> None:
-    for df in _live_caches.pop(owner, []):
-        try:
-            df.unpersist()
-        except Exception:
-            # the frame's SparkSession was stopped (session-restart
-            # consumers, e.g. tools/determinism_probe.py): its cached
-            # blocks died with the session — nothing to release
-            pass
-
 
 @register(
     "c5_span_dedup_exact",
@@ -182,21 +165,20 @@ def c5_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the explode+agg (measured: 4 scans / 12 exchanges compiled lazily vs 1
     full-data shuffle cached). Released on the next invocation.
     """
-    from apache_iceberg_demo_spark.tuning import input_sized_shuffle, scoped_conf
+    from apache_iceberg_demo_spark.tuning import input_sized_shuffle
 
-    _release_caches("c5_source_divergence")
     d = load(spark, sf_dir, "documents")
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": input_sized_shuffle(d)}
-    ):
-        st = (
+    with operator_scope(
+        spark,
+        "c5_source_divergence",
+        conf={"spark.sql.shuffle.partitions": input_sized_shuffle(d)},
+    ) as s:
+        st = s.keep(
             d.select("source", F.explode(F.split("text", " ")).alias("token"))
             .groupBy("source", "token")
             .agg(F.count("*").cast("double").alias("c"))
-            .persist()
         )
         st.count()  # materialize the shared subplan inside the conf scope
-        _live_caches.setdefault("c5_source_divergence", []).append(st)
     sn = st.groupBy("source").agg(F.sum("c").alias("src_n"))
     ct = st.groupBy("token").agg(F.sum("c").alias("cc"))
     cn = ct.agg(F.sum("cc").alias("corp_n"))
@@ -322,7 +304,6 @@ def b4_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     to audit the sketch — production keeps the 1024 counters and drops the
     shuffle.
     """
-    _release_caches("b4_countmin_heavy_hitters")
     D, WID = 4, 256
     d = load(spark, sf_dir, "documents")
     toks = d.select(
@@ -379,37 +360,30 @@ def b4_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"CMS worst overestimate {worst} exceeds eps*N = {eps_n:.1f}"
         )
-    top = (
-        audit.orderBy(F.desc("exact_count"), "token")
-        .limit(10)
-        .select(
-            "token",
-            "exact_count",
-            (
-                (F.col("est_count") - F.col("exact_count"))
-                <= 0.05 * F.col("exact_count")
-            ).alias("est_within_5pct"),
+    # the audit collect below would otherwise be a throwaway execution:
+    # persist so the caller's count/collect reuse it instead of re-running
+    # the sketch + exact-count pipeline (the double-execution class fixed in
+    # pagerank/RAG/triangle-count); a failed check unpersists it on the way
+    # out (ADVICE r08)
+    with operator_scope(spark, "b4_countmin_heavy_hitters") as s:
+        top = s.keep(
+            audit.orderBy(F.desc("exact_count"), "token")
+            .limit(10)
+            .select(
+                "token",
+                "exact_count",
+                (
+                    (F.col("est_count") - F.col("exact_count"))
+                    <= 0.05 * F.col("exact_count")
+                ).alias("est_within_5pct"),
+            )
         )
-        # the audit collect below would otherwise be a throwaway execution:
-        # persist so the caller's count/collect reuse it instead of
-        # re-running the sketch + exact-count pipeline (the double-execution
-        # class fixed in pagerank/RAG/triangle-count)
-        .persist()
-    )
-    _live_caches.setdefault("b4_countmin_heavy_hitters", []).append(top)
-    try:
         loose = [r["token"] for r in top.collect() if not r["est_within_5pct"]]
         if loose:
             raise AssertionError(
                 f"CMS heavy-hitter estimates off by >5% for {loose} — heavy "
                 "hitters dominate their buckets, this should never happen"
             )
-    except BaseException:
-        # don't leak the persisted frame until some later corpus operator
-        # happens to run _release_caches (ADVICE r08)
-        _live_caches["b4_countmin_heavy_hitters"].remove(top)
-        top.unpersist()
-        raise
     return top
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_iceberg_demo_spark.caching import OperatorScope, operator_scope
 from apache_iceberg_demo_spark.io import load
 from apache_iceberg_demo_spark.registry import register
 
@@ -189,30 +190,12 @@ def c1_dedup_content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- C2: near-dup via MinHash + banded LSH ---------------------------------------
 
-# The hashed-shingle cache from the most recent minhash invocation; the next
-# invocation (or tests' teardown) unpersists it so repeated bench/driver runs
-# don't accumulate executor storage memory.
-_live_caches: list[DataFrame] = []
-
-
 #: memoized LSH pair results for the registered documents-table op, keyed by
 #: sf_dir — c2_dedup_clusters consumes c2_minhash's pairs, and without the
 #: memo the whole LSH pipeline (the most expensive plan in the repo) would
-#: re-run inside the same process. Cleared with the caches it points into.
+#: re-run inside the same process. Cleared whenever minhash_lsh_pairs
+#: releases the frames it points into.
 _pairs_memo: dict[str, DataFrame] = {}
-
-
-def _release_caches() -> None:
-    _pairs_memo.clear()
-    while _live_caches:
-        df = _live_caches.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            # the frame's SparkSession was stopped (session-restart
-            # consumers, e.g. tools/determinism_probe.py): its cached
-            # blocks died with the session — nothing to release
-            pass
 
 
 def minhash_lsh_pairs(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
@@ -231,28 +214,28 @@ def minhash_lsh_pairs(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
         scoped_conf,
     )
 
-    _release_caches()
-    # hashed shingle sets, computed ONCE and cached: reused by the two sides
-    # of the band join and the verification joins (without the cache, Spark
-    # re-derives the whole shingle+hash pipeline for every self-join branch).
-    # cpu_spread first: the shingle+minhash HOFs are interpreted per-row CPU
-    # that would otherwise serialize on a 1-2 split scan (see tuning.py)
-    hs = hashed_word_shingles(cpu_spread(docs)).cache()
-    _live_caches.append(hs)
-    # the band/verify shuffles are sized to the SPREAD frame's partitioning,
-    # not the raw scan's (sizing from `docs` — 1-2 splits locally — coalesced
-    # the post-shuffle stages back down to the floor of 8, partially undoing
-    # the fan-out; r09 ADVICE), and the result is materialized INSIDE that
-    # scope (a lazily-returned frame would execute after the conf restore,
-    # back at the session default — e.g. 200 near-empty tasks per stage in
-    # the driver's plain session)
-    with scoped_conf(
-        docs.sparkSession,
-        {"spark.sql.shuffle.partitions": input_sized_shuffle(hs)},
-    ):
-        out = _minhash_pairs_plan(hs, min_jaccard).cache()
-        out.count()
-    _live_caches.append(out)
+    _pairs_memo.clear()  # the scope below releases the frames it points into
+    with operator_scope(docs.sparkSession, "minhash_lsh_pairs") as s:
+        # hashed shingle sets, computed ONCE and cached: reused by the two
+        # sides of the band join and the verification joins (without the
+        # cache, Spark re-derives the whole shingle+hash pipeline for every
+        # self-join branch). cpu_spread first: the shingle+minhash HOFs are
+        # interpreted per-row CPU that would otherwise serialize on a 1-2
+        # split scan (see tuning.py)
+        hs = s.keep(hashed_word_shingles(cpu_spread(docs)))
+        # the band/verify shuffles are sized to the SPREAD frame's
+        # partitioning, not the raw scan's (sizing from `docs` — 1-2 splits
+        # locally — coalesced the post-shuffle stages back down to the floor
+        # of 8, partially undoing the fan-out; r09 ADVICE), and the result
+        # is materialized INSIDE that scope (a lazily-returned frame would
+        # execute after the conf restore, back at the session default —
+        # e.g. 200 near-empty tasks per stage in the driver's plain session)
+        with scoped_conf(
+            docs.sparkSession,
+            {"spark.sql.shuffle.partitions": input_sized_shuffle(hs)},
+        ):
+            out = s.keep(_minhash_pairs_plan(hs, min_jaccard))
+            out.count()
     return out
 
 
@@ -446,20 +429,11 @@ def connected_components(
     rounds × one shuffle over the edge list — at 100 TB this is the standard
     replacement for a driver-side union-find, which cannot hold the nodes.
     """
-    # cache the edge list FIRST: nodes and the symmetrized edge frame each
-    # reference it twice, so an uncached (possibly expensive — LSH pipeline)
-    # lineage would re-execute up to 4× before the loop even starts
-    edges = edges.cache()
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
     # every round joins against a CACHED frame; without this conf AQE must
     # preserve the cached plan's output partitioning and cannot coalesce the
     # (default 200) shuffle partitions — the iteration then pays full-width
     # shuffles on a shrinking frame. Scoped set + restore (no session leak).
-    from apache_iceberg_demo_spark.tuning import input_sized_shuffle, scoped_conf
+    from apache_iceberg_demo_spark.tuning import input_sized_shuffle
 
     # size the per-round shuffles to the EDGE data's own partitioning rather
     # than the session default: the iteration's frames are proportional to the
@@ -467,23 +441,40 @@ def connected_components(
     # each of the ~log(n) rounds into hundreds of near-empty tasks. The loop
     # materializes every round inside the scope (cache + aggregate), so the
     # restored conf never touches the returned result.
-    with scoped_conf(
+    with operator_scope(
         edges.sparkSession,
-        {
+        "connected_components",
+        conf={
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
             "spark.sql.shuffle.partitions": input_sized_shuffle(edges),
         },
-    ):
-        return _cc_loop(nodes, edges, src, dst, max_iter)
+    ) as s:
+        # cache the edge list FIRST: nodes and the symmetrized edge frame
+        # each reference it twice, so an uncached (possibly expensive — LSH
+        # pipeline) lineage would re-execute up to 4× before the loop starts
+        edges = s.keep(edges)
+        nodes = (
+            edges.select(F.col(src).alias("node"))
+            .unionByName(edges.select(F.col(dst).alias("node")))
+            .distinct()
+        )
+        return _cc_loop(s, nodes, edges, src, dst, max_iter)
 
 
 def _cc_loop(
-    nodes: DataFrame, edges: DataFrame, src: str, dst: str, max_iter: int
+    s: OperatorScope,
+    nodes: DataFrame,
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    max_iter: int,
 ) -> DataFrame:
-    labels = nodes.withColumn("comp", F.col("node")).cache()
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).cache()
+    labels = s.keep(nodes.withColumn("comp", F.col("node")))
+    sym = s.keep(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
+            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+        )
+    )
 
     # convergence probe: labels only ever DECREASE (monotone min), so the
     # component-id sum is strictly decreasing until the fixed point — one
@@ -500,13 +491,12 @@ def _cc_loop(
             .groupBy("a")
             .agg(F.min("comp").alias("nmin"))
         )
-        new_labels = (
+        new_labels = s.keep(
             labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
             .select(
                 "node",
                 F.least(F.col("comp"), F.coalesce("nmin", F.col("comp"))).alias("comp"),
             )
-            .cache()
         )
         new_sum = _label_sum(new_labels)
         changed = int(new_sum != prev_sum)
@@ -518,10 +508,8 @@ def _cc_loop(
     else:
         # min-label propagation needs O(component diameter) rounds; a chain
         # longer than max_iter hops would silently split into several
-        # components — fail loudly instead of returning wrong clusters
-        sym.unpersist()
-        edges.unpersist()
-        labels.unpersist()
+        # components — fail loudly instead of returning wrong clusters (the
+        # operator scope unpersists every frame the loop registered)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(labels still changing); raise max_iter — the graph has a "
@@ -529,8 +517,7 @@ def _cc_loop(
         )
     sym.unpersist()
     edges.unpersist()
-    _live_caches.append(labels)  # released on the next dedup invocation
-    return labels
+    return labels  # released on the next connected_components invocation
 
 
 @register("c2_dedup_clusters")  # rows-only: iterative algorithm, not ANSI SQL

@@ -31,37 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from apache_iceberg_demo_spark.caching import keep_result, operator_scope
 from apache_iceberg_demo_spark.io import load
 from apache_iceberg_demo_spark.registry import register
-
-# result caches from the most recent invocation needing a reused subplan
-# (PageRank's per-iteration edge frame); released on the next invocation —
-# same pattern as operators/text.py / operators/corpus.py.
-_live_caches: list[DataFrame] = []
-
-#: per-operator RESULT caches (r15): keyed so each operator releases ONLY its
-#: own previous result at re-invocation — a fresh invocation must recompute
-#: from parquet (no result caching across runs), but within one invocation
-#: the driver's count-then-collect reads the materialized frame once.
-_op_caches: dict[str, DataFrame] = {}
-
-
-def _keep_result(owner: str, df: DataFrame) -> DataFrame:
-    from apache_iceberg_demo_spark.caching import keep_result
-
-    return keep_result(_op_caches, owner, df)
-
-
-def _release_caches() -> None:
-    while _live_caches:
-        df = _live_caches.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            # the frame's SparkSession was stopped (session-restart
-            # consumers, e.g. tools/determinism_probe.py): its cached
-            # blocks died with the session — nothing to release
-            pass
 
 
 @register(
@@ -407,14 +379,15 @@ def b3_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count-then-collect would re-run the wedge pipeline per action
     # (audited: 3.3 s + 2.9 s at sf0.01). Materialize under an input-sized
     # scope; e0's cache builds inside it.
-    from apache_iceberg_demo_spark.tuning import input_sized_shuffle, scoped_conf
+    from apache_iceberg_demo_spark.tuning import input_sized_shuffle
 
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": input_sized_shuffle(li)}
-    ):
-        result = result.persist()
+    with operator_scope(
+        spark,
+        "b3_triangle_count_copurchase",
+        conf={"spark.sql.shuffle.partitions": input_sized_shuffle(li)},
+    ) as s:
+        result = s.keep(result)
         result.count()
-    _live_caches.append(result)
     return result
 
 
@@ -521,7 +494,7 @@ def b4_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     # r15: persist+materialize the 5-row result — the driver's
     # count-then-collect otherwise executes the two-scan DECIMAL
     # aggregate twice (reexec audit: 1.5 s + 1.7 s at sf0.01)
-    return _keep_result("b4_incremental_agg_maintenance", merged)
+    return keep_result("b4_incremental_agg_maintenance", merged)
 
 
 #: embedding dimensionality of the synthetic corpus (TESTDATA.md)
@@ -692,7 +665,7 @@ def c3_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise runs the Gram-partial pipeline twice (reexec audit:
     # 1.9 s + 1.5 s at sf0.01). Values untouched (cache of the final
     # frame; the engine-proof integer-space math above is unchanged).
-    return _keep_result("c3_covariance_matrix", out)
+    return keep_result("c3_covariance_matrix", out)
 
 
 #: BM25 free parameters (the universal defaults from Robertson et al.)
@@ -802,7 +775,7 @@ def c5_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: persist+materialize the 20-row ranking — count-then-collect
     # otherwise executes the tokenize+tf+df pipeline twice (reexec
     # audit: 3.1 s + 2.1 s at sf0.01)
-    return _keep_result("c5_bm25_search", ranked)
+    return keep_result("c5_bm25_search", ranked)
 
 
 @register(
@@ -932,7 +905,7 @@ def b4_winsorized_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: persist+materialize the 3-row result — count-then-collect
     # otherwise runs the two-pass percentile pipeline twice (reexec
     # audit: 1.3 s + 1.8 s at sf0.01)
-    return _keep_result("b4_winsorized_robust_stats", stats)
+    return keep_result("b4_winsorized_robust_stats", stats)
 
 
 #: PageRank hyperparameters (the canonical Brin & Page values) and a fixed
@@ -992,7 +965,6 @@ def b3_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     side HAS to be the loop — a genuine engine-capability divergence worth
     pinning in a test).
     """
-    _release_caches()
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     e0 = (
         li.alias("x")
@@ -1020,21 +992,23 @@ def b3_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spills gracefully if a 100 TB vertex partition outgrows memory.
     # Measured (sf, current → this): sf0.01 16.8 → 7.9 s, sf0.1 22.3 →
     # 16.5 s for the full build+10-iteration chain.
-    from apache_iceberg_demo_spark.tuning import input_sized_shuffle, scoped_conf
+    from apache_iceberg_demo_spark.tuning import input_sized_shuffle
 
     nparts = max(
         int(input_sized_shuffle(li)), spark.sparkContext.defaultParallelism
     )
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(nparts)}
-    ):
+    with operator_scope(
+        spark,
+        "b3_pagerank_copurchase",
+        conf={"spark.sql.shuffle.partitions": str(nparts)},
+    ) as s:
         # r16: persist() compiles the cached PHYSICAL plan at registration
         # time, not at first materialization — registering these caches
         # before the scope opened baked 200-partition exchanges into the
         # cached plans, and (canChangeCachedPlanOutputPartitioning=false)
         # every iteration join then exchanged at 200 to co-partition with
         # them: ten 200-task stages per run at driver conditions. All
-        # persists now register INSIDE the scope (r16 interleaved A/B,
+        # persists register INSIDE the scope (r16 interleaved A/B,
         # plain local[8], sf0.1 spark-side min-of-3: 40.3 -> 25.6 s; the
         # one-iteration chain plan drops from 20 hashpartitioning(..,200)
         # references to zero — plans/r16/b3_pagerank_copurchase_*.txt).
@@ -1044,18 +1018,15 @@ def b3_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         # -> 22.8/21.1/21.3 s, consistent all three pairs; overturns the
         # r15 "e0 cache loses" datum, which registered the cache OUTSIDE
         # the scope and paid 200-wide cached-plan exchanges for it).
-        e0 = e0.persist()
-        _live_caches.append(e0)
+        e0 = s.keep(e0)
         edges = e0.selectExpr("a AS s", "b AS d").unionAll(
             e0.selectExpr("b AS s", "a AS d")
         )
         deg = edges.groupBy("s").agg(
             F.count(F.lit(1)).cast("double").alias("outd")
         )
-        ew = edges.join(deg, "s").repartition(nparts, "s").persist()
-        _live_caches.append(ew)
-        nodes = deg.select(F.col("s").alias("node")).persist()
-        _live_caches.append(nodes)
+        ew = s.keep(edges.join(deg, "s").repartition(nparts, "s"))
+        nodes = s.keep(deg.select(F.col("s").alias("node")))
         # N as a driver scalar: one aggregated row, O(1) driver data. The
         # division stays JVM-side (lit/lit) so the doubles are bit-identical
         # to the former broadcast-column form.
@@ -1076,11 +1047,10 @@ def b3_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.lit(_PR_DAMP) * F.coalesce(F.col("c"), F.lit(0.0))
                 ).alias("rank"),
             )
-        result = ranks.select(
-            "node", F.round(F.col("rank") * n_lit, 6).alias("rank_x_n")
-        ).persist()
+        result = s.keep(
+            ranks.select("node", F.round(F.col("rank") * n_lit, 6).alias("rank_x_n"))
+        )
         result.count()
-    _live_caches.append(result)
     return result
 
 

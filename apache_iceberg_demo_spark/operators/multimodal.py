@@ -28,30 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_iceberg_demo_spark.caching import keep_result
 from apache_iceberg_demo_spark.io import load
 from apache_iceberg_demo_spark.registry import register
-
-
-#: result frames persisted so a consumer's count()+collect() executes the
-#: expensive synth-encode→decode pipeline once (the r07 re-execution-audit
-#: pattern). Keyed PER OPERATOR: a module-wide list meant invoking the jpeg
-#: kernel dropped the CDC summary's cache (and vice versa), silently
-#: re-executing the full chunker pipeline for an interleaved consumer
-#: holding both frames (r09 ADVICE) — each invocation now releases only
-#: its own predecessor.
-_live_caches: dict[str, DataFrame] = {}
-
-
-def _release_caches(owner: str) -> None:
-    df = _live_caches.pop(owner, None)
-    if df is not None:
-        try:
-            df.unpersist()
-        except Exception:
-            # the frame's SparkSession was stopped (session-restart
-            # consumers, e.g. tools/determinism_probe.py): its cached
-            # blocks died with the session — nothing to release
-            pass
 
 
 # the codec kernels' fan-out (found via the scale probe's 1x/2x inversion,
@@ -323,11 +302,7 @@ def c4_content_defined_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("doc_id")
         )
-        _release_caches("c4_content_defined_chunking")
-        result = result.persist()
-        result.count()
-        _live_caches["c4_content_defined_chunking"] = result
-        return result
+        return keep_result("c4_content_defined_chunking", result)
     finally:
         chunks.unpersist()
 
@@ -1732,8 +1707,4 @@ def c4_jpeg_baseline_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # module; persist the tiny stats frame so the driver gate's
     # count()+collect() runs the pipeline once (reexec-audit flagged the raw
     # frame at 2.1 s + 1.7 s double execution at sf0.01).
-    _release_caches("c4_jpeg_baseline_decode")
-    out = out.persist()
-    out.count()
-    _live_caches["c4_jpeg_baseline_decode"] = out
-    return out
+    return keep_result("c4_jpeg_baseline_decode", out)

@@ -27,33 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from apache_iceberg_demo_spark.caching import operator_scope
 from apache_iceberg_demo_spark.io import load, scratch_dir
 from apache_iceberg_demo_spark.registry import register
-
-# working-set caches keyed PER OPERATOR: five independent operators cache
-# here (BFS, bellman-ford, cached-scan-reuse, RAG pipeline, LSH tuning),
-# and a wholesale release would drop another operator's RETURNED cached
-# frame — silently re-executing its whole iterative pipeline for an
-# interleaved consumer (the multimodal r10 ADVICE class). Each invocation
-# releases only its own predecessor's frames.
-_live_caches: dict[str, list[DataFrame]] = {}
-
-
-def _release_caches(owner: str) -> None:
-    for df in _live_caches.pop(owner, []):
-        try:
-            df.unpersist()
-        except Exception:
-            # the frame's SparkSession was stopped (session-restart
-            # consumers, e.g. tools/determinism_probe.py): its cached
-            # blocks died with the session — nothing to release
-            pass
-
-
-def _track(owner: str, df: DataFrame) -> DataFrame:
-    _live_caches.setdefault(owner, []).append(df)
-    return df
-
 
 @register(
     "b1_xml_roundtrip",
@@ -290,7 +266,6 @@ def b3_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-hops aggregated OUTSIDE the recursion (aggregating over the
     recursive reference is illegal in Spark 4 and unnecessary here).
     """
-    _release_caches("b3_bfs_reachability")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     e0 = (
         li.alias("x")
@@ -308,48 +283,42 @@ def b3_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins never re-exchange or re-sort edge bytes — only the shrinking
     # frontier moves, and its SHUFFLE_HASH hint builds the per-partition
     # hash from the frontier instead of sort-merging the cached edges.
-    from apache_iceberg_demo_spark.tuning import input_sized_shuffle, scoped_conf
+    from apache_iceberg_demo_spark.tuning import input_sized_shuffle
 
     nparts = max(
         int(input_sized_shuffle(li)), spark.sparkContext.defaultParallelism
     )
-    # r16: the WHOLE cascade (persist registrations included) runs inside
-    # the scope — persist() compiles the cached physical plan at
-    # registration time, so caches registered before the scope opened
-    # baked 200-partition exchanges into every hop join at driver
-    # conditions (see b3_pagerank_copurchase for the mechanism)
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(nparts)}
-    ):
-        edges = (
+    # the WHOLE cascade runs inside the operator scope, whose keep() only
+    # registers in-scope: persist() compiles the cached physical plan at
+    # registration time (see b3_pagerank_copurchase for the mechanism)
+    with operator_scope(
+        spark,
+        "b3_bfs_reachability",
+        conf={"spark.sql.shuffle.partitions": str(nparts)},
+    ) as s:
+        edges = s.keep(
             e0.selectExpr("a AS s", "b AS d")
             .unionAll(e0.selectExpr("b AS s", "a AS d"))
             .repartition(nparts, "s")
-            .persist()
         )
-        _track("b3_bfs_reachability", edges)
 
         seeds = (
             load(spark, sf_dir, "part")
             .where(F.col("p_brand") == "Brand#11")
             .select(F.col("p_partkey").alias("node"))
         )
-        visited = seeds.withColumn("hops", F.lit(0).cast("bigint")).persist()
-        _track("b3_bfs_reachability", visited)
+        visited = s.keep(seeds.withColumn("hops", F.lit(0).cast("bigint")))
         frontier = visited.select("node")
         for h in range(1, _BFS_MAX_HOPS + 1):
             fr = frontier.hint("shuffle_hash")
-            nxt = (
+            nxt = s.keep(
                 fr.join(edges, fr["node"] == edges["s"])
                 .select(F.col("d").alias("node"))
                 .distinct()
                 .join(visited.select("node"), "node", "left_anti")
                 .withColumn("hops", F.lit(h).cast("bigint"))
-                .persist()
             )
-            _track("b3_bfs_reachability", nxt)
-            visited = visited.unionAll(nxt).persist()
-            _track("b3_bfs_reachability", visited)
+            visited = s.keep(visited.unionAll(nxt))
             frontier = nxt.select("node")
         # materialize the whole hop cascade ONCE under the iteration scope
         # (a plain 200-partition session otherwise pays ~200 tasks per hop
@@ -1166,13 +1135,12 @@ def b6_cached_scan_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     common-subplan-sharing gap (CLAUDE.md) this operator demonstrates the
     fix for.
     """
-    _release_caches("b6_cached_scan_reuse")
-    base = (
-        load(spark, sf_dir, "orders")
-        .select("o_orderstatus", "o_orderpriority", "o_totalprice")
-        .persist()
-    )
-    _track("b6_cached_scan_reuse", base)
+    with operator_scope(spark, "b6_cached_scan_reuse") as s:
+        base = s.keep(
+            load(spark, sf_dir, "orders").select(
+                "o_orderstatus", "o_orderpriority", "o_totalprice"
+            )
+        )
 
     def agg(kind: str, col: str) -> DataFrame:
         return base.groupBy(col).agg(
@@ -2113,87 +2081,84 @@ def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2, ["stream", "batch"]),
     ]
 
-    _release_caches("pipeline_rag_retrieval")
+    from apache_iceberg_demo_spark.tuning import input_sized_shuffle
+
     d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
-    )
-    chunks = (
-        toks.withColumn("chunk_no", (F.col("pos") / CHUNK_W).cast("int"))
-        .groupBy("doc_id", "chunk_no")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "token"))),
-                    lambda s: s["token"],
-                ),
-            ).alias("chunk_text"),
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
+    # every persist (chunks included) registers inside ONE input-sized
+    # shuffle scope: persist() compiles the cached physical plan at
+    # registration, and a chunks cache compiled at the plain session's 200
+    # partitions made every later join co-partition to 200 with it (the
+    # graph-operator lesson, see b3_pagerank_copurchase)
+    with operator_scope(
+        spark,
+        "pipeline_rag_retrieval",
+        conf={"spark.sql.shuffle.partitions": input_sized_shuffle(d)},
+    ) as s:
+        toks = d.select(
+            "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
         )
-        .withColumn(
-            "chunk_id",
-            F.col("doc_id") * 1000 + F.col("chunk_no"),
+        chunks = s.keep(
+            toks.withColumn("chunk_no", (F.col("pos") / CHUNK_W).cast("int"))
+            .groupBy("doc_id", "chunk_no")
+            .agg(
+                F.concat_ws(
+                    " ",
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("pos", "token"))),
+                        lambda t: t["token"],
+                    ),
+                ).alias("chunk_text"),
+                F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
+            )
+            .withColumn(
+                "chunk_id",
+                F.col("doc_id") * 1000 + F.col("chunk_no"),
+            )
         )
-        .persist()
-    )
-    _track("pipeline_rag_retrieval", chunks)
 
-    n_chunks = chunks.agg(F.count(F.lit(1)).alias("nc"))
-    qdf = spark.createDataFrame(
-        [(qid, terms) for qid, terms in queries], "query_id int, terms array<string>"
-    )
-    term = qdf.select("query_id", F.explode("terms").alias("term"))
-
-    # tf per (chunk, term) via token explode; idf from chunk-level df
-    ctok = chunks.select(
-        "chunk_id", F.explode(F.split("chunk_text", " ")).alias("token")
-    )
-    tf = (
-        ctok.join(F.broadcast(term), ctok["token"] == term["term"])
-        .groupBy("query_id", "chunk_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
-    df_ = (
-        ctok.join(
-            F.broadcast(term.select("term").distinct()),
-            ctok["token"] == F.col("term"),
+        n_chunks = chunks.agg(F.count(F.lit(1)).alias("nc"))
+        qdf = spark.createDataFrame(
+            [(qid, terms) for qid, terms in queries], "query_id int, terms array<string>"
         )
-        .groupBy("term")
-        .agg(F.countDistinct("chunk_id").cast("double").alias("df"))
-    )
-    scored = (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(n_chunks))
-        .withColumn("idf", F.log((F.col("nc") + 1.0) / (F.col("df") + 1.0)))
-        .groupBy("query_id", "chunk_id")
-        .agg(F.sum(F.col("tf") * F.col("idf")).alias("score"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("chunk_id"))
-    cand = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOPC)
-        .join(chunks.select("chunk_id", "chunk_text", "n_tokens"), "chunk_id")
-    )
-    # persist the 60-row shortlist (r15): the near-dup screen consumes cand
-    # on BOTH sides of its self-join and the anti-join reads it a third
-    # time — Catalyst shares no subplans, so the whole chunk→score→rank
-    # pipeline re-executed ~3x inside the one final action (measured: the
-    # scoring stage alone is ~5.7 s at sf0.01 on a plain session; the
-    # operator dropped ~16→~7 s warm).
-    # r16: BOTH persists now REGISTER inside one shuffle scope — persist()
-    # compiles the cached physical plan at registration time, so the r15
-    # shape (persist outside, count inside) baked the plain session's 200
-    # partitions into both cached plans and the scoped materializations
-    # executed them 200-wide anyway (the graph-operator lesson, see
-    # b3_pagerank_copurchase).
-    from apache_iceberg_demo_spark.tuning import input_sized_shuffle, scoped_conf
+        term = qdf.select("query_id", F.explode("terms").alias("term"))
 
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": input_sized_shuffle(d)}
-    ):
-        cand = cand.persist()
-        _track("pipeline_rag_retrieval", cand)
+        # tf per (chunk, term) via token explode; idf from chunk-level df
+        ctok = chunks.select(
+            "chunk_id", F.explode(F.split("chunk_text", " ")).alias("token")
+        )
+        tf = (
+            ctok.join(F.broadcast(term), ctok["token"] == term["term"])
+            .groupBy("query_id", "chunk_id", "term")
+            .agg(F.count(F.lit(1)).cast("double").alias("tf"))
+        )
+        df_ = (
+            ctok.join(
+                F.broadcast(term.select("term").distinct()),
+                ctok["token"] == F.col("term"),
+            )
+            .groupBy("term")
+            .agg(F.countDistinct("chunk_id").cast("double").alias("df"))
+        )
+        scored = (
+            tf.join(F.broadcast(df_), "term")
+            .crossJoin(F.broadcast(n_chunks))
+            .withColumn("idf", F.log((F.col("nc") + 1.0) / (F.col("df") + 1.0)))
+            .groupBy("query_id", "chunk_id")
+            .agg(F.sum(F.col("tf") * F.col("idf")).alias("score"))
+        )
+        w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("chunk_id"))
+        cand = (
+            scored.withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") <= TOPC)
+            .join(chunks.select("chunk_id", "chunk_text", "n_tokens"), "chunk_id")
+        )
+        # persist the 60-row shortlist (r15): the near-dup screen consumes cand
+        # on BOTH sides of its self-join and the anti-join reads it a third
+        # time — Catalyst shares no subplans, so the whole chunk→score→rank
+        # pipeline re-executed ~3x inside the one final action (measured: the
+        # scoring stage alone is ~5.7 s at sf0.01 on a plain session; the
+        # operator dropped ~16→~7 s warm).
+        cand = s.keep(cand)
         cand.count()
 
         # near-dup screen within the shortlist: drop a candidate if a
@@ -2229,7 +2194,11 @@ def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cum_tokens") <= BUDGET
         )
 
-        out = (
+        # persist BEFORE the audit collect: the self-assert pass below
+        # is the only execution of the 5-stage pipeline; without it the
+        # driver's count-then-collect re-runs the whole lineage twice
+        # (measured ~15 s extra at sf0.01 — the pagerank/BFS lesson).
+        out = s.keep(
             packed.groupBy("query_id")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_chunks"),
@@ -2237,13 +2206,7 @@ def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("score").alias("min_score"),
             )
             .withColumn("budget_ok", F.lit(True))
-            # persist BEFORE the audit collect: the self-assert pass below
-            # is the only execution of the 5-stage pipeline; without it the
-            # driver's count-then-collect re-runs the whole lineage twice
-            # (measured ~15 s extra at sf0.01 — the pagerank/BFS lesson).
-            .persist()
         )
-        _track("pipeline_rag_retrieval", out)
         rows = out.collect()
     if len(rows) != len(queries):
         raise AssertionError(f"expected {len(queries)} query contexts, got {len(rows)}")
@@ -3044,7 +3007,6 @@ def b3_bellman_ford_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE with the min taken OUTSIDE the recursion (Spark 4 cannot aggregate
     over the recursive reference).
     """
-    _release_caches("b3_bellman_ford_bounded")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     e0 = (
         li.alias("x")
@@ -3065,36 +3027,33 @@ def b3_bellman_ford_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounds under the plain 200-partition session (43 s spark-side at
     # sf0.1, measured). The final frame now persists + counts inside the
     # same scope every sibling graph operator uses: 43 → ~4 s.
-    from apache_iceberg_demo_spark.tuning import input_sized_shuffle, scoped_conf
+    from apache_iceberg_demo_spark.tuning import input_sized_shuffle
 
     nparts = max(
         int(input_sized_shuffle(li)), spark.sparkContext.defaultParallelism
     )
     wexpr = (F.lit(1) + (F.col("a") + F.col("b")) % 4).cast("long")
-    # r16: edge/dist persist registrations moved INSIDE the scope —
-    # persist() compiles the cached physical plan at registration time,
-    # so the pre-scope registrations baked 200-partition exchanges into
-    # the relax joins at driver conditions (see b3_pagerank_copurchase)
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(nparts)}
-    ):
-        edges = (
+    # every edge/dist registration compiles inside the operator scope
+    # (persist() compiles the cached physical plan at registration time;
+    # see b3_pagerank_copurchase)
+    with operator_scope(
+        spark,
+        "b3_bellman_ford_bounded",
+        conf={"spark.sql.shuffle.partitions": str(nparts)},
+    ) as s:
+        edges = s.keep(
             e0.select(F.col("a").alias("s"), F.col("b").alias("d"), wexpr.alias("w"))
             .unionAll(
                 e0.select(F.col("b").alias("s"), F.col("a").alias("d"), wexpr.alias("w"))
             )
             .repartition(nparts, "s")
-            .persist()
         )
-        _track("b3_bellman_ford_bounded", edges)
 
-        dist = (
+        dist = s.keep(
             load(spark, sf_dir, "part")
             .where(F.col("p_brand") == "Brand#11")
             .select(F.col("p_partkey").alias("node"), F.lit(0).cast("long").alias("cost"))
-            .persist()
         )
-        _track("b3_bellman_ford_bounded", dist)
         for _ in range(3):
             d_ = dist.hint("shuffle_hash")
             relaxed = (
@@ -3103,18 +3062,15 @@ def b3_bellman_ford_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("d").alias("node"), (F.col("cost") + F.col("w")).alias("cost")
                 )
             )
-            dist = (
+            dist = s.keep(
                 dist.unionAll(relaxed)
                 .groupBy("node")
                 .agg(F.min("cost").alias("cost"))
-                .persist()
             )
-            _track("b3_bellman_ford_bounded", dist)
-        result = dist.select(
-            "node", F.col("cost").cast("bigint").alias("min_cost")
-        ).persist()
+        result = s.keep(
+            dist.select("node", F.col("cost").cast("bigint").alias("min_cost"))
+        )
         result.count()
-    _track("b3_bellman_ford_bounded", result)
     return result
 
 
@@ -4110,14 +4066,13 @@ def c2_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature,
     )
 
-    _release_caches("c2_lsh_band_tuning")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = (
-        hashed_word_shingles(docs)
-        .select("doc_id", minhash_signature(F.col("hs")).alias("sig"))
-        .persist()
-    )
-    _track("c2_lsh_band_tuning", sigs)
+    with operator_scope(spark, "c2_lsh_band_tuning") as s:
+        sigs = s.keep(
+            hashed_word_shingles(docs).select(
+                "doc_id", minhash_signature(F.col("hs")).alias("sig")
+            )
+        )
 
     rows = []
     for n_bands in (4, 8, 16):

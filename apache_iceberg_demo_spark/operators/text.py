@@ -13,39 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from apache_iceberg_demo_spark.caching import keep_result, operator_scope
 from apache_iceberg_demo_spark.io import load
 from apache_iceberg_demo_spark.registry import register
-
-# result caches from eagerly-materialized operators (language ID, the two
-# persisted pipelines); keyed PER OPERATOR so releasing one operator's
-# previous result never drops another's returned cache (the multimodal r10
-# ADVICE class), and each next invocation releases only its own
-# predecessor so repeated driver/bench runs don't accumulate storage.
-_live_caches: dict[str, DataFrame] = {}
-
-
-def _release_caches(owner: str) -> None:
-    df = _live_caches.pop(owner, None)
-    if df is not None:
-        try:
-            df.unpersist()
-        except Exception:
-            # the frame's SparkSession was stopped (session-restart
-            # consumers, e.g. tools/determinism_probe.py): its cached
-            # blocks died with the session — nothing to release
-            pass
-
-
-def _keep_result(owner: str, df: DataFrame) -> DataFrame:
-    """Persist + materialize a returned summary frame so the driver's
-    count()+collect() executes the upstream pipeline once (measured r11:
-    saves ~0.8-1.0 s per query at driver conditions for the two persisted
-    pipelines; REEXEC_r10.log flagged both as ~1.5-2 s double executions).
-    The result frames are tiny (per-source / per-language rollups), so the
-    cache cost is the materialization we were paying anyway."""
-    from apache_iceberg_demo_spark.caching import keep_result
-
-    return keep_result(_live_caches, owner, df)
 
 #: the synthetic corpus's function words (FIXTURES.md: query/engine vocabulary)
 STOPWORDS = ("a", "the")
@@ -269,7 +239,7 @@ def c5_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The whole two-pass model runs under an input-sized shuffle scope and is
     # materialized inside it (see tuning.py), then the intermediate cache is
     # released — the result cache is the only thing kept.
-    from apache_iceberg_demo_spark.tuning import input_sized_shuffle, scoped_conf
+    from apache_iceberg_demo_spark.tuning import input_sized_shuffle
 
     # cpu_spread: the interpreted zip_with bigram build + explode is per-row
     # CPU in the scan stage; a 1-2 split documents scan would serialize it
@@ -303,17 +273,17 @@ def c5_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hits",
         )
     )
-    _release_caches("c5_language_id")
     # sized from the SPREAD frame (db), not the raw 1-2 split scan (d), so
     # the groupBy/window shuffles keep the fan-out's parallelism (r09 ADVICE
     # fix class — see dedup.minhash_lsh_pairs)
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": input_sized_shuffle(db)}
-    ):
-        result = result.cache()
+    with operator_scope(
+        spark,
+        "c5_language_id",
+        conf={"spark.sql.shuffle.partitions": input_sized_shuffle(db)},
+    ) as s:
+        result = s.keep(result)
         result.count()
     db.unpersist()
-    _live_caches["c5_language_id"] = result
     return result
 
 
@@ -617,7 +587,7 @@ def c5_decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFram
     with_grams = _doc_ngrams(d, extra_cols=["source"])
     corpus = with_grams.filter(F.col("doc_id") % 97 != 0)
     contaminated = _contaminated_doc_ids(with_grams).withColumn("hit", F.lit(1))
-    return _keep_result(
+    return keep_result(
         "c5_decontaminate_ngram_overlap",
         corpus.select("doc_id", "source")
         .join(contaminated, on="doc_id", how="left")
@@ -715,7 +685,7 @@ def pipeline_pretrain_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pack_id",
         F.floor((F.sum("n_tokens").over(pw) - F.col("n_tokens")) / 512).cast("bigint"),
     )
-    return _keep_result(
+    return keep_result(
         "pipeline_pretrain_data_prep",
         packed.groupBy("lang")
         .agg(

@@ -247,11 +247,25 @@ _DRIVER_VERIFIED: set[str] = {
 }
 
 # Names that must lead the registry regardless of verification history
-# (regression re-checks of previously-failed/erred rows). Empty after r09:
-# c3_covariance_matrix — the sole red driver row across 8 rounds — passed
-# its engine-proof re-run (CORRECTNESS_r09.json hash-green), so there is
-# nothing left to re-prove.
-_HEAD: list[str] = []
+# (driver re-proof of changed code): the two r16 rewrites the driver has
+# not re-run yet, then every query whose cache lifecycle moved onto
+# caching.operator_scope (graph iterations first).
+_HEAD: list[str] = [
+    "b3_join_star_revenue", "asof_join_tolerance",
+    "b3_pagerank_copurchase", "b3_bfs_reachability",
+    "b3_bellman_ford_bounded", "b3_triangle_count_copurchase",
+    "c2_dedup_clusters", "c2_minhash_lsh_neardup", "pipeline_rag_retrieval",
+    "b6_cached_scan_reuse", "c2_lsh_band_tuning",
+    "b4_incremental_agg_maintenance", "c3_covariance_matrix",
+    "c5_bm25_search", "b4_winsorized_robust_stats", "c5_source_divergence",
+    "b4_countmin_heavy_hitters", "c4_content_defined_chunking",
+    "c4_jpeg_baseline_decode", "c5_language_id",
+    "c5_decontaminate_ngram_overlap", "pipeline_pretrain_data_prep",
+    "a7_iceberg_v2_spec_scan", "c6_iceberg_v2_equality_delete_export",
+    "c6_iceberg_v2_positional_delete_export",
+    "c6_iceberg_v2_incremental_scan", "c6_iceberg_v2_change_feed_consume",
+    "c6_iceberg_v2_hidden_partitioning", "c6_iceberg_v2_multi_field_spec",
+]
 
 # Within the driver-unverified block, run these FIRST. Empty after r07:
 # all 38 prior members came back fully green (folded into _DRIVER_VERIFIED

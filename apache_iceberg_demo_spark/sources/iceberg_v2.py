@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from apache_iceberg_demo_spark.caching import keep_result
 from apache_iceberg_demo_spark.registry import register
 from apache_iceberg_demo_spark.sources.avro_ocf import read_ocf, write_ocf
 
@@ -2418,17 +2419,6 @@ def _session_token(spark: SparkSession) -> str:
 #: several write jobs (see warehouse._demo_warehouse)
 _export_cache: dict[tuple[str, str], str] = {}
 
-#: returned frames persisted so the driver's count()+collect() runs the
-#: spec-path scan once (keyed per operator — the multimodal r09 pattern)
-_live_caches: dict[str, DataFrame] = {}
-
-
-def _keep_result(owner: str, df: DataFrame) -> DataFrame:
-    from apache_iceberg_demo_spark.caching import keep_result
-
-    return keep_result(_live_caches, owner, df)
-
-
 @register(
     "a7_iceberg_v2_spec_scan",
     # The demo fixture is deterministic (l_orderkey % 20 = 0; ship_day =
@@ -2494,7 +2484,7 @@ def a7_iceberg_v2_spec_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"manifest-list accounts {accounted} rows, scan returned {n_spec}"
         )
-    return _keep_result(
+    return keep_result(
         "a7_iceberg_v2_spec_scan",
         df.groupBy("ship_day")
         .agg(
@@ -2576,7 +2566,7 @@ def c6_iceberg_v2_equality_delete_export(
             )
         _mor_export_cache[key] = location
     df = read_iceberg_v2(spark, _mor_export_cache[key])
-    return _keep_result(
+    return keep_result(
         "c6_iceberg_v2_equality_delete_export",
         df.groupBy("l_linenumber")
         .agg(
@@ -2689,7 +2679,7 @@ def c6_iceberg_v2_positional_delete_export(
             )
         _pos_export_cache[key] = location
     df = read_iceberg_v2(spark, _pos_export_cache[key])
-    return _keep_result(
+    return keep_result(
         "c6_iceberg_v2_positional_delete_export",
         df.groupBy("l_linenumber")
         .agg(
@@ -2774,7 +2764,7 @@ def c6_iceberg_v2_incremental_scan(
         _incr_export_cache[key] = (location, base_sid)
     location, base_sid = _incr_export_cache[key]
     df = read_iceberg_v2_changes(spark, location, from_snapshot_id=base_sid)
-    return _keep_result(
+    return keep_result(
         "c6_iceberg_v2_incremental_scan",
         df.groupBy("l_linenumber")
         .agg(
@@ -2867,7 +2857,7 @@ def c6_iceberg_v2_change_feed_consume(
         out = deltas[0]
         for d in deltas[1:]:
             out = out.unionByName(d)
-        result = _keep_result(
+        result = keep_result(
             "c6_iceberg_v2_change_feed_consume",
             out.groupBy("poll", "l_linenumber")
             .agg(F.count("*").cast("bigint").alias("n_rows"))
@@ -2965,7 +2955,7 @@ def c6_iceberg_v2_hidden_partitioning(
             f"day-transform pruning did not bite: {n_filtered} of "
             f"{n_full} files scanned for the half-year predicate"
         )
-    return _keep_result(
+    return keep_result(
         "c6_iceberg_v2_hidden_partitioning",
         filtered.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("month")
@@ -3090,7 +3080,7 @@ def c6_iceberg_v2_multi_field_spec(
     )
     if not (0 < len(filtered.inputFiles()) < n_full):
         raise AssertionError("day pruning did not bite on the date read")
-    return _keep_result(
+    return keep_result(
         "c6_iceberg_v2_multi_field_spec",
         filtered.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("month")

@@ -596,37 +596,17 @@ def test_jpeg_decode_result_is_persisted_and_released_on_reinvoke(spark):
     """The JPEG kernel persists its per-MCU stats frame so a consumer's
     count()+collect() runs the huffman/IDCT pipeline once; a second
     invocation must release the first frame (no cache leak)."""
-    from apache_iceberg_demo_spark.operators import multimodal as mm
+    from apache_iceberg_demo_spark import caching
 
-    first = registry.QUERIES["c4_jpeg_baseline_decode"](spark, SF)
+    owner = "c4_jpeg_baseline_decode"
+    first = registry.QUERIES[owner](spark, SF)
     assert first.storageLevel.useMemory
-    assert mm._live_caches["c4_jpeg_baseline_decode"] is first
-    second = registry.QUERIES["c4_jpeg_baseline_decode"](spark, SF)
+    assert [df is first for df in caching._live.get(owner, [])] == [True]
+    second = registry.QUERIES[owner](spark, SF)
     # exactly one live cache — the first frame was released before the
     # second persisted. (storageLevel can't distinguish them: the cache
     # manager resolves it by LOGICAL PLAN, and both invocations build the
     # same plan, so first.storageLevel now reports second's entry.)
-    assert mm._live_caches["c4_jpeg_baseline_decode"] is second
-    second.unpersist()
-    mm._live_caches.clear()
+    assert [df is second for df in caching._live.get(owner, [])] == [True]
+    caching.release(owner)
     assert not second.storageLevel.useMemory
-
-
-def test_live_caches_are_keyed_per_operator(spark):
-    """r09 ADVICE: a module-wide release list meant invoking the jpeg
-    kernel unpersisted the CDC summary frame returned earlier — an
-    interleaved consumer holding both frames silently re-executed the
-    full chunker pipeline. The caches are now keyed per operator: each
-    invocation releases only its own predecessor."""
-    from apache_iceberg_demo_spark.operators import multimodal as mm
-
-    cdc = registry.QUERIES["c4_content_defined_chunking"](spark, SF)
-    assert cdc.storageLevel.useMemory
-    jpeg = registry.QUERIES["c4_jpeg_baseline_decode"](spark, SF)
-    # the jpeg invocation must NOT have dropped the CDC frame's cache
-    assert cdc.storageLevel.useMemory
-    assert mm._live_caches["c4_content_defined_chunking"] is cdc
-    assert mm._live_caches["c4_jpeg_baseline_decode"] is jpeg
-    for df in (cdc, jpeg):
-        df.unpersist()
-    mm._live_caches.clear()

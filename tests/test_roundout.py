@@ -883,24 +883,3 @@ def test_upsample_brings_every_stratum_to_max(spark):
     for r in rows:
         assert r.n_upsampled == r.n_unique * r.repeat_factor
         assert r.n_upsampled >= max_orig
-
-
-def test_roundout_caches_are_keyed_per_operator(spark):
-    """r11 extension of the multimodal r10 ADVICE fix: five independent
-    roundout operators share the module cache store. Running one must NOT
-    drop another's returned cached frame (an interleaved consumer holding
-    the RAG result would otherwise silently re-execute its whole 5-stage
-    pipeline — the r07 double-execution fix would be undone)."""
-    from apache_iceberg_demo_spark.operators import roundout as ro
-
-    rag = registry.QUERIES["pipeline_rag_retrieval"](spark, SF)
-    assert any(df is rag for df in ro._live_caches["pipeline_rag_retrieval"])
-    assert rag.storageLevel.useMemory
-    registry.QUERIES["b6_cached_scan_reuse"](spark, SF).collect()
-    # the cached-scan invocation must NOT have dropped RAG's result cache
-    assert rag.storageLevel.useMemory
-    assert any(df is rag for df in ro._live_caches["pipeline_rag_retrieval"])
-    for dfs in list(ro._live_caches.values()):
-        for df in dfs:
-            df.unpersist()
-    ro._live_caches.clear()

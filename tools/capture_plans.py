@@ -4,9 +4,9 @@ Usage: python tools/capture_plans.py <suffix> [query ...]
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt (default r16) for
 each headline query (or the explicit list). No TIMED execution happens here —
 but operators that materialize internally (graph-iteration counts,
-_keep_result persists, c6 warehouse fixture builds) DO run real jobs during
-plan construction, so passing arbitrary query names can perturb a concurrent
-benchmark; the bench numbers come from bench.py.
+caching.keep_result persists, c6 warehouse fixture builds) DO run real jobs
+during plan construction, so passing arbitrary query names can perturb a
+concurrent benchmark; the bench numbers come from bench.py.
 """
 
 from __future__ import annotations
