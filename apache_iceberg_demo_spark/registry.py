@@ -247,10 +247,28 @@ _DRIVER_VERIFIED: set[str] = {
 }
 
 # Names that must lead the registry regardless of verification history
-# (driver re-proof of changed code): the two r16 rewrites the driver has
-# not re-run yet, then every query whose cache lifecycle moved onto
-# caching.operator_scope (graph iterations first).
+# (driver re-proof of changed code): every query that reads a native
+# warehouse table (the native read became one scan with field-id binding,
+# and the spec reader shares its constant-attach join), then the r16/r17
+# carry-overs the driver has not re-run yet: the two r16 rewrites and
+# every query whose cache lifecycle moved onto caching.operator_scope
+# (graph iterations first).
 _HEAD: list[str] = [
+    "a8_relocated_warehouse_scan", "c6_metadata_snapshots", "c6_time_travel",
+    "c6_compaction_rewrite", "c6_merge_into_upsert", "c6_schema_evolution",
+    "c6_system_queries", "c6_sort_order_clustering", "c6_file_skipping",
+    "c6_incremental_snapshot_read", "c6_write_audit_publish",
+    "c6_remove_orphan_files", "c6_zorder_clustering", "c6_named_refs",
+    "c6_row_level_delete_update", "c6_snapshot_diff_cdc",
+    "c6_partition_evolution", "c6_rollback_cherry_pick",
+    "c6_partitions_metadata", "c6_expire_snapshots_retention",
+    "c6_branch_fast_forward", "c6_merge_on_read_delete",
+    "a7_iceberg_v2_spec_scan", "c6_iceberg_v2_equality_delete_export",
+    "c6_iceberg_v2_positional_delete_export",
+    "c6_iceberg_v2_incremental_scan", "c6_iceberg_v2_change_feed_consume",
+    "c6_iceberg_v2_hidden_partitioning", "c6_iceberg_v2_multi_field_spec",
+    "b9_foreachbatch_merge_sink", "c1_dedup_incremental_index",
+    "pipeline_corpus_release", "a01_a06_csv_ingest_roundtrip",
     "b3_join_star_revenue", "asof_join_tolerance",
     "b3_pagerank_copurchase", "b3_bfs_reachability",
     "b3_bellman_ford_bounded", "b3_triangle_count_copurchase",
@@ -261,10 +279,6 @@ _HEAD: list[str] = [
     "b4_countmin_heavy_hitters", "c4_content_defined_chunking",
     "c4_jpeg_baseline_decode", "c5_language_id",
     "c5_decontaminate_ngram_overlap", "pipeline_pretrain_data_prep",
-    "a7_iceberg_v2_spec_scan", "c6_iceberg_v2_equality_delete_export",
-    "c6_iceberg_v2_positional_delete_export",
-    "c6_iceberg_v2_incremental_scan", "c6_iceberg_v2_change_feed_consume",
-    "c6_iceberg_v2_hidden_partitioning", "c6_iceberg_v2_multi_field_spec",
 ]
 
 # Within the driver-unverified block, run these FIRST. Empty after r07:

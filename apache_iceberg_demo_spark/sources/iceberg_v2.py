@@ -64,6 +64,7 @@ from pyspark.sql.types import StructType
 from apache_iceberg_demo_spark.caching import keep_result
 from apache_iceberg_demo_spark.registry import register
 from apache_iceberg_demo_spark.sources.avro_ocf import read_ocf, write_ocf
+from apache_iceberg_demo_spark.sources.transforms import simple_conjuncts
 
 # ---------------------------------------------------------------- errors
 
@@ -253,14 +254,6 @@ def try_bound_value(ice_type: str, raw: bytes):
         return bound_value(ice_type, raw)
     except (KeyError, struct.error, ValueError, IndexError):
         return None
-
-
-def _simple_conjuncts(where: Optional[str]) -> list[tuple]:
-    """Shared with the warehouse-native transform pruner — see
-    ``transforms.simple_conjuncts``."""
-    from apache_iceberg_demo_spark.sources.transforms import simple_conjuncts
-
-    return simple_conjuncts(where)
 
 
 def _decode_transformed_bound(result_type: str, raw: Optional[bytes]):
@@ -717,63 +710,38 @@ def _write_equality_delete_file(
     return path
 
 
-def _write_positional_delete_file(wh, name: str, mdir: str, dp: dict):
+def _write_positional_delete_file(
+    wh, name: str, mdir: str, dp: dict, meta: dict, snap: dict
+):
     """Materialize a POSITION delete parquet (spec: ``file_path`` +
     ``pos``, reserved field ids 2147483546/2147483545, sorted by path then
-    position) for a non-equality-shaped MoR predicate.
+    position) for a non-equality-shaped MoR predicate recorded in ``snap``.
 
-    Positions come from scanning exactly the predicate's scoped data files
-    with ``_metadata.row_index`` (the parquet row ordinal — Iceberg's
-    ``pos``) and evaluating the predicate distributed; only the MATCHING
+    Positions come from the native reader's single scan of the predicate's
+    scoped data files live in ``snap``, which binds the predicate's names
+    exactly as a native read applies it (``Warehouse._scan_files`` with
+    ``removed=True``) and evaluates it distributed; only the MATCHING
     (file, pos) pairs ever reach the driver. That is predicate-match-sized
     — the same bound real Iceberg writers accept before compacting delete
     files; a predicate matching a large fraction of the table should be
     ``apply_deletes``-materialized instead, exactly as before.
 
-    Known limitation (loud, never silent): a non-equality predicate
-    recorded AFTER a column rename, scoped to files that physically carry
-    the OLD spelling, raises AnalysisException here (each scoped vintage
-    is scanned separately, so the missing column never NULL-coalesces) —
-    run ``apply_deletes()`` first in that lineage.
-
     Returns ``(path, row_count)``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    spark = wh.spark
-    data_root = os.path.join(wh._table_dir(name), "data")
-    groups: dict[str, list[str]] = {}
-    for rel in dp["files"]:
-        p = wh._abs_path(name, rel)
-        tag = os.path.relpath(p, data_root).split(os.sep)[0]
-        groups.setdefault(os.path.join(data_root, tag), []).append(p)
-    pairs: list[tuple[str, int]] = []
-    for base, ps in groups.items():
-        # basePath surfaces hive partition columns the predicate may use
-        df = (
-            spark.read.option("basePath", base)
-            .option("mergeSchema", "true")
-            .parquet(*ps)
-        )
-        hits = (
-            df.filter(F.coalesce(F.expr(dp["predicate"]), F.lit(False)))
-            .select(
-                F.col("_metadata.file_path").alias("fp"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-            .collect()
-        )
-        pairs.extend(
-            # decode java.net.URI escapes so the stored file_path is the
-            # spec-exact raw form matching the manifest's data_file.file_path
-            # (the reader re-quotes ONCE when joining against __file)
-            (
-                "file://"
-                + _uri_path_unquote(re.sub("^file:/+", "/", r["fp"])),
-                int(r["pos"]),
-            )
-            for r in hits
-        )
+    scoped = set(dp["files"])
+    live = [f for f in snap["manifest"] if f["path"] in scoped]
+    hits = wh._scan_files(
+        name, meta, snap, live, None, deletes=[dp], removed=True
+    ).select("__file", "__pos").collect() if live else []
+    # decode java.net.URI escapes so the stored file_path is the spec-exact
+    # raw form matching the manifest's data_file.file_path (the reader
+    # re-quotes ONCE when joining against __file)
+    pairs = [
+        ("file://" + _uri_path_unquote(r["__file"]), int(r["__pos"]))
+        for r in hits
+    ]
     pairs.sort()
     schema = pa.schema(
         [
@@ -897,6 +865,32 @@ def _uri_path_quote(path: str) -> str:
         else "".join(f"%{b:02X}" for b in ch.encode("utf-8"))
         for ch in path
     )
+
+
+def attach_file_constants(
+    spark: SparkSession,
+    df: DataFrame,
+    rows: list[tuple],
+    ddl: str,
+    path_col: Optional[str] = None,
+) -> DataFrame:
+    """Attach per-file constants (partition values, sequence numbers,
+    delete scopes) to scanned rows — the one join both readers use.
+    ``rows`` holds ``(plain local path, *constants)`` per data file, typed
+    by ``ddl``. The mapping is one row per FILE, so it is broadcast-joined
+    against each row's ``_metadata.file_path`` (Hadoop-style ``file:/p``,
+    java.net.URI-quoted — the manifest side is quoted to match) and the
+    scan stays one vectorized FileScan. ``df`` must be the scan frame
+    itself unless ``path_col`` names that path captured on the scan
+    frame(s). The ``__file`` key column stays; callers drop it."""
+    mapping = spark.createDataFrame(
+        [(_uri_path_quote(path), *consts) for path, *consts in rows],
+        schema="`__file` string, " + ddl,
+    )
+    raw = F.col("_metadata.file_path" if path_col is None else path_col)
+    return df.withColumn(
+        "__file", F.regexp_replace(raw, "^file:/+", "/")
+    ).join(F.broadcast(mapping), "__file")
 
 
 def _uri_path_unquote(path: str) -> str:
@@ -1471,7 +1465,7 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
                     # spec content=1, (file_path, pos) of matching rows in
                     # exactly the predicate's scoped data files
                     dfile, n_del = _write_positional_delete_file(
-                        wh, name, mdir, dp
+                        wh, name, mdir, dp, meta, snap
                     )
                 # global delete: the unpartitioned spec scopes it table-wide
                 if () not in spec_ids:
@@ -1784,7 +1778,7 @@ def read_iceberg_v2(
     # simple AND-conjuncts, parsed once: hidden-partitioning pruning maps
     # them through the spec transforms (day/month/year/hour/bucket/
     # truncate) and compares in transformed space
-    conjuncts = _simple_conjuncts(where)
+    conjuncts = simple_conjuncts(where)
     specs_by_id = {s["spec-id"]: s for s in meta.get("partition-specs", [])}
     snap_types_by_id = {f["id"]: f["type"] for f in schema["fields"]}
     snap_fields_by_id = {f["id"]: f for f in schema["fields"]}
@@ -2055,27 +2049,24 @@ def read_iceberg_v2(
         def _map_type(t: str) -> str:
             return spark_type(t) if t in _PARTITION_AVRO else "string"
 
-        map_ddl = "`__file` string, `__seq` bigint" + "".join(
+        map_ddl = "`__seq` bigint" + "".join(
             f", `{n}` {_map_type(t)}" for n, t in part_fields
         )
-        mapping = spark.createDataFrame(
+        # __file stays alive while position deletes need it (dropped at
+        # the end)
+        out = attach_file_constants(
+            spark,
+            out,
             [
                 (
-                    _uri_path_quote(_from_uri(u)),
+                    _from_uri(u),
                     file_seqs[u],
                     *[vals.get(n) for n, _ in part_fields],
                 )
                 for u, vals in file_parts.items()
             ],
-            schema=map_ddl,
+            map_ddl,
         )
-        # _metadata.file_path renders Hadoop-style (file:/p, single slash);
-        # normalize both sides to plain paths before the join. __file stays
-        # alive while position deletes need it (dropped at the end).
-        out = out.withColumn(
-            "__file",
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
-        ).join(F.broadcast(mapping), "__file")
         if not pos_deletes:
             out = out.drop("__file")
     # bind the declared column set/order/types through the spec's

@@ -34,6 +34,7 @@ from __future__ import annotations
 import decimal
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -398,21 +399,14 @@ class Warehouse:
         # columns new to the table (including RE-ADDED names after a drop —
         # the evolution mutators remove the old id first) get a fresh one, so
         # reads bind file data by identity, never by name collision.
-        try:
-            from pyspark.sql.types import StructType as _St
-
-            col_names = [f.name for f in _St.fromJson(json.loads(schema_ddl)).fields]
-        except (ValueError, KeyError, TypeError):
-            col_names = None
-        if col_names is not None:
-            fids = dict(meta.get("fids", {}))
-            nfid = int(meta.get("next_field_id", 1))
-            for c in col_names:
-                if c not in fids:
-                    fids[c] = nfid
-                    nfid += 1
-            meta["fids"] = fids
-            meta["next_field_id"] = nfid
+        fids = dict(meta.get("fids", {}))
+        nfid = int(meta.get("next_field_id", 1))
+        for c in self._declared_schema({"schema": schema_ddl}).fieldNames():
+            if c not in fids:
+                fids[c] = nfid
+                nfid += 1
+        meta["fids"] = fids
+        meta["next_field_id"] = nfid
         snapshot = {
             "snapshot_id": snap_id,
             "parent_id": parent,
@@ -496,57 +490,49 @@ class Warehouse:
         self,
         name: str,
         df: DataFrame,
-        snap_tag: str,
+        meta: Optional[dict],
+        parent: Optional[int],
         partition_by,
         shuffle: bool = True,
-    ) -> str:
-        data_dir = os.path.join(self._table_dir(name), "data", snap_tag)
+        conform: bool = True,
+    ) -> list[dict]:
+        """Write the next commit's data files and return their manifest
+        entries. The directory is ``data/snap-<id>-<uuid8>``: ``<id>`` is
+        the snapshot id the commit will receive, which is how a read finds
+        the writing schema of a file (:meth:`_writer_id`); the uuid keeps
+        concurrent writers apart. Unless the frame defines the schema (a
+        replace: ``conform=False``), columns are cast to the table's
+        declared types first: the read takes its parquet read schema from
+        metadata, so a file must store the types metadata declares."""
+        tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
+        data_dir = os.path.join(self._table_dir(name), "data", tag)
+        if conform:
+            types = {x.name: x.dataType for x in self._declared_schema(meta).fields}
+            df = df.select(*[
+                F.col(c).cast(types[c]).alias(c) if c in types else c
+                for c in df.columns
+            ])
         pcols = self._pcols(partition_by)
         if pcols and shuffle:
-            # hash-repartition on the partition column first: each partition
-            # value lands in exactly ONE task, so the dynamic-partition
-            # write emits one file per value regardless of upstream
-            # parallelism. At cluster scale this is what stops a W-task
-            # upstream from spraying W x values small files that compaction
-            # then has to clean up. At sf0.01 it costs ~0.3 s of shuffle per
-            # write (commit overhead dominates either way — measured, not
-            # assumed). Callers that pre-cluster (sort-order tables) pass
-            # shuffle=False to keep their range layout; at 100 TB you'd pair
-            # this with maxRecordsPerFile to split the occasional giant
-            # partition.
-            #
-            # r15 pinned the partition COUNT to at least the core count —
-            # a bare repartition(*pcols) inherits the session's shuffle
-            # partitions, and under an 8-partition input-sized session the
-            # 83-value fixture write ran on 8 writer tasks (measured: 83 month
-            # dirs 1.5-4.6 s -> 0.9-1.4 s with the explicit width). One file
-            # per value holds under ANY width (hash(value) % n still sends a
-            # value to exactly one task).
-            # r16 drops the max() with the session's shuffle width: that
-            # width is sized for SHUFFLES (input-proportional — 200 on the
-            # driver's plain session, ~1.6M at 100 TB), the wrong currency
-            # for writer parallelism. The hash-on-value design serializes
-            # each partition value into exactly one task no matter how large
-            # n is, so any n beyond min(cores, #values) only launches empty
-            # writer tasks — measured on a plain 200-partition session:
-            # the 83-dir fixture write ran 200 tasks (117 empty) at
-            # 1.50 s vs 0.87-1.07 s at 32, x ~25 writes across the c6
-            # family. Partition columns are low-cardinality by design
-            # (guide's partitioning rule), so defaultParallelism — the
-            # cluster's total core count, scale-adaptive by itself — is the
-            # right width at any data size; per-task data volume is bounded
-            # by the per-value volume either way (a giant value needs
-            # maxRecordsPerFile splitting, not more shuffle partitions).
-            # AQE-coalesced keyed repartition was measured as the
-            # alternative and rejected: minPartitionSize merges the tiny
-            # fixture write down to ONE task (1.5-2.6 s, 83 sequential
-            # file opens).
+            # hash-repartition on the partition columns: each value lands in
+            # exactly ONE task, so the write emits one file per value whatever
+            # the upstream parallelism (at cluster scale this stops a W-task
+            # upstream spraying W x values small files; ~0.3 s of shuffle per
+            # sf0.01 write). Pre-clustered callers (sort-order tables) pass
+            # shuffle=False; a giant value needs maxRecordsPerFile, not more
+            # partitions. The width is the core count (defaultParallelism),
+            # never the session's input-sized shuffle width: any n beyond
+            # min(cores, #values) only adds empty writer tasks (plain
+            # 200-partition session: 117 of 200 empty, the 83-dir fixture
+            # write 1.50 s vs 0.87-1.07 s at 32), and an 8-partition session
+            # starved the same write (1.5-4.6 s vs 0.9-1.4 s). AQE-coalesced
+            # keyed repartition merged it into ONE task (1.5-2.6 s): rejected.
             df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, *pcols)
         writer = df.write.mode("overwrite")
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(data_dir)
-        return data_dir
+        return self._manifest_for_dir(name, data_dir)
 
     def _transform_prune(
         self, meta: dict, snap: dict, files: list[dict], where: str
@@ -781,11 +767,12 @@ class Warehouse:
         if meta is not None:
             self._check_spec_compat(meta, spec)
         parent = meta["current_snapshot_id"] if meta else None
-        tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
         # a pre-clustered frame (sort-order tables) must keep its range
         # layout — the hash repartition in _write_data would destroy it
-        data_dir = self._write_data(name, df, tag, partition_by, shuffle=not cluster_by)
-        files = self._manifest_for_dir(name, data_dir)
+        files = self._write_data(
+            name, df, meta, parent, partition_by, shuffle=not cluster_by,
+            conform=False,
+        )
         if meta is not None:
             meta["partition_by"] = partition_by
             meta["field_map"] = {}  # replace-wins: new physical layout
@@ -841,9 +828,7 @@ class Warehouse:
         ):
             df, _ = self._apply_transform(df, spec)
         parent = meta["current_snapshot_id"] if _parent is None else _parent
-        tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
-        data_dir = self._write_data(name, df, tag, meta.get("partition_by"))
-        files = self._manifest_for_dir(name, data_dir)
+        files = self._write_data(name, df, meta, parent, meta.get("partition_by"))
         if _delta_out is not None:
             # hand the caller this append's OWN manifest delta: branch
             # re-chains need it, and deriving it later by diffing against
@@ -975,7 +960,8 @@ class Warehouse:
         """Copy-on-write commit rewriting only the TOUCHED partitions:
         untouched partitions' file entries carry into the new manifest
         byte-identical (the Iceberg row-level-op shape shared by MERGE /
-        DELETE / UPDATE).
+        DELETE / UPDATE). On an unpartitioned table ``new_rows`` is the
+        whole table and nothing carries.
 
         On a MULTI-field spec the touched set is computed on the FIRST
         partition column only — sound (a file whose first-field value is
@@ -983,14 +969,17 @@ class Warehouse:
         matching row's first-field value) but coarser than per-tuple
         tracking; the rewrite itself re-lays data under the FULL spec."""
         meta = self._load_meta(name)
-        part_col = self._pcols(meta["partition_by"])[0]
+        pcols = self._pcols(meta["partition_by"])
         prev = self._snapshot(meta, meta["current_snapshot_id"])
         # the write below partitions by the CURRENT spec's derived columns;
         # rows read from pre-evolution vintages (and, after an evolution
         # ONTO a transform, every row — the declared schema predates the
         # derived column) must have them recomputed from source data
         new_rows = self._with_derived(new_rows, meta)
-        if touched_vals:
+        if not pcols:
+            carry = []  # unpartitioned: the rewrite is the whole table
+        elif touched_vals:
+            part_col = pcols[0]
             # files written under an EARLIER partition spec (evolve_partition_
             # spec) have no entry for the current part col — they can hide
             # matching rows in any partition, so they are conservatively
@@ -1019,11 +1008,9 @@ class Warehouse:
         else:
             carry = list(prev["manifest"])
         parent = meta["current_snapshot_id"]
-        tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
         # write under the FULL spec (all partition columns), not just the
         # touch-tracking first field
-        data_dir = self._write_data(name, new_rows, tag, meta["partition_by"])
-        files = self._manifest_for_dir(name, data_dir)
+        files = self._write_data(name, new_rows, meta, parent, meta["partition_by"])
         return self._commit(
             name, operation, carry + files, meta["schema"],
             meta["partition_by"], parent, meta,
@@ -1043,14 +1030,7 @@ class Warehouse:
         target = self._with_derived(self.read(name), meta)
         cond = F.coalesce(F.expr(predicate), F.lit(False))
         if not part_col:
-            meta2 = self._load_meta(name)
-            parent = meta2["current_snapshot_id"]
-            tag = f"snap-{self._next_snap_id(meta2, parent):05d}-{uuid.uuid4().hex[:8]}"
-            data_dir = self._write_data(name, target.filter(~cond), tag, None)
-            files = self._manifest_for_dir(name, data_dir)
-            return self._commit(
-                name, "delete", files, meta2["schema"], None, parent, meta2
-            )
+            return self._partial_rewrite(name, set(), target.filter(~cond), "delete")
         pv = self._pv_expr(part_col)
         touched = {
             r["p"] for r in target.filter(cond).select(pv.alias("p")).distinct().collect()
@@ -1134,13 +1114,8 @@ class Warehouse:
         # partition is tracked (and written) in the right place
         updated_all = self._with_derived(updated_all, meta)
         if not part_col:
-            meta2 = self._load_meta(name)
-            parent = meta2["current_snapshot_id"]
-            tag = f"snap-{self._next_snap_id(meta2, parent):05d}-{uuid.uuid4().hex[:8]}"
-            data_dir = self._write_data(name, updated_all.drop("_upd"), tag, None)
-            files = self._manifest_for_dir(name, data_dir)
-            return self._commit(
-                name, "update", files, meta2["schema"], None, parent, meta2
+            return self._partial_rewrite(
+                name, set(), updated_all.drop("_upd"), "update"
             )
         pv = self._pv_expr(part_col)
         old_parts = marked.filter("_upd").select(pv.alias("p"))
@@ -1265,17 +1240,7 @@ class Warehouse:
         target = self.resolve_branch(name, branch)
         meta = self._load_meta(name)
         cur = meta["current_snapshot_id"]
-        by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
-        # expired intermediates keep only a parent pointer (expire_snapshots
-        # lineage map) — the walk crosses them instead of falling off to None
-        expired_parents = meta.get("expired_parents", {})
-        node: Optional[int] = target
-        while node is not None and node != cur:
-            if node in by_id:
-                node = by_id[node].get("parent_id")
-            else:
-                node = expired_parents.get(str(node))
-        if node != cur:
+        if cur not in self._lineage(meta, target):
             raise ValueError(
                 f"cannot fast-forward to branch {branch!r} (head {target}): "
                 f"current snapshot {cur} is not an ancestor — rebase the branch"
@@ -1286,6 +1251,21 @@ class Warehouse:
         meta["field_map"] = dict(tsnap.get("field_map", {}))
         self._store_meta(name, meta)
         return tsnap
+
+    @staticmethod
+    def _lineage(meta: dict, head: int):
+        """Snapshot ids from ``head`` back through its parents. Expired
+        intermediates keep only a parent pointer (the expire_snapshots
+        lineage map); the walk crosses them instead of stopping."""
+        by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
+        expired_parents = meta.get("expired_parents", {})
+        node: Optional[int] = head
+        while node is not None:
+            yield node
+            if node in by_id:
+                node = by_id[node].get("parent_id")
+            else:
+                node = expired_parents.get(str(node))
 
     def stage_append(self, name: str, df: DataFrame) -> dict:
         """Write-Audit-Publish step 1 (Iceberg's ``wap.id`` staging): the
@@ -1347,8 +1327,11 @@ class Warehouse:
         """A7 scan with time travel + manifest-stats file skipping.
 
         ``snapshot_id`` / ``as_of_ms`` select the snapshot (VERSION AS OF /
-        TIMESTAMP AS OF). ``where`` is applied both as a manifest-level file
-        pruner (min/max skip, Iceberg-style) and as a normal pushed filter.
+        TIMESTAMP AS OF). ``where`` prunes files on the manifest (partition
+        values, min/max stats, hidden-partition transforms) and is applied
+        as a normal pushed filter. The snapshot's merge-on-read delete
+        entries apply to exactly the files they scope. Whatever the commit
+        history, the read is the single scan :meth:`_scan_files` plans.
         """
         meta = self._load_meta(name)
         if snapshot_id is None:
@@ -1360,34 +1343,10 @@ class Warehouse:
             else:
                 snapshot_id = meta["current_snapshot_id"]
         snap = self._snapshot(meta, snapshot_id)
-        deletes = snap.get("delete_predicates", [])
-        if not deletes:
-            return self._scan_files(name, meta, snap, snap["manifest"], where)
-        # merge-on-read: group data files by WHICH delete entries scope
-        # them (appended-later files carry none), scan each group once and
-        # apply its predicates as read-side anti-filters
-        groups: dict[tuple[int, ...], list[dict]] = {}
-        for f in snap["manifest"]:
-            key = tuple(
-                i for i, d in enumerate(deletes) if f["path"] in set(d["files"])
-            )
-            groups.setdefault(key, []).append(f)
-        parts = []
-        for key, files in groups.items():
-            df = self._scan_files(name, meta, snap, files, where)
-            for i in key:
-                df = df.filter(
-                    ~F.coalesce(F.expr(deletes[i]["predicate"]), F.lit(False))
-                )
-            parts.append(df)
-        if not parts:
-            # delete predicates over an empty manifest (e.g. delete_where_mor
-            # on an empty table): nothing to anti-filter — empty scan
-            return self._scan_files(name, meta, snap, snap["manifest"], where)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._scan_files(
+            name, meta, snap, snap["manifest"], where,
+            snap.get("delete_predicates", []),
+        )
 
     def read_incremental(
         self,
@@ -1403,8 +1362,10 @@ class Warehouse:
         ``from``'s, so the scan touches exactly the new data files and never
         re-reads (or diffs) existing data. This is the CDC-consumption path a
         100 TB pipeline needs: each downstream run processes one snapshot
-        window at scan cost proportional to the NEW data only. Files rewritten
-        by compaction carry existing rows, so (as in Iceberg's
+        window at scan cost proportional to the NEW data only. The window is
+        ``to``'s ancestry back to ``from``: a ``from`` that is not an
+        ancestor of ``to`` (newer, or on another branch) raises. Files
+        rewritten by compaction carry existing rows, so (as in Iceberg's
         incremental-append scan) only append commits qualify; replace/rewrite
         snapshots in the window raise instead of double-counting.
         """
@@ -1413,10 +1374,15 @@ class Warehouse:
             to_snapshot_id = meta["current_snapshot_id"]
         from_snap = self._snapshot(meta, from_snapshot_id)
         to_snap = self._snapshot(meta, to_snapshot_id)
-        ids = [s["snapshot_id"] for s in meta["snapshots"]]
-        lo, hi = ids.index(from_snapshot_id), ids.index(to_snapshot_id)
         by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
-        for s in meta["snapshots"][lo + 1 : hi + 1]:
+        lineage = list(self._lineage(meta, to_snapshot_id))
+        if from_snapshot_id not in lineage:
+            raise ValueError(
+                f"incremental read: snapshot {from_snapshot_id} is not an "
+                f"ancestor of {to_snapshot_id}"
+            )
+        window = lineage[: lineage.index(from_snapshot_id)]
+        for s in (by_id[i] for i in window if i in by_id):
             if s.get("operation", "append") == "append":
                 continue
             # metadata-only commits (schema evolution) carry their parent's
@@ -1435,6 +1401,13 @@ class Warehouse:
         added = [f for f in to_snap["manifest"] if f["path"] not in seen]
         return self._scan_files(name, meta, to_snap, added, where)
 
+    @staticmethod
+    def _writer_id(entry_path: str) -> Optional[int]:
+        """Id of the snapshot that wrote a data file: the middle segment of
+        its table-relative ``data/snap-<id>-<uuid>`` dir (None otherwise)."""
+        m = re.match(r"data/snap-(\d+)(-[^/]*)?/", entry_path)
+        return int(m.group(1)) if m else None
+
     def _scan_files(
         self,
         name: str,
@@ -1442,114 +1415,154 @@ class Warehouse:
         snap: dict,
         files: list[dict],
         where: Optional[str],
+        deletes: list[dict] = (),
+        removed: bool = False,
     ) -> DataFrame:
-        # the SNAPSHOT's schema/field-map, not the table's current one: time
-        # travel across a schema evolution reads with the old schema
+        """The one scan behind every native read of ``files`` as of
+        ``snap``, whose schema is authoritative (time travel reads with the
+        old schema). Columns bind by FIELD ID against the snapshot that
+        wrote each file (:meth:`_writer_id`) — renames follow identity, a
+        column added later or dropped-then-re-added reads NULL over older
+        files — or by name through the field map when that writer expired.
+        Files with the same binding share one parquet scan whose read
+        schema comes from metadata: a table without schema evolution is ONE
+        FileScan. Partition values (from the manifest, never from paths)
+        and one flag per merge-on-read delete entry scoping the file attach
+        as per-file constants (``iceberg_v2.attach_file_constants``); a
+        field stored as data in some files reads whichever the file has.
+        Delete ``i`` applies as ``~(__del_i AND coalesce(pred_i, false))``,
+        its names bound in the schema of the snapshot that recorded it.
+        ``removed=True`` returns the rows the deletes remove instead, with
+        ``__file`` (URI-quoted path) and ``__pos`` (parquet row ordinal).
+        """
+        from pyspark.sql.types import StructField, StructType
+
+        from apache_iceberg_demo_spark.sources.iceberg_v2 import (
+            attach_file_constants,
+        )
+
         declared = self._declared_schema(snap if "schema" in snap else meta)
-        field_map = snap.get("field_map", meta.get("field_map", {}))
         if where is not None:
             files = [f for f in files if not self._can_skip(f, where)]
             files = self._transform_prune(meta, snap, files, where)
         if not files:
-            # empty relation with the DECLARED schema (includes partition
-            # columns, which a bare one-file read would miss) — handles both
             # the everything-pruned and the empty-manifest case (ADVICE r01)
-            if declared is None:
-                raise ValueError(
-                    f"table {name!r}: no matching files and no declared "
-                    "schema in metadata to build an empty relation from"
-                )
             return self.spark.createDataFrame([], schema=declared)
-        # Partition discovery needs basePath directly above the `col=value`
-        # dirs, so group the manifest by snapshot data dir and union the
-        # per-snapshot scans (plan-level concat, no shuffle). Scans may have
-        # heterogeneous columns after schema evolution — union by name with
-        # missing columns null-filled, then reconcile to the declared schema.
-        data_root = os.path.join(self._table_dir(name), "data")
-        by_snap: dict[str, list[str]] = {}
-        for f in files:
-            path = self._abs_path(name, f["path"])
-            rel = os.path.relpath(path, data_root)
-            tag = rel.split(os.sep)[0]
-            by_snap.setdefault(os.path.join(data_root, tag), []).append(path)
-        # field-id resolution (Iceberg semantics): a column binds to a file's
-        # physical data only when the WRITING snapshot's schema carried the
-        # same field id. This is what keeps a drop-then-re-add column NULL
-        # over old files (the re-add got a FRESH id) instead of resurrecting
-        # the dropped values, and makes renames track identity, not names.
-        target_fids = snap.get("fids")
-        by_snap_id = {s["snapshot_id"]: s for s in meta.get("snapshots", [])}
-        df = None
-        for base, paths in sorted(by_snap.items()):
-            part = self.spark.read.option("basePath", base).parquet(*paths)
-            wfids = None
-            if declared is not None and target_fids:
-                tag = os.path.basename(base)
-                try:
-                    wsnap = by_snap_id.get(int(tag.rsplit("-", 1)[1]))
-                except (ValueError, IndexError):
-                    wsnap = None
-                wfids = (wsnap or {}).get("fids")
-            if wfids is not None:
-                inv = {fid: col for col, fid in wfids.items()}
-                proj = []
-                for field in declared.fields:
-                    src = inv.get(target_fids.get(field.name))
-                    if src is not None and src in part.columns:
-                        proj.append(
-                            F.col(src).cast(field.dataType).alias(field.name)
-                        )
-                    else:
-                        proj.append(
-                            F.lit(None).cast(field.dataType).alias(field.name)
-                        )
-                part = part.select(*proj)
-            df = part if df is None else df.unionByName(
-                part, allowMissingColumns=True
-            )
-        if declared is None:
-            # legacy simpleString metadata — best-effort raw scan
-            return df.filter(where) if where is not None else df
-        # 1) logical→physical renames (Iceberg tracks field ids; here the
-        #    snapshot records which physical column each logical name reads).
-        #    Post-rename appends write the logical name, so both spellings
-        #    can coexist across files — coalesce them.
-        for logical, physical in field_map.items():
-            if physical == logical:
+        fm = snap.get("field_map", meta.get("field_map", {}))
+        fids = snap.get("fids") or {}
+        snaps = {s["snapshot_id"]: s for s in meta.get("snapshots", [])}
+        # (column, type, field id, physical names when binding by name): the
+        # declared columns, then any field a delete predicate names that no
+        # declared column carries
+        cols = [
+            (x.name, x.dataType, fids.get(x.name),
+             tuple(dict.fromkeys([x.name, fm.get(x.name, x.name)])))
+            for x in declared.fields
+        ]
+        by_fid = {fid: c for c, _, fid, _ in cols if fid is not None}
+        scoped = []  # (predicate, scoped paths, {predicate name: column})
+        for d in deletes:
+            scope = set(d["files"])
+            if not any(f["path"] in scope for f in files):
                 continue
-            if logical in df.columns and physical in df.columns:
-                df = df.withColumn(
-                    logical, F.coalesce(F.col(logical), F.col(physical))
-                ).drop(physical)
-            elif physical in df.columns:
-                df = df.withColumnRenamed(physical, logical)
-        # 2) columns added after these files were written → NULL
-        for field in declared.fields:
-            if field.name not in df.columns:
-                df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-        # 3) partition-dir type inference must not override the declared
-        #    schema (the table schema is authoritative; a yyyy-MM-dd string
-        #    partition column stays a string — SURVEY.md §1.3)
-        for field in declared.fields:
-            got = dict(df.dtypes).get(field.name)
-            if got is not None and got != field.dataType.simpleString():
-                df = df.withColumn(field.name, F.col(field.name).cast(field.dataType))
-        # 4) declared column set + order (dropped columns disappear here —
-        #    column pruning pushes through the projection, so dropped/unused
-        #    physical columns are never read off disk)
-        df = df.select(*[f.name for f in declared.fields])
-        if where is not None:
-            df = df.filter(where)
-        return df
+            origin = snap  # the oldest ancestor still carrying the entry
+            while d in snaps.get(origin["parent_id"], {}).get("delete_predicates", []):
+                origin = snaps[origin["parent_id"]]
+            names = {}
+            for x in self._declared_schema(origin).fields:
+                fid = (origin.get("fids") or {}).get(x.name)
+                c = by_fid.get(fid) if fid is not None else (
+                    x.name if x.name in declared.fieldNames() else None)
+                if c is None:
+                    c = f"__field_{x.name if fid is None else fid}"
+                    if c not in [b for b, *_ in cols]:
+                        cols.append((c, x.dataType, fid, (x.name,)))
+                names[x.name] = c
+            scoped.append((d["predicate"], scope, names))
+        types = {c: t for c, t, *_ in cols}
+
+        def binding(f: dict) -> tuple:
+            wfids = (snaps.get(self._writer_id(f["path"])) or {}).get("fids")
+            inv = {fid: c for c, fid in (wfids or {}).items()}
+            return tuple(
+                (c, (inv[fid],) if fid in inv else ())
+                if wfids is not None and fid is not None else (c, by_name)
+                for c, _, fid, by_name in cols
+            )
+
+        binds = [binding(f) for f in files]
+        consts: dict[str, dict[int, str]] = {}  # column -> {file: value}
+        for i, (f, b) in enumerate(zip(files, binds)):
+            for c, srcs in b:
+                src = next((x for x in srcs if x in f["partition"]), None)
+                if src is not None:
+                    v = f["partition"][src]
+                    consts.setdefault(c, {})[i] = None if v is None else str(v)
+        attach = bool(consts or scoped or removed)
+        coords = ["__file", "__pos"] if removed else []
+        paths = [os.path.abspath(self._abs_path(name, f["path"])) for f in files]
+        groups: dict[tuple, list[str]] = {}
+        for path, b in zip(paths, binds):
+            groups.setdefault(b, []).append(path)
+        df = None
+        for key, group in groups.items():
+            read = {x: types[c] for c, srcs in reversed(key) for x in srcs}
+            scan = self.spark.read.schema(
+                StructType([StructField(x, t) for x, t in read.items()])
+            ).parquet(*group)
+            part = scan.select(
+                *[
+                    (F.coalesce(*map(F.col, srcs)) if srcs
+                     else F.lit(None).cast(types[c])).alias(c)
+                    for c, srcs in key
+                ],
+                *([F.col("_metadata.file_path").alias("__file")] if attach else []),
+                *([F.col("_metadata.row_index").alias("__pos")] if removed else []),
+            )
+            df = part if df is None else df.unionByName(part)
+        if not attach:
+            return df.filter(where) if where is not None else df
+        pcs = list(consts)
+        dels = [f"__del_{j}" for j in range(len(scoped))]
+        df = attach_file_constants(
+            self.spark,
+            df,
+            [
+                (path, *[consts[c].get(i) for c in pcs],
+                 *[f["path"] in fs for _, fs, _ in scoped])
+                for i, (path, f) in enumerate(zip(paths, files))
+            ],
+            ", ".join([f"`__pc_{j}` string" for j in range(len(pcs))]
+                      + [f"`{d}` boolean" for d in dels]),
+            path_col="__file",
+        )
+        # every column under a hidden name, so each delete predicate can
+        # see its own names beside them; a partition constant wins over
+        # the (absent, NULL) data column of the same field
+        hidden = {c: f"__v{j}" for j, c in enumerate(types)}
+        df = df.select(
+            *[
+                (F.coalesce(F.col(f"__pc_{pcs.index(c)}").cast(t), F.col(c))
+                 if c in consts else F.col(c)).alias(hidden[c])
+                for c, t in types.items()
+            ],
+            *dels,
+            *coords,
+        )
+        for d, (pred, _, names) in zip(dels, scoped):
+            df = df.select("*", *[F.col(hidden[c]).alias(n) for n, c in names.items()])
+            hit = F.col(d) & F.coalesce(F.expr(pred), F.lit(False))
+            df = df.filter(hit if removed else ~hit).drop(*names)
+        df = df.select(
+            *[F.col(hidden[x.name]).alias(x.name) for x in declared.fields], *coords
+        )
+        return df.filter(where) if where is not None else df
 
     @staticmethod
     def _declared_schema(meta_or_snap: dict):
         from pyspark.sql.types import StructType
 
-        try:
-            return StructType.fromJson(json.loads(meta_or_snap["schema"]))
-        except (ValueError, KeyError, TypeError):
-            return None  # legacy simpleString metadata — best effort
+        return StructType.fromJson(json.loads(meta_or_snap["schema"]))
 
     @staticmethod
     def _can_skip(file_entry: dict, where: str) -> bool:
@@ -1558,8 +1571,6 @@ class Warehouse:
         manifest-filter fast path). Anything not recognized → never skip
         (correctness first); in a conjunction, ONE provably-disjoint
         conjunct suffices to skip the file."""
-        import re
-
         from apache_iceberg_demo_spark.sources.transforms import (
             split_and_conjuncts,
         )
@@ -1817,10 +1828,6 @@ class Warehouse:
 
         meta = self._load_meta(name)
         declared = self._declared_schema(meta)
-        if declared is None:
-            raise ValueError(
-                f"table {name!r}: schema evolution needs JSON schema metadata"
-            )
         field_map = dict(meta.get("field_map", {}))
         fids = dict(meta.get("fids", {}))
         new_schema = mutate(declared, field_map, fids)

@@ -1415,3 +1415,124 @@ def test_merge_after_spec_evolution_no_duplication(spark, tmp_path):
     a2 = wh.read("t")
     assert a2.filter(F.col("o_orderkey") == probe).count() == 1
     assert a2.count() == n1
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_drop_then_readd_reads_null_over_old_files(spark, wh):
+    """A dropped-then-re-added column binds a FRESH field id: files written
+    before the drop hold the old column's values under the same name, and
+    every read path must show NULL for them, never the dropped values."""
+    wh.create_or_replace(
+        "t", spark.createDataFrame([(1, 10), (2, 20)], "id bigint, x int")
+    )                                                          # snap 1
+    wh.append("t", spark.createDataFrame([(4, 40)], "id bigint, x int"))  # 2
+    wh.drop_column("t", "x")                                   # snap 3
+    wh.add_column("t", "x", "int")                             # snap 4
+    wh.append("t", spark.createDataFrame([(3, 99)], "id bigint, x int"))  # 5
+    want = [(1, None), (2, None), (3, 99), (4, None)]
+    assert _rows(wh.read("t")) == want
+    assert _rows(wh.read("t", snapshot_id=5)) == want
+    assert _rows(wh.read("t", snapshot_id=4)) == [(1, None), (2, None), (4, None)]
+    # the snapshot before the drop still reads its own values
+    assert _rows(wh.read("t", snapshot_id=2)) == [(1, 10), (2, 20), (4, 40)]
+    # the incremental window (1 -> 5] holds one pre-drop file
+    assert _rows(wh.read_incremental("t", from_snapshot_id=1)) == [(3, 99), (4, None)]
+
+
+def test_rename_then_readd_reads_null_over_old_files(spark, wh):
+    """Renaming x -> y moves x's field id to y; a later add of x is a new
+    column: y keeps the old values, x is NULL over every earlier file."""
+    wh.create_or_replace(
+        "t", spark.createDataFrame([(1, 10), (2, 20)], "id bigint, x int")
+    )                                                          # snap 1
+    wh.append("t", spark.createDataFrame([(4, 40)], "id bigint, x int"))  # 2
+    wh.rename_column("t", "x", "y")                            # snap 3
+    wh.add_column("t", "x", "int")                             # snap 4
+    wh.append(
+        "t", spark.createDataFrame([(3, 30, 99)], "id bigint, y int, x int")
+    )                                                          # snap 5
+    want = [(1, 10, None), (2, 20, None), (3, 30, 99), (4, 40, None)]
+    assert wh.read("t").columns == ["id", "y", "x"]
+    assert _rows(wh.read("t")) == want
+    assert _rows(wh.read("t", snapshot_id=5)) == want
+    assert _rows(wh.read_incremental("t", from_snapshot_id=1)) == [
+        (3, 30, 99), (4, 40, None)
+    ]
+
+
+def _file_scans(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("FileScan parquet")
+
+
+def test_native_read_is_one_file_scan(spark, wh):
+    """A table without schema evolution reads through ONE parquet FileScan,
+    however many commits wrote it and however many merge-on-read delete
+    entries scope its files: partition values and delete scopes attach as
+    per-file constants, not as one scan per commit directory."""
+    def batch(lo: int, n: int = 8):
+        return spark.createDataFrame(
+            [(i, i % 4, i * 10) for i in range(lo, lo + n)],
+            "id bigint, p int, v bigint",
+        )
+
+    wh.create_or_replace("t", batch(0), partition_by="p")
+    model = {i: i * 10 for i in range(8)}
+    for c in range(1, 12):
+        if c == 5:
+            wh.merge_into(
+                "t", spark.createDataFrame([(1, 1, -1), (100, 0, 7)],
+                                           "id bigint, p int, v bigint"),
+                on=["id"],
+            )
+            model.update({1: -1, 100: 7})
+        elif c in (7, 10):
+            wh.delete_where_mor("t", f"id % 5 = {c % 5}")
+            model = {k: v for k, v in model.items() if k % 5 != c % 5}
+        else:
+            wh.append("t", batch(c * 8))
+            model.update({i: i * 10 for i in range(c * 8, c * 8 + 8)})
+    assert len(wh._load_meta("t")["snapshots"]) == 12
+    full, one = wh.read("t"), wh.read("t", where="p = 1")
+    assert _file_scans(full) == 1 and _file_scans(one) == 1
+    assert dict((r.id, r.v) for r in full.collect()) == model
+    assert sorted(r.id for r in one.collect()) == sorted(
+        k for k in model if k % 4 == 1
+    )
+
+
+def test_incremental_read_refuses_from_after_rewrite(spark, wh):
+    """``from`` newer than ``to`` with a rewrite between them: the manifest
+    diff would return every pre-rewrite row as "added". ``from`` is not an
+    ancestor of ``to``, so the read raises."""
+    li = _lineitem(spark).drop("ship_day")
+    wh.create_or_replace("t", li.filter(F.col("l_linenumber") <= 3))  # 1
+    wh.append("t", li.filter(F.col("l_linenumber") == 4))             # 2
+    wh.rewrite_data_files("t", target_file_mb=1)                      # 3
+    wh.append("t", li.filter(F.col("l_linenumber") == 5))             # 4
+    with pytest.raises(ValueError, match="not an ancestor"):
+        wh.read_incremental("t", from_snapshot_id=3, to_snapshot_id=2)
+    assert wh.read_incremental("t", 3, to_snapshot_id=4).count() == li.filter(
+        F.col("l_linenumber") == 5
+    ).count()
+
+
+def test_incremental_read_refuses_branch_snapshot(spark, wh):
+    """A snapshot on another branch is not in ``to``'s ancestry, whichever
+    side of the window it is on."""
+    li = _lineitem(spark).select("l_orderkey", "l_linenumber")
+    wh.create_or_replace("t", li.filter(F.col("l_linenumber") <= 2))  # 1
+    wh.create_branch("t", "dev")
+    wh.append("t", li.filter(F.col("l_linenumber") == 3))             # 2
+    dev = wh.append_to_branch(
+        "t", "dev", li.filter(F.col("l_linenumber") == 4)
+    )["snapshot_id"]                                                  # 3
+    for a, b in ((dev, 2), (2, dev)):
+        with pytest.raises(ValueError, match="not an ancestor"):
+            wh.read_incremental("t", from_snapshot_id=a, to_snapshot_id=b)
+    assert wh.read_incremental("t", 1, to_snapshot_id=dev).count() == li.filter(
+        F.col("l_linenumber") == 4
+    ).count()
