@@ -499,7 +499,7 @@ class Warehouse:
         """Write the next commit's data files and return their manifest
         entries. The directory is ``data/snap-<id>-<uuid8>``: ``<id>`` is
         the snapshot id the commit will receive, which is how a read finds
-        the writing schema of a file (:meth:`_writer_id`); the uuid keeps
+        the writing schema of a file (:meth:`_scan_files`); the uuid keeps
         concurrent writers apart. Unless the frame defines the schema (a
         replace: ``conform=False``), columns are cast to the table's
         declared types first: the read takes its parquet read schema from
@@ -985,8 +985,10 @@ class Warehouse:
             # matching rows in any partition, so they are conservatively
             # rewritten under the current spec (lazy migration, the
             # copy-on-write answer to Iceberg's mixed-spec manifests). Their
-            # untouched-partition rows re-enter via the scan below; their
-            # touched-partition rows are already in the caller's new_rows.
+            # untouched-partition rows re-enter via the scan below, minus
+            # the rows merge-on-read deletes removed (the rewritten files
+            # leave those entries' scope); their touched-partition rows are
+            # already in the caller's new_rows.
             legacy = [f for f in prev["manifest"] if part_col not in f["partition"]]
             carry = [
                 f
@@ -999,9 +1001,12 @@ class Warehouse:
                 # re-derive BEFORE the partition filter: legacy files
                 # don't store a transform's derived column, and a
                 # null-filled pv would make ~isin drop every legacy row
-                keep_legacy = self._with_derived(
-                    self._scan_files(name, meta, prev, legacy, None), meta
-                ).filter(~pv.isin(*touched_vals))
+                scan = self._scan_files(
+                    name, meta, prev, legacy, None, prev.get("delete_predicates", [])
+                )
+                keep_legacy = self._with_derived(scan, meta).filter(
+                    ~pv.isin(*touched_vals)
+                )
                 new_rows = new_rows.unionByName(
                     keep_legacy.select(*new_rows.columns)
                 )
@@ -1401,13 +1406,6 @@ class Warehouse:
         added = [f for f in to_snap["manifest"] if f["path"] not in seen]
         return self._scan_files(name, meta, to_snap, added, where)
 
-    @staticmethod
-    def _writer_id(entry_path: str) -> Optional[int]:
-        """Id of the snapshot that wrote a data file: the middle segment of
-        its table-relative ``data/snap-<id>-<uuid>`` dir (None otherwise)."""
-        m = re.match(r"data/snap-(\d+)(-[^/]*)?/", entry_path)
-        return int(m.group(1)) if m else None
-
     def _scan_files(
         self,
         name: str,
@@ -1421,9 +1419,10 @@ class Warehouse:
         """The one scan behind every native read of ``files`` as of
         ``snap``, whose schema is authoritative (time travel reads with the
         old schema). Columns bind by FIELD ID against the snapshot that
-        wrote each file (:meth:`_writer_id`) — renames follow identity, a
-        column added later or dropped-then-re-added reads NULL over older
-        files — or by name through the field map when that writer expired.
+        wrote each file (:meth:`_write_data` names its dir) — renames follow
+        identity, a column added later or dropped-then-re-added reads NULL
+        over older files — or by name through the field map when that
+        writer expired.
         Files with the same binding share one parquet scan whose read
         schema comes from metadata: a table without schema evolution is ONE
         FileScan. Partition values (from the manifest, never from paths)
@@ -1482,7 +1481,10 @@ class Warehouse:
         types = {c: t for c, t, *_ in cols}
 
         def binding(f: dict) -> tuple:
-            wfids = (snaps.get(self._writer_id(f["path"])) or {}).get("fids")
+            # the writer is the middle segment of the data/snap-<id>-<uuid> dir
+            m = re.match(r"data/snap-(\d+)(-[^/]*)?/", f["path"])
+            writer = snaps.get(int(m.group(1))) if m else None
+            wfids = (writer or {}).get("fids")
             inv = {fid: c for c, fid in (wfids or {}).items()}
             return tuple(
                 (c, (inv[fid],) if fid in inv else ())

@@ -32,10 +32,20 @@ ROWS = 1000
 
 
 def load_warehouse(repo: str, tag: str):
+    """The checkout's ``Warehouse`` class, loaded under its own module name.
+    Its registered queries are not needed, and registering them twice
+    would raise, so ``register`` is a no-op while the module loads."""
+    from apache_iceberg_demo_spark import registry
+
     path = os.path.join(repo, "apache_iceberg_demo_spark", "sources", "warehouse.py")
     spec = importlib.util.spec_from_file_location(f"warehouse_{tag}", path)
     mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    register = registry.register
+    registry.register = lambda *a, **k: (lambda fn: fn)
+    try:
+        spec.loader.exec_module(mod)
+    finally:
+        registry.register = register
     return mod.Warehouse
 
 

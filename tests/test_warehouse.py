@@ -1536,3 +1536,17 @@ def test_incremental_read_refuses_branch_snapshot(spark, wh):
     assert wh.read_incremental("t", 1, to_snapshot_id=dev).count() == li.filter(
         F.col("l_linenumber") == 4
     ).count()
+
+
+def test_row_level_op_keeps_mor_deletes_on_earlier_spec_files(spark, wh):
+    """A copy-on-write DELETE on an evolved table rewrites the files written
+    under the earlier spec; their rows re-enter through a scan that must
+    apply the snapshot's merge-on-read deletes, or rows deleted before the
+    rewrite come back."""
+    wh.create_or_replace(
+        "t", spark.createDataFrame([(1, "x"), (2, "x"), (3, "y")], "k int, cat string")
+    )
+    wh.evolve_partition_spec("t", "cat")
+    wh.delete_where_mor("t", "k = 1")
+    wh.delete_where("t", "cat = 'y'")
+    assert _rows(wh.read("t")) == [(2, "x")]
