@@ -239,8 +239,8 @@ def test_warehouse_matches_row_model(spark):
     run_state_machine_as_test(
         WarehouseModel,
         settings=settings(
-            max_examples=8,
-            stateful_step_count=8,
+            max_examples=6,
+            stateful_step_count=6,
             deadline=None,
             derandomize=True,
             database=None,
