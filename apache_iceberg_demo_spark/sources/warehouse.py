@@ -69,6 +69,11 @@ def _hive_unescape(s: str) -> str:
     return "".join(out)
 
 
+def _quote(name: str) -> str:
+    """A column name as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _now_ms() -> int:
     return int(time.time() * 1000)
 
@@ -1438,6 +1443,7 @@ class Warehouse:
 
         from apache_iceberg_demo_spark.sources.iceberg_v2 import (
             attach_file_constants,
+            scan_parquet_files,
         )
 
         declared = self._declared_schema(snap if "schema" in snap else meta)
@@ -1506,59 +1512,71 @@ class Warehouse:
         groups: dict[tuple, list[str]] = {}
         for path, b in zip(paths, binds):
             groups.setdefault(b, []).append(path)
+        # Every column goes under a hidden name until the last projection,
+        # so each delete predicate can see its own names beside them. The
+        # projections are SQL strings: each Column-API call is several Py4J
+        # round trips, and a 16-column read with one delete made ~1,600 of
+        # them before its first job.
+        hidden = {c: f"__v{j}" for j, c in enumerate(types)}
         df = None
         for key, group in groups.items():
             read = {x: types[c] for c, srcs in reversed(key) for x in srcs}
-            scan = self.spark.read.schema(
-                StructType([StructField(x, t) for x, t in read.items()])
-            ).parquet(*group)
-            part = scan.select(
+            part = scan_parquet_files(
+                self.spark, group,
+                StructType([StructField(x, t) for x, t in read.items()]),
+            ).selectExpr(
                 *[
-                    (F.coalesce(*map(F.col, srcs)) if srcs
-                     else F.lit(None).cast(types[c])).alias(c)
+                    (f"coalesce({', '.join(map(_quote, srcs))})" if srcs
+                     else f"CAST(NULL AS {self._sql_type(types[c])})")
+                    + f" AS {hidden[c]}"
                     for c, srcs in key
                 ],
-                *([F.col("_metadata.file_path").alias("__file")] if attach else []),
-                *([F.col("_metadata.row_index").alias("__pos")] if removed else []),
+                *(["_metadata.file_path AS __file"] if attach else []),
+                *(["_metadata.row_index AS __pos"] if removed else []),
             )
             df = part if df is None else df.unionByName(part)
-        if not attach:
-            return df.filter(where) if where is not None else df
-        pcs = list(consts)
-        dels = [f"__del_{j}" for j in range(len(scoped))]
-        df = attach_file_constants(
-            self.spark,
-            df,
-            [
-                (path, *[consts[c].get(i) for c in pcs],
-                 *[f["path"] in fs for _, fs, _ in scoped])
-                for i, (path, f) in enumerate(zip(paths, files))
-            ],
-            ", ".join([f"`__pc_{j}` string" for j in range(len(pcs))]
-                      + [f"`{d}` boolean" for d in dels]),
-            path_col="__file",
-        )
-        # every column under a hidden name, so each delete predicate can
-        # see its own names beside them; a partition constant wins over
-        # the (absent, NULL) data column of the same field
-        hidden = {c: f"__v{j}" for j, c in enumerate(types)}
-        df = df.select(
-            *[
-                (F.coalesce(F.col(f"__pc_{pcs.index(c)}").cast(t), F.col(c))
-                 if c in consts else F.col(c)).alias(hidden[c])
-                for c, t in types.items()
-            ],
-            *dels,
+        if attach:
+            pcs = list(consts)
+            dels = [f"__del_{j}" for j in range(len(scoped))]
+            df = attach_file_constants(
+                self.spark,
+                df,
+                [
+                    (path, *[consts[c].get(i) for c in pcs],
+                     *[f["path"] in fs for _, fs, _ in scoped])
+                    for i, (path, f) in enumerate(zip(paths, files))
+                ],
+                ", ".join([f"`__pc_{j}` string" for j in range(len(pcs))]
+                          + [f"`{d}` boolean" for d in dels]),
+                path_col="__file",
+            )
+            # a partition constant wins over the (absent, NULL) data column
+            # of the same field
+            df = df.selectExpr(
+                *[
+                    f"coalesce(CAST(__pc_{pcs.index(c)} AS {self._sql_type(t)}),"
+                    f" {hidden[c]}) AS {hidden[c]}" if c in consts else hidden[c]
+                    for c, t in types.items()
+                ],
+                *dels,
+                *coords,
+            )
+            for d, (pred, _, names) in zip(dels, scoped):
+                df = df.selectExpr(
+                    "*", *[f"{hidden[c]} AS {_quote(n)}" for n, c in names.items()]
+                )
+                hit = F.col(d) & F.coalesce(F.expr(pred), F.lit(False))
+                df = df.filter(hit if removed else ~hit).drop(*names)
+        df = df.selectExpr(
+            *[f"{hidden[x.name]} AS {_quote(x.name)}" for x in declared.fields],
             *coords,
         )
-        for d, (pred, _, names) in zip(dels, scoped):
-            df = df.select("*", *[F.col(hidden[c]).alias(n) for n, c in names.items()])
-            hit = F.col(d) & F.coalesce(F.expr(pred), F.lit(False))
-            df = df.filter(hit if removed else ~hit).drop(*names)
-        df = df.select(
-            *[F.col(hidden[x.name]).alias(x.name) for x in declared.fields], *coords
-        )
         return df.filter(where) if where is not None else df
+
+    def _sql_type(self, t) -> str:
+        """``t`` as Spark SQL spells it (nested field names quoted)."""
+        jtypes = self.spark._jvm.org.apache.spark.sql.types
+        return jtypes.DataType.fromJson(t.json()).sql()
 
     @staticmethod
     def _declared_schema(meta_or_snap: dict):
