@@ -871,11 +871,8 @@ def scan_parquet_files(
     spark: SparkSession, paths: list, schema=None, **options
 ) -> DataFrame:
     """One parquet scan over the data files a manifest names. Spark lists
-    more than 32 explicit paths with a job of one task per path (up to
-    10000): a 142-file table paid 1.3-1.6 s of listing per read on a
-    4-core host, 0.26 s with the job capped at the core count. The cap
-    is the cluster's core count, so a large table still lists in
-    parallel."""
+    more than 32 explicit paths with one task per path; the listing job is
+    capped at the core count (142 files, 4 cores: 1.3-1.6 s -> 0.26 s)."""
     from apache_iceberg_demo_spark.tuning import scoped_conf
 
     reader = spark.read.options(**options)
@@ -892,38 +889,27 @@ def attach_file_constants(
     spark: SparkSession, df: DataFrame, rows: list, ddl: str, path_col=None
 ) -> DataFrame:
     """Attach per-file constants (partition values, sequence numbers,
-    delete scopes) to scanned rows — the one join both readers use.
+    delete scopes) to scanned rows: the one join both readers use.
     ``rows`` holds ``(plain local path, *constants)`` per data file, typed
-    by ``ddl``. The mapping is one row per FILE, so it is broadcast-joined
-    against each row's ``_metadata.file_path`` (Hadoop-style ``file:/p``,
-    java.net.URI-quoted — the manifest side is quoted to match) and the
-    scan stays one vectorized FileScan. ``df`` must be the scan frame
-    itself unless ``path_col`` names that path captured on the scan
-    frame(s). The ``__file`` key column stays; callers drop it.
-
-    The mapping goes through an Arrow table, which Spark keeps as a local
-    relation: a Python list would be parallelized into one task per
-    default-parallelism slice and unpickled on every action that
-    broadcasts it."""
+    by ``ddl``. The one-row-per-file mapping is broadcast-joined on the
+    row's ``_metadata.file_path`` (or ``path_col``, that path captured on
+    the scan frame) with Hadoop's ``file:/`` prefix stripped and the
+    manifest side URI-quoted to match, so the scan stays one FileScan.
+    The ``__file`` key column stays. The mapping is an Arrow table, which
+    Spark keeps as a local relation; a Python list becomes an RDD that
+    every broadcasting action re-runs."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import _parse_datatype_string
 
     schema = _parse_datatype_string("`__file` string, " + ddl)
-    cols = [[_uri_path_quote(r[0]) for r in rows]] + [
-        [r[j] for r in rows] for j in range(1, len(schema.fields))
-    ]
-    mapping = spark.createDataFrame(
-        pa.table(
-            [
-                pa.array(c, type=to_arrow_type(f.dataType))
-                for c, f in zip(cols, schema.fields)
-            ],
-            names=schema.names,
-        ),
-        schema=schema,
-    )
-    raw = F.col("_metadata.file_path" if path_col is None else path_col)
+    rows = [(_uri_path_quote(r[0]), *r[1:]) for r in rows]
+    mapping = spark.createDataFrame(pa.table(
+        [pa.array([r[j] for r in rows], to_arrow_type(f.dataType))
+         for j, f in enumerate(schema.fields)],
+        names=schema.names,
+    ), schema=schema)
+    raw = F.col(path_col or "_metadata.file_path")
     return df.withColumn(
         "__file", F.regexp_replace(raw, "^file:/+", "/")
     ).join(F.broadcast(mapping), "__file")
@@ -2043,14 +2029,9 @@ def read_iceberg_v2(
             f"`{f['name']}` {spark_type(f['type'])}" for f in schema["fields"]
         )
         return spark.createDataFrame([], schema=ddl)
-    # ONE scan over every data file; partition values attach via a
-    # broadcast join of the manifest's (file -> partition tuple) mapping
-    # against the _metadata.file_path constant — one row per FILE, so the
-    # broadcast is manifest-sized (~100k rows at 100 TB), never data-sized.
-    # This is how a DataSourceV2 reader populates identity-partition
-    # constants per split; expressed here with built-in operators so the
-    # scan stays a single vectorized FileScan (no per-partition-value
-    # union: the demo table alone has ~84 month values).
+    # ONE scan over every data file; partition values attach per file
+    # (attach_file_constants), as a DataSourceV2 reader populates
+    # identity-partition constants per split.
     # mergeSchema: files written before a rename/add carry old spellings or
     # miss columns entirely; the merged scan schema surfaces every physical
     # name so the name-mapping projection below can coalesce them
@@ -2069,12 +2050,8 @@ def read_iceberg_v2(
     # Shadow-rename the scan-side column; the typed projection below
     # coalesces (manifest constant, shadowed data value) so old files keep
     # their stored values and new files get the manifest constant.
-    data_shadow: dict[str, str] = {}
-    for n in sorted(pnames):
-        if n in out.columns:
-            shadow = f"__data_{n}"
-            out = out.withColumnRenamed(n, shadow)
-            data_shadow[n] = shadow
+    data_shadow = {n: f"__data_{n}" for n in sorted(pnames) if n in out.columns}
+    out = out.withColumnsRenamed(data_shadow)
     if part_fields or need_seq:
         # the per-file constants from the manifests: partition values, and
         # the data sequence number the delete sequence rules scope against.
@@ -2082,11 +2059,9 @@ def read_iceberg_v2(
         # natively and every other type (date, timestamp, decimal, float,
         # boolean) as its hive STRING — declare those columns string here;
         # the typed projection casts them to the declared Iceberg type.
-        def _map_type(t: str) -> str:
-            return spark_type(t) if t in _PARTITION_AVRO else "string"
-
         map_ddl = "`__seq` bigint" + "".join(
-            f", `{n}` {_map_type(t)}" for n, t in part_fields
+            f", `{n}` {spark_type(t) if t in _PARTITION_AVRO else 'string'}"
+            for n, t in part_fields
         )
         rows = [
             (_from_uri(u), file_seqs[u], *[vals.get(n) for n, _ in part_fields])
@@ -2111,30 +2086,15 @@ def read_iceberg_v2(
     for f in schema["fields"]:
         st = spark_type(f["type"])
         if f["name"] in pnames:
-            srcs = [F.col(f["name"]).cast(st)]
-            if f["name"] in data_shadow:
-                # pre-spec-evolution files stored the column as data; the
-                # manifest constant is NULL for them — fall back
-                srcs.append(F.col(data_shadow[f["name"]]).cast(st))
-            proj.append(
-                (srcs[0] if len(srcs) == 1 else F.coalesce(*srcs)).alias(
-                    f["name"]
-                )
-            )
-            continue
-        candidates = [
-            n for n in nm.get(f["id"], [f["name"]]) if n in out.columns
-        ]
-        if not candidates:
-            proj.append(F.lit(None).cast(st).alias(f["name"]))
-        elif len(candidates) == 1:
-            proj.append(F.col(candidates[0]).cast(st).alias(f["name"]))
+            # pre-spec-evolution files stored the column as data; the
+            # manifest constant is NULL for them — fall back
+            srcs = [n for n in (f["name"], data_shadow.get(f["name"])) if n]
         else:
-            proj.append(
-                F.coalesce(*[F.col(n).cast(st) for n in candidates]).alias(
-                    f["name"]
-                )
-            )
+            srcs = [n for n in nm.get(f["id"], [f["name"]]) if n in out.columns]
+        proj.append((
+            F.coalesce(*[F.col(n).cast(st) for n in srcs]) if srcs
+            else F.lit(None).cast(st)
+        ).alias(f["name"]))
     extras = (["__seq"] if need_seq else []) + (
         ["__file", "__pos"] if pos_deletes else []
     )

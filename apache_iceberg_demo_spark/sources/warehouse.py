@@ -501,14 +501,11 @@ class Warehouse:
         shuffle: bool = True,
         conform: bool = True,
     ) -> list[dict]:
-        """Write the next commit's data files and return their manifest
-        entries. The directory is ``data/snap-<id>-<uuid8>``: ``<id>`` is
-        the snapshot id the commit will receive, which is how a read finds
-        the writing schema of a file (:meth:`_scan_files`); the uuid keeps
-        concurrent writers apart. Unless the frame defines the schema (a
-        replace: ``conform=False``), columns are cast to the table's
-        declared types first: the read takes its parquet read schema from
-        metadata, so a file must store the types metadata declares."""
+        """Write the next commit's data files under ``data/snap-<id>-<uuid8>``
+        (``<id>``: the snapshot id the commit will receive, which reads use
+        to find a file's writing schema) and return their manifest entries.
+        Unless the frame defines the schema (a replace: ``conform=False``),
+        columns are cast to the declared types the read schema assumes."""
         tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self._table_dir(name), "data", tag)
         if conform:
@@ -818,7 +815,9 @@ class Warehouse:
         :class:`CommitConflictError` the already-written files are
         re-committed against the freshly-loaded head instead of failing the
         writer. The uuid-suffixed data dir guarantees concurrent appends
-        never share a directory, so retries move metadata only.
+        never share a directory, so retries move metadata only. Reads bind
+        the files through the field ids of the snapshot their dir names, so
+        when a concurrent commit changed those ids the conflict is raised.
 
         ``_parent``/``_advance_current`` are the internal no-isolation-leak
         hooks for branch appends and WAP staging: the commit chains off an
@@ -833,6 +832,7 @@ class Warehouse:
         ):
             df, _ = self._apply_transform(df, spec)
         parent = meta["current_snapshot_id"] if _parent is None else _parent
+        writer, wfids = self._next_snap_id(meta, parent), meta.get("fids")
         files = self._write_data(name, df, meta, parent, meta.get("partition_by"))
         if _delta_out is not None:
             # hand the caller this append's OWN manifest delta: branch
@@ -859,6 +859,10 @@ class Warehouse:
                 if attempt == retries - 1:
                     raise
                 meta = self._load_meta(name)
+                owner = next((s for s in meta["snapshots"]
+                              if s["snapshot_id"] == writer), meta)
+                if meta.get("fids") != wfids or owner.get("fids") != wfids:
+                    raise
                 if _parent is None:
                     parent = meta["current_snapshot_id"]
 
@@ -866,23 +870,22 @@ class Warehouse:
         """Iceberg ``rollback_to_snapshot``: a NEW commit whose manifest (and
         schema) is the target snapshot's — the bad commits stay in history
         (auditable, still time-travelable) but readers see the restored
-        state. Metadata-only: no data files move or rewrite."""
+        state. Metadata-only: no data files move or rewrite. The target's
+        field ids come back with its schema (a column renamed since binds
+        its old files again); ``next_field_id`` stays monotonic."""
         meta = self._load_meta(name)
         target = self._snapshot(meta, snapshot_id)
-        parent = meta["current_snapshot_id"]
-        snap = self._commit(
+        meta["field_map"] = dict(target.get("field_map", {}))
+        meta["fids"] = dict(target.get("fids", {}))
+        return self._commit(
             name,
             "rollback",
             list(target["manifest"]),
             target["schema"],
             meta.get("partition_by"),
-            parent,
+            meta["current_snapshot_id"],
             meta,
         )
-        meta = self._load_meta(name)
-        meta["field_map"] = dict(target.get("field_map", {}))
-        self._store_meta(name, meta)
-        return snap
 
     def cherry_pick(self, name: str, snapshot_id: int) -> dict:
         """Iceberg ``cherrypick_snapshot``: re-apply ONE append commit's
@@ -1421,23 +1424,20 @@ class Warehouse:
         deletes: list[dict] = (),
         removed: bool = False,
     ) -> DataFrame:
-        """The one scan behind every native read of ``files`` as of
-        ``snap``, whose schema is authoritative (time travel reads with the
-        old schema). Columns bind by FIELD ID against the snapshot that
-        wrote each file (:meth:`_write_data` names its dir) — renames follow
-        identity, a column added later or dropped-then-re-added reads NULL
-        over older files — or by name through the field map when that
-        writer expired.
-        Files with the same binding share one parquet scan whose read
-        schema comes from metadata: a table without schema evolution is ONE
-        FileScan. Partition values (from the manifest, never from paths)
-        and one flag per merge-on-read delete entry scoping the file attach
-        as per-file constants (``iceberg_v2.attach_file_constants``); a
-        field stored as data in some files reads whichever the file has.
-        Delete ``i`` applies as ``~(__del_i AND coalesce(pred_i, false))``,
-        its names bound in the schema of the snapshot that recorded it.
-        ``removed=True`` returns the rows the deletes remove instead, with
-        ``__file`` (URI-quoted path) and ``__pos`` (parquet row ordinal).
+        """The one scan behind every native read of ``files`` as of ``snap``
+        (whose schema is authoritative: time travel reads the old schema).
+        Columns bind by field id against the snapshot named by each file's
+        ``data/snap-<id>-<uuid>`` dir, so renames follow identity and a
+        column added later or dropped-then-re-added reads NULL over older
+        files; an expired writer binds by name through the field map. Files
+        that bind alike share one parquet scan with a read schema from
+        metadata: a table without schema evolution is ONE FileScan.
+        Manifest partition values (never paths) and one flag per scoping
+        merge-on-read delete attach as per-file constants
+        (``iceberg_v2.attach_file_constants``). Delete ``i`` applies as
+        ``~(__del_i AND coalesce(pred_i, false))``, its names bound in the
+        schema of the snapshot that recorded it. ``removed=True`` returns
+        the deleted rows instead, with ``__file`` (URI-quoted) and ``__pos``.
         """
         from pyspark.sql.types import StructField, StructType
 
@@ -1485,6 +1485,11 @@ class Warehouse:
                 names[x.name] = c
             scoped.append((d["predicate"], scope, names))
         types = {c: t for c, t, *_ in cols}
+        # Every column goes under a hidden name until the last projection,
+        # so each delete predicate can see its own names beside them. A
+        # column a file does not hold binds to its hidden name, which no
+        # file holds either: the parquet scan reads it as a typed NULL.
+        hidden = {c: f"__v{j}" for j, c in enumerate(types)}
 
         def binding(f: dict) -> tuple:
             # the writer is the middle segment of the data/snap-<id>-<uuid> dir
@@ -1493,7 +1498,7 @@ class Warehouse:
             wfids = (writer or {}).get("fids")
             inv = {fid: c for c, fid in (wfids or {}).items()}
             return tuple(
-                (c, (inv[fid],) if fid in inv else ())
+                (c, (inv.get(fid, hidden[c]),))
                 if wfids is not None and fid is not None else (c, by_name)
                 for c, _, fid, by_name in cols
             )
@@ -1512,12 +1517,9 @@ class Warehouse:
         groups: dict[tuple, list[str]] = {}
         for path, b in zip(paths, binds):
             groups.setdefault(b, []).append(path)
-        # Every column goes under a hidden name until the last projection,
-        # so each delete predicate can see its own names beside them. The
-        # projections are SQL strings: each Column-API call is several Py4J
-        # round trips, and a 16-column read with one delete made ~1,600 of
-        # them before its first job.
-        hidden = {c: f"__v{j}" for j, c in enumerate(types)}
+        # The projections are SQL strings: each Column-API call is several
+        # Py4J round trips, and a 16-column read with one delete made ~1,600
+        # of them before its first job.
         df = None
         for key, group in groups.items():
             read = {x: types[c] for c, srcs in reversed(key) for x in srcs}
@@ -1525,12 +1527,8 @@ class Warehouse:
                 self.spark, group,
                 StructType([StructField(x, t) for x, t in read.items()]),
             ).selectExpr(
-                *[
-                    (f"coalesce({', '.join(map(_quote, srcs))})" if srcs
-                     else f"CAST(NULL AS {self._sql_type(types[c])})")
-                    + f" AS {hidden[c]}"
-                    for c, srcs in key
-                ],
+                *[f"coalesce({', '.join(map(_quote, srcs))}) AS {hidden[c]}"
+                  for c, srcs in key],
                 *(["_metadata.file_path AS __file"] if attach else []),
                 *(["_metadata.row_index AS __pos"] if removed else []),
             )
@@ -1539,8 +1537,7 @@ class Warehouse:
             pcs = list(consts)
             dels = [f"__del_{j}" for j in range(len(scoped))]
             df = attach_file_constants(
-                self.spark,
-                df,
+                self.spark, df,
                 [
                     (path, *[consts[c].get(i) for c in pcs],
                      *[f["path"] in fs for _, fs, _ in scoped])
@@ -1554,7 +1551,7 @@ class Warehouse:
             # of the same field
             df = df.selectExpr(
                 *[
-                    f"coalesce(CAST(__pc_{pcs.index(c)} AS {self._sql_type(t)}),"
+                    f"coalesce(CAST(__pc_{pcs.index(c)} AS {t.simpleString()}),"
                     f" {hidden[c]}) AS {hidden[c]}" if c in consts else hidden[c]
                     for c, t in types.items()
                 ],
@@ -1562,21 +1559,15 @@ class Warehouse:
                 *coords,
             )
             for d, (pred, _, names) in zip(dels, scoped):
+                hit = f"{d} AND coalesce(({pred}), false)"
                 df = df.selectExpr(
                     "*", *[f"{hidden[c]} AS {_quote(n)}" for n, c in names.items()]
-                )
-                hit = F.col(d) & F.coalesce(F.expr(pred), F.lit(False))
-                df = df.filter(hit if removed else ~hit).drop(*names)
+                ).filter(hit if removed else f"NOT ({hit})").drop(*names)
         df = df.selectExpr(
             *[f"{hidden[x.name]} AS {_quote(x.name)}" for x in declared.fields],
             *coords,
         )
         return df.filter(where) if where is not None else df
-
-    def _sql_type(self, t) -> str:
-        """``t`` as Spark SQL spells it (nested field names quoted)."""
-        jtypes = self.spark._jvm.org.apache.spark.sql.types
-        return jtypes.DataType.fromJson(t.json()).sql()
 
     @staticmethod
     def _declared_schema(meta_or_snap: dict):

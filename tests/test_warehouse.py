@@ -1463,6 +1463,58 @@ def test_rename_then_readd_reads_null_over_old_files(spark, wh):
     ]
 
 
+def test_rollback_across_rename_restores_old_values(spark, wh):
+    """Rolling back past a rename restores the target's column identities:
+    x binds its old files through its old field id again, on the rolled-back
+    head, on later appends and by snapshot id."""
+    wh.create_or_replace(
+        "t", spark.createDataFrame([(1, 10), (2, 20)], "id bigint, x int")
+    )                                                          # snap 1
+    wh.rename_column("t", "x", "y")                            # snap 2
+    wh.rollback_to("t", 1)                                     # snap 3
+    assert _rows(wh.read("t")) == [(1, 10), (2, 20)]
+    wh.append("t", spark.createDataFrame([(3, 30)], "id bigint, x int"))  # 4
+    want = [(1, 10), (2, 20), (3, 30)]
+    assert wh.read("t").columns == ["id", "x"]
+    assert _rows(wh.read("t")) == want
+    assert _rows(wh.read("t", snapshot_id=4)) == want
+    assert _rows(wh.read("t", snapshot_id=2)) == [(1, 10), (2, 20)]
+
+
+def test_append_retry_refuses_concurrent_rename(spark, wh, monkeypatch):
+    """An append whose files were written before a concurrent rename must
+    not retry onto the renamed schema: its dir names a snapshot id the
+    rename took, so a read would bind the files through the rename's ids
+    and show NULL for the batch. The conflict is raised instead, and a
+    concurrent plain append still retries."""
+    from apache_iceberg_demo_spark.sources.warehouse import CommitConflictError
+
+    wh.create_or_replace(
+        "t", spark.createDataFrame([(1, 10)], "id bigint, x int")
+    )
+    rival = Warehouse(spark, wh.root)
+    real_write = Warehouse._write_data
+    between = []
+
+    def write_then_rival(self, *a, **k):
+        files = real_write(self, *a, **k)
+        if self is wh and between:
+            between.pop()()
+        return files
+
+    monkeypatch.setattr(Warehouse, "_write_data", write_then_rival)
+    between.append(lambda: rival.append(
+        "t", spark.createDataFrame([(2, 20)], "id bigint, x int")))
+    wh.append("t", spark.createDataFrame([(3, 30)], "id bigint, x int"))
+    assert _rows(wh.read("t")) == [(1, 10), (2, 20), (3, 30)]
+
+    between.append(lambda: rival.rename_column("t", "x", "y"))
+    with pytest.raises(CommitConflictError):
+        wh.append("t", spark.createDataFrame([(4, 40)], "id bigint, x int"))
+    assert wh.read("t").columns == ["id", "y"]
+    assert _rows(wh.read("t")) == [(1, 10), (2, 20), (3, 30)]
+
+
 def _file_scans(df) -> int:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return plan.count("FileScan parquet")
