@@ -1028,12 +1028,13 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
     # has none. The spec's answer for exactly this case (files migrated
     # from a non-Iceberg writer) is the `schema.name-mapping.default` table
     # property: per field id, the list of physical names that may carry it.
-    # Collect every name each fid ever had across the lineage (renames move
-    # the name, keep the fid — warehouse.rename_column) so old files'
-    # spellings resolve. One case stays refused: a name bound to two
-    # DIFFERENT fids (drop-then-re-add) — name-based resolution would
-    # resurrect dropped values; rewrite_data_files() materializes current
-    # names and clears it.
+    # Collect every name each fid has in a snapshot schema or in the field
+    # ids a live data file was written under (renames move the name, keep
+    # the fid — warehouse.rename_column), so old files' spellings resolve
+    # after their writing snapshot expired. One case stays refused: a name
+    # bound to two DIFFERENT fids (drop-then-re-add) — name-based
+    # resolution would resurrect dropped values; rewrite_data_files()
+    # materializes current names and clears it.
     seen_fids: dict[str, int] = {}
     names_by_fid: dict[int, list[str]] = {}
 
@@ -1052,12 +1053,9 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
             names.append(col)
 
     for snap in meta["snapshots"]:
-        fids_snap = snap.get("fids") or {}
-        for col, fid in fids_snap.items():
-            _record(col, int(fid))
-        for logical, physical in (snap.get("field_map") or {}).items():
-            if logical in fids_snap:
-                _record(physical, int(fids_snap[logical]))
+        for fids in [snap["fids"]] + [f["fids"] for f in snap["manifest"]]:
+            for col, fid in fids.items():
+                _record(col, int(fid))
 
     # Every MoR predicate now has a spec-shaped delete-file form:
     # equality-shaped conjunctions (single- or multi-column, = / IN)
@@ -1167,7 +1165,7 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
             struct = StructType(
                 [f for f in struct.fields if f.name not in trs]
             )
-        fids = dict(snap.get("fids") or meta.get("fids") or {})
+        fids = snap["fids"]
         skey = json.dumps(
             [(f.name, f.dataType.simpleString()) for f in struct.fields]
         )

@@ -397,7 +397,6 @@ class Warehouse:
                 "schema": schema_ddl,
                 "partition_by": partition_by,
                 "current_snapshot_id": snap_id,
-                "field_map": {},
                 "snapshots": [],
             }
         # Iceberg-style field ids: every schema column has a stable id;
@@ -412,18 +411,22 @@ class Warehouse:
                 nfid += 1
         meta["fids"] = fids
         meta["next_field_id"] = nfid
+        # each new data file records the ids it was written under: reads
+        # bind its physical columns through them, whatever the snapshot log
+        # still holds. A retried append keeps the ids of its first attempt.
+        for f in files:
+            f.setdefault("fids", fids)
         snapshot = {
             "snapshot_id": snap_id,
             "parent_id": parent,
             "timestamp_ms": _now_ms(),
             "operation": operation,
             "manifest": files,
-            # each snapshot carries ITS OWN schema + logical→physical column
-            # map (Iceberg: schema evolution is metadata-only; time travel to
-            # an old snapshot reads with that snapshot's schema)
+            # each snapshot carries ITS OWN schema + field ids (Iceberg:
+            # schema evolution is metadata-only; time travel to an old
+            # snapshot reads with that snapshot's schema)
             "schema": schema_ddl,
-            "field_map": dict(meta.get("field_map", {})),
-            "fids": dict(meta.get("fids", {})),
+            "fids": dict(fids),
             "summary": {
                 "added-files": len(files),
                 "total-records": sum(f["row_count"] for f in files),
@@ -502,10 +505,11 @@ class Warehouse:
         conform: bool = True,
     ) -> list[dict]:
         """Write the next commit's data files under ``data/snap-<id>-<uuid8>``
-        (``<id>``: the snapshot id the commit will receive, which reads use
-        to find a file's writing schema) and return their manifest entries.
-        Unless the frame defines the schema (a replace: ``conform=False``),
-        columns are cast to the declared types the read schema assumes."""
+        (``<id>``: the snapshot id the commit will receive — a label only;
+        ``_commit`` stamps the entries with the field ids they bind by) and
+        return their manifest entries. Unless the frame defines the schema
+        (a replace: ``conform=False``), columns are cast to the declared
+        types the read schema assumes."""
         tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self._table_dir(name), "data", tag)
         if conform:
@@ -556,20 +560,10 @@ class Warehouse:
             t for t in T.parse_spec_list(spec_str) if t.kind != "identity"
         ]
         all_conjs = T.simple_conjuncts(where)
-        try:
-            struct_json = json.loads(snap.get("schema") or meta["schema"])
-            type_of = {
-                f["name"]: (
-                    f["type"] if isinstance(f["type"], str) else "string"
-                )
-                for f in struct_json["fields"]
-            }
-        except (KeyError, TypeError, ValueError):
-            # Schema unresolvable: a "string" default could hash an
-            # int-keyed bucket literal in the utf-8 layout and unsoundly
-            # prune a matching file — the conservative contract is NO
-            # prune at all.
-            return files
+        type_of = {
+            f["name"]: f["type"] if isinstance(f["type"], str) else "string"
+            for f in json.loads(snap["schema"])["fields"]
+        }
         # pair each transform field with its source-column conjuncts; a
         # field whose source type can't be resolved never prunes
         active = []
@@ -777,7 +771,6 @@ class Warehouse:
         )
         if meta is not None:
             meta["partition_by"] = partition_by
-            meta["field_map"] = {}  # replace-wins: new physical layout
         snap = self._commit(
             name, "replace", files, df.schema.json(), partition_by, parent, meta
         )
@@ -815,9 +808,9 @@ class Warehouse:
         :class:`CommitConflictError` the already-written files are
         re-committed against the freshly-loaded head instead of failing the
         writer. The uuid-suffixed data dir guarantees concurrent appends
-        never share a directory, so retries move metadata only. Reads bind
-        the files through the field ids of the snapshot their dir names, so
-        when a concurrent commit changed those ids the conflict is raised.
+        never share a directory, so retries move metadata only. A retry
+        onto a head whose field ids changed since the files were written
+        (a concurrent schema change) raises the conflict instead.
 
         ``_parent``/``_advance_current`` are the internal no-isolation-leak
         hooks for branch appends and WAP staging: the commit chains off an
@@ -832,7 +825,7 @@ class Warehouse:
         ):
             df, _ = self._apply_transform(df, spec)
         parent = meta["current_snapshot_id"] if _parent is None else _parent
-        writer, wfids = self._next_snap_id(meta, parent), meta.get("fids")
+        wfids = meta["fids"]
         files = self._write_data(name, df, meta, parent, meta.get("partition_by"))
         if _delta_out is not None:
             # hand the caller this append's OWN manifest delta: branch
@@ -859,9 +852,7 @@ class Warehouse:
                 if attempt == retries - 1:
                     raise
                 meta = self._load_meta(name)
-                owner = next((s for s in meta["snapshots"]
-                              if s["snapshot_id"] == writer), meta)
-                if meta.get("fids") != wfids or owner.get("fids") != wfids:
+                if meta["fids"] != wfids:
                     raise
                 if _parent is None:
                     parent = meta["current_snapshot_id"]
@@ -875,8 +866,7 @@ class Warehouse:
         its old files again); ``next_field_id`` stays monotonic."""
         meta = self._load_meta(name)
         target = self._snapshot(meta, snapshot_id)
-        meta["field_map"] = dict(target.get("field_map", {}))
-        meta["fids"] = dict(target.get("fids", {}))
+        meta["fids"] = dict(target["fids"])
         return self._commit(
             name,
             "rollback",
@@ -1062,7 +1052,8 @@ class Warehouse:
         scoping = the spec's sequence-number rule). The write is O(1) at
         any table size; the cost moves to read amplification until
         ``apply_deletes`` (or any compaction) materializes it — the
-        write-heavy/read-heavy trade MoR exists for.
+        write-heavy/read-heavy trade MoR exists for. The entry keeps the
+        schema and field ids its predicate's names bind through.
         """
         meta = self._load_meta(name)
         parent = meta["current_snapshot_id"]
@@ -1079,7 +1070,8 @@ class Warehouse:
         meta = self._load_meta(name)
         s = self._snapshot(meta, snap["snapshot_id"])
         s.setdefault("delete_predicates", []).append(
-            {"predicate": predicate, "files": [f["path"] for f in prev["manifest"]]}
+            {"predicate": predicate, "files": [f["path"] for f in prev["manifest"]],
+             "schema": s["schema"], "fids": s["fids"]}
         )
         self._store_meta(name, meta)
         snap["delete_predicates"] = list(s["delete_predicates"])
@@ -1261,7 +1253,7 @@ class Warehouse:
         tsnap = self._snapshot(meta, target)
         meta["current_snapshot_id"] = target
         meta["schema"] = tsnap["schema"]
-        meta["field_map"] = dict(tsnap.get("field_map", {}))
+        meta["fids"] = dict(tsnap["fids"])
         self._store_meta(name, meta)
         return tsnap
 
@@ -1426,18 +1418,18 @@ class Warehouse:
     ) -> DataFrame:
         """The one scan behind every native read of ``files`` as of ``snap``
         (whose schema is authoritative: time travel reads the old schema).
-        Columns bind by field id against the snapshot named by each file's
-        ``data/snap-<id>-<uuid>`` dir, so renames follow identity and a
-        column added later or dropped-then-re-added reads NULL over older
-        files; an expired writer binds by name through the field map. Files
-        that bind alike share one parquet scan with a read schema from
-        metadata: a table without schema evolution is ONE FileScan.
-        Manifest partition values (never paths) and one flag per scoping
-        merge-on-read delete attach as per-file constants
+        Columns bind by field id through the ``fids`` each manifest entry
+        was written under, so renames follow identity and a column added
+        later or dropped-then-re-added reads NULL over older files, whatever
+        snapshots have expired. Files that bind alike share one parquet scan
+        with a read schema from metadata: a table without schema evolution
+        is ONE FileScan. Manifest partition values (never paths) and one
+        flag per scoping merge-on-read delete attach as per-file constants
         (``iceberg_v2.attach_file_constants``). Delete ``i`` applies as
-        ``~(__del_i AND coalesce(pred_i, false))``, its names bound in the
-        schema of the snapshot that recorded it. ``removed=True`` returns
-        the deleted rows instead, with ``__file`` (URI-quoted) and ``__pos``.
+        ``~(__del_i AND coalesce(pred_i, false))``, its names bound through
+        the ``schema`` and ``fids`` the delete entry was recorded with.
+        ``removed=True`` returns the deleted rows instead, with ``__file``
+        (URI-quoted) and ``__pos``.
         """
         from pyspark.sql.types import StructField, StructType
 
@@ -1446,45 +1438,31 @@ class Warehouse:
             scan_parquet_files,
         )
 
-        declared = self._declared_schema(snap if "schema" in snap else meta)
+        declared = self._declared_schema(snap)
         if where is not None:
             files = [f for f in files if not self._can_skip(f, where)]
             files = self._transform_prune(meta, snap, files, where)
         if not files:
             # the everything-pruned and the empty-manifest case (ADVICE r01)
             return self.spark.createDataFrame([], schema=declared)
-        fm = snap.get("field_map", meta.get("field_map", {}))
-        fids = snap.get("fids") or {}
-        snaps = {s["snapshot_id"]: s for s in meta.get("snapshots", [])}
-        # (column, type, field id, physical names when binding by name): the
-        # declared columns, then any field a delete predicate names that no
-        # declared column carries
-        cols = [
-            (x.name, x.dataType, fids.get(x.name),
-             tuple(dict.fromkeys([x.name, fm.get(x.name, x.name)])))
-            for x in declared.fields
-        ]
-        by_fid = {fid: c for c, _, fid, _ in cols if fid is not None}
+        # (column, type, field id): the declared columns, then any field a
+        # delete predicate names that no declared column carries
+        cols = [(x.name, x.dataType, snap["fids"][x.name]) for x in declared.fields]
+        by_fid = {fid: c for c, _, fid in cols}
         scoped = []  # (predicate, scoped paths, {predicate name: column})
         for d in deletes:
             scope = set(d["files"])
             if not any(f["path"] in scope for f in files):
                 continue
-            origin = snap  # the oldest ancestor still carrying the entry
-            while d in snaps.get(origin["parent_id"], {}).get("delete_predicates", []):
-                origin = snaps[origin["parent_id"]]
             names = {}
-            for x in self._declared_schema(origin).fields:
-                fid = (origin.get("fids") or {}).get(x.name)
-                c = by_fid.get(fid) if fid is not None else (
-                    x.name if x.name in declared.fieldNames() else None)
-                if c is None:
-                    c = f"__field_{x.name if fid is None else fid}"
-                    if c not in [b for b, *_ in cols]:
-                        cols.append((c, x.dataType, fid, (x.name,)))
-                names[x.name] = c
+            for x in self._declared_schema(d).fields:
+                fid = d["fids"][x.name]
+                if fid not in by_fid:
+                    by_fid[fid] = f"__field_{fid}"
+                    cols.append((by_fid[fid], x.dataType, fid))
+                names[x.name] = by_fid[fid]
             scoped.append((d["predicate"], scope, names))
-        types = {c: t for c, t, *_ in cols}
+        types = {c: t for c, t, _ in cols}
         # Every column goes under a hidden name until the last projection,
         # so each delete predicate can see its own names beside them. A
         # column a file does not hold binds to its hidden name, which no
@@ -1492,23 +1470,15 @@ class Warehouse:
         hidden = {c: f"__v{j}" for j, c in enumerate(types)}
 
         def binding(f: dict) -> tuple:
-            # the writer is the middle segment of the data/snap-<id>-<uuid> dir
-            m = re.match(r"data/snap-(\d+)(-[^/]*)?/", f["path"])
-            writer = snaps.get(int(m.group(1))) if m else None
-            wfids = (writer or {}).get("fids")
-            inv = {fid: c for c, fid in (wfids or {}).items()}
-            return tuple(
-                (c, (inv.get(fid, hidden[c]),))
-                if wfids is not None and fid is not None else (c, by_name)
-                for c, _, fid, by_name in cols
-            )
+            # (column, the physical name this file holds it under)
+            inv = {fid: c for c, fid in f["fids"].items()}
+            return tuple((c, inv.get(fid, hidden[c])) for c, _, fid in cols)
 
         binds = [binding(f) for f in files]
         consts: dict[str, dict[int, str]] = {}  # column -> {file: value}
         for i, (f, b) in enumerate(zip(files, binds)):
-            for c, srcs in b:
-                src = next((x for x in srcs if x in f["partition"]), None)
-                if src is not None:
+            for c, src in b:
+                if src in f["partition"]:
                     v = f["partition"][src]
                     consts.setdefault(c, {})[i] = None if v is None else str(v)
         attach = bool(consts or scoped or removed)
@@ -1522,13 +1492,11 @@ class Warehouse:
         # of them before its first job.
         df = None
         for key, group in groups.items():
-            read = {x: types[c] for c, srcs in reversed(key) for x in srcs}
             part = scan_parquet_files(
                 self.spark, group,
-                StructType([StructField(x, t) for x, t in read.items()]),
+                StructType([StructField(src, types[c]) for c, src in key]),
             ).selectExpr(
-                *[f"coalesce({', '.join(map(_quote, srcs))}) AS {hidden[c]}"
-                  for c, srcs in key],
+                *[f"{_quote(src)} AS {hidden[c]}" for c, src in key],
                 *(["_metadata.file_path AS __file"] if attach else []),
                 *(["_metadata.row_index AS __pos"] if removed else []),
             )
@@ -1822,10 +1790,10 @@ class Warehouse:
     #
     # Iceberg's headline metadata capability: ALTER TABLE add/rename/drop is
     # a METADATA-ONLY commit — no data file is rewritten; every snapshot
-    # carries its own schema, so time travel across an evolution reads each
-    # snapshot with the schema it was committed under (Iceberg spec:
-    # schema-evolution via field ids; emulated here with a logical→physical
-    # column map recorded per snapshot).
+    # carries its own schema and field ids, so time travel across an
+    # evolution reads each snapshot with the schema it was committed under.
+    # As in the Iceberg spec, columns bind by field id: every data file's
+    # manifest entry records the ids its physical column names carry.
 
     def _evolve(self, name: str, operation: str, mutate, meta_extra=None) -> dict:
         """Commit a metadata-only schema change: same manifest, new schema.
@@ -1835,16 +1803,11 @@ class Warehouse:
         same commit — a crash can never strand the schema renamed but the
         spec/sort-order pointing at the old name (r14 review: the old
         three-separate-stores shape left exactly that window)."""
-        from pyspark.sql.types import StructType  # noqa: F401  (mutators use it)
-
         meta = self._load_meta(name)
-        declared = self._declared_schema(meta)
-        field_map = dict(meta.get("field_map", {}))
-        fids = dict(meta.get("fids", {}))
-        new_schema = mutate(declared, field_map, fids)
+        fids = dict(meta["fids"])
+        new_schema = mutate(self._declared_schema(meta), fids)
         parent = meta["current_snapshot_id"]
         prev = self._snapshot(meta, parent)
-        meta["field_map"] = field_map
         # mutators own the fid bookkeeping: rename moves the id to the new
         # logical name (reads keep binding old files by identity), drop
         # retires it (a re-added name gets a FRESH id in _commit, so old
@@ -1862,7 +1825,7 @@ class Warehouse:
         NULL; no rewrite."""
         from pyspark.sql.types import StructField, StructType
 
-        def mutate(schema: StructType, _fm: dict, _fids: dict) -> StructType:
+        def mutate(schema: StructType, _fids: dict) -> StructType:
             if col in schema.fieldNames():
                 raise ValueError(f"column {col!r} already exists")
             added = StructType.fromDDL(f"`{col}` {dtype}").fields[0]
@@ -1872,7 +1835,7 @@ class Warehouse:
 
     def rename_column(self, name: str, old: str, new: str) -> dict:
         """ALTER TABLE RENAME COLUMN — metadata-only; old files keep the old
-        physical name, resolved through the snapshot's field map on read.
+        physical name, bound on read through their entries' field ids.
 
         Renaming the SOURCE column of a hidden (non-identity) partition
         transform auto-evolves the spec string onto the new name (Iceberg
@@ -1905,16 +1868,12 @@ class Warehouse:
                 f"into the data layout) — evolve_partition_spec instead"
             )
 
-        def mutate(schema: StructType, fm: dict, fids: dict) -> StructType:
+        def mutate(schema: StructType, fids: dict) -> StructType:
             if old not in schema.fieldNames():
                 raise ValueError(f"column {old!r} not found")
             if new in schema.fieldNames():
                 raise ValueError(f"column {new!r} already exists")
-            # chain through prior renames: the physical name is the one the
-            # oldest live data files were written with
-            fm[new] = fm.pop(old, old)
-            if old in fids:
-                fids[new] = fids.pop(old)
+            fids[new] = fids.pop(old)
             return StructType(
                 [
                     StructField(new, f.dataType, f.nullable) if f.name == old else f
@@ -1988,11 +1947,10 @@ class Warehouse:
                 f"spec off it first"
             )
 
-        def mutate(schema: StructType, fm: dict, fids: dict) -> StructType:
+        def mutate(schema: StructType, fids: dict) -> StructType:
             if col not in schema.fieldNames():
                 raise ValueError(f"column {col!r} not found")
-            fm.pop(col, None)
-            fids.pop(col, None)
+            fids.pop(col)
             return StructType([f for f in schema.fields if f.name != col])
 
         def meta_extra(meta: dict) -> None:

@@ -22,9 +22,10 @@ BASE = [(1, "x", 1.0), (2, "y", 2.0), (3, "x", 3.0), (4, "z", 4.0)]
 
 def test_mor_delete_survives_rename_and_added_columns(spark, tmp_path):
     """(M/N) An equality MoR delete stays correct when the keyed column is
-    RENAMED afterwards (fid binding; predicate string rebinding), and when
-    columns are ADDED — including a later MoR delete keyed on the added
-    column, where pre-add files null-fill and never match."""
+    RENAMED afterwards (fid binding; predicate string rebinding), also once
+    the snapshot that recorded the delete has expired, and when columns are
+    ADDED — including a later MoR delete keyed on the added column, where
+    pre-add files null-fill and never match."""
     mod = _load_validator()
     wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.create_or_replace("m", spark.createDataFrame(BASE, SCHEMA))
@@ -32,6 +33,14 @@ def test_mor_delete_survives_rename_and_added_columns(spark, tmp_path):
     wh.rename_column("m", "tag", "label")
     assert sorted(r.k for r in wh.read("m").collect()) == [2, 4]
     loc = export_iceberg_v2(wh, "m", str(tmp_path / "ice_m"))
+    assert mod.validate(loc, deep=True) == []
+    assert sorted(r.k for r in read_iceberg_v2(spark, loc).collect()) == \
+        [2, 4]
+    # the delete entry binds its own names: expiring the recording
+    # snapshot leaves "tag" in no retained schema
+    wh.expire_snapshots("m", keep_last=1)
+    assert sorted(r.k for r in wh.read("m").collect()) == [2, 4]
+    loc = export_iceberg_v2(wh, "m", str(tmp_path / "ice_m_expired"))
     assert mod.validate(loc, deep=True) == []
     assert sorted(r.k for r in read_iceberg_v2(spark, loc).collect()) == \
         [2, 4]

@@ -1654,8 +1654,8 @@ def test_name_mapping_resolves_renamed_lineage(spark, tmp_path):
     """Renames are exported via the spec's schema.name-mapping.default
     property (the mechanism for data files without embedded field ids):
     pre-rename files carry the old physical spelling, a post-rename append
-    writes the new one, and the spec reader coalesces both under the
-    current name."""
+    writes the middle one, and the spec reader coalesces both under the
+    current name — also after the snapshots that wrote them expired."""
     from apache_iceberg_demo_spark.io import load
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
@@ -1668,23 +1668,24 @@ def test_name_mapping_resolves_renamed_lineage(spark, tmp_path):
             "n_name", "nation_name"
         ),
     )
+    wh.rename_column("nt", "nation_name", "nation")
+    wh.expire_snapshots("nt", keep_last=1)
     location = export_iceberg_v2(wh, "nt", str(tmp_path / "ice"))
 
     meta = _load_meta(location)
     nm = json.loads(meta["properties"]["schema.name-mapping.default"])
-    entry = next(m for m in nm if "nation_name" in m["names"])
-    assert entry["names"][0] == "nation_name" and "n_name" in entry["names"]
+    entry = next(m for m in nm if "nation" in m["names"])
+    assert entry["names"][0] == "nation"
+    assert {"n_name", "nation_name"} <= set(entry["names"])
 
     spec = sorted(
         read_iceberg_v2(spark, location)
-        .select("n_nationkey", "nation_name")
+        .select("n_nationkey", "nation")
         .collect()
     )
-    bespoke = sorted(
-        wh.read("nt").select("n_nationkey", "nation_name").collect()
-    )
+    bespoke = sorted(wh.read("nt").select("n_nationkey", "nation").collect())
     assert spec == bespoke and len(spec) == 25
-    assert all(r.nation_name is not None for r in spec)
+    assert all(r.nation is not None for r in spec)
 
 
 def test_export_refuses_drop_then_readd(spark, tmp_path):

@@ -244,7 +244,7 @@ def test_schema_evolution_metadata_only(spark, wh):
     cur = wh.read("t")
     assert cur.columns == ["l_orderkey", "rflag", "source_tag"]
     assert cur.filter(F.col("source_tag").isNotNull()).count() == 0
-    # values survived the rename (old physical column resolved via field map)
+    # values survived the rename (old physical column bound by field id)
     assert (
         cur.filter(F.col("rflag").isNull()).count() == 0
         and cur.count() == li.count()
@@ -267,14 +267,20 @@ def test_schema_evolution_metadata_only(spark, wh):
 
 
 def test_rename_chain_resolves_oldest_physical(spark, wh):
-    """a→b→c renames chain: reads still resolve to the original physical
-    column in files written before any rename."""
+    """a→b→c renames chain with an append between them: each file's column
+    resolves to the physical name it was written under (the original in
+    files written before any rename, the middle name in the append), also
+    after expiry removed every snapshot that wrote them."""
     li = _lineitem(spark).select("l_orderkey", "l_quantity")
     wh.create_or_replace("t", li)
     wh.rename_column("t", "l_quantity", "qty")
+    wh.append("t", li.withColumnRenamed("l_quantity", "qty"))
     wh.rename_column("t", "qty", "quantity")
+    wh.expire_snapshots("t", keep_last=1)
+    assert len(wh._load_meta("t")["snapshots"]) == 1
     cur = wh.read("t")
     assert cur.columns == ["l_orderkey", "quantity"]
+    assert cur.count() == 2 * li.count()
     assert cur.filter(F.col("quantity").isNull()).count() == 0
 
 

@@ -1,13 +1,15 @@
 """Model-based check of the warehouse lifecycle.
 
 A hypothesis ``RuleBasedStateMachine`` drives one partitioned table through
-appends, merge-on-read deletes, their materialization, MERGE upserts and
-column add / drop (re-add included) / rename, and keeps a pure-Python row
-model beside it. After every step:
+appends, merge-on-read deletes (on stable columns and on a column that may
+later be renamed or dropped), their materialization, MERGE upserts, column
+add / drop (re-add included) / rename and snapshot expiry, and keeps a
+pure-Python row model beside it. After every step:
 
 - ``read()`` equals the model;
 - ``read(where="p = k")`` equals the model filtered on ``p``;
-- the previous snapshot time-travels to the previous model state.
+- the previous snapshot, unless expired, time-travels to the previous
+  model state.
 
 Values are the standing wrong-result classes: NULL, ``''``, ``%``, space,
 non-BMP characters, and int64 values above 2^53, in data and partition
@@ -44,9 +46,10 @@ STRS = [None, "", "%", " ", "\U0001d518", "a b%c", "x"]
 PARTS = [0, 1, BIG, -(2**63)]
 TABLE = "t"
 
-# MoR delete predicates over the columns no rule drops or renames (a stored
-# delete predicate must stay resolvable), each with its SQL three-valued
-# model twin: a NULL comparison keeps the row.
+# MoR delete predicates, each with its SQL three-valued model twin: a NULL
+# comparison keeps the row. DELETES name columns no rule drops or renames;
+# B_DELETES name ``b``, which a later rule may rename or drop, so the stored
+# predicate must keep binding the values it was recorded over.
 DELETES = [
     ("p = 1", lambda r: r["p"] == 1),
     (f"p = {BIG}", lambda r: r["p"] == BIG),
@@ -55,6 +58,11 @@ DELETES = [
     ("s = ''", lambda r: r["s"] == ""),
     ("s IS NULL", lambda r: r["s"] is None),
     ("id % 3 = 0", lambda r: r["id"] % 3 == 0),
+]
+B_DELETES = [
+    ("b = -1", lambda r: r["b"] == -1),
+    (f"b = {BIG}", lambda r: r["b"] == BIG),
+    ("b IS NULL", lambda r: r["b"] is None),
 ]
 
 
@@ -145,12 +153,25 @@ class WarehouseModel(RuleBasedStateMachine):
         self.rows += [self._stored(r) for r in rows]
         self._record()
 
-    @rule(i=st.integers(0, len(DELETES) - 1))
-    def delete_where_mor(self, i):
-        sql, hit = DELETES[i]
+    def _delete(self, sql, hit) -> None:
         self.wh.delete_where_mor(TABLE, sql)
         self.rows = [r for r in self.rows if not hit(r)]
         self._record()
+
+    @rule(i=st.integers(0, len(DELETES) - 1))
+    def delete_where_mor(self, i):
+        self._delete(*DELETES[i])
+
+    # b present as the bigint it was created as (a re-added b may be a string)
+    @precondition(lambda self: self.cols.get("b") == "bigint")
+    @rule(i=st.integers(0, len(B_DELETES) - 1))
+    def delete_where_mor_b(self, i):
+        self._delete(*B_DELETES[i])
+
+    @rule()
+    def expire_snapshots(self):
+        self.wh.expire_snapshots(TABLE, keep_last=1)
+        self.history = self.history[-1:]
 
     @rule()
     def apply_deletes(self):

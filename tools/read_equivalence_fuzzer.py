@@ -17,6 +17,8 @@ import sys
 
 from pyspark.sql import SparkSession, functions as F
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 SEED = int(sys.argv[1]) if len(sys.argv) > 1 else 14
 N_TABLES = int(sys.argv[2]) if len(sys.argv) > 2 else 12
 N_PREDS = int(sys.argv[3]) if len(sys.argv) > 3 else 24
