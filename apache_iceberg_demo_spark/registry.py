@@ -248,8 +248,9 @@ _DRIVER_VERIFIED: set[str] = {
 
 # Names that must lead the registry regardless of verification history
 # (driver re-proof of changed code): every query that reads a native
-# warehouse table (the native read became one scan with field-id binding,
-# and the spec reader shares its constant-attach join), then the r16/r17
+# warehouse table (the native read is one scan with field-id binding, its
+# partition values now bound from each file's stored copy, and the spec
+# reader shares the constant-attach join), then the r16/r17
 # carry-overs the driver has not re-run yet: the two r16 rewrites and
 # every query whose cache lifecycle moved onto caching.operator_scope
 # (graph iterations first).

@@ -885,15 +885,21 @@ def scan_parquet_files(
         return reader.parquet(*paths)
 
 
+#: the join key of :func:`attach_file_constants` as a scan projection: the
+#: row's ``_metadata.file_path`` with Hadoop's ``file:/`` prefix stripped
+FILE_KEY_SQL = "regexp_replace(_metadata.file_path, '^file:/+', '/') AS __file"
+
+
 def attach_file_constants(
-    spark: SparkSession, df: DataFrame, rows: list, ddl: str, path_col=None
+    spark: SparkSession, df: DataFrame, rows: list, ddl: str
 ) -> DataFrame:
-    """Attach per-file constants (partition values, sequence numbers,
-    delete scopes) to scanned rows: the one join both readers use.
-    ``rows`` holds ``(plain local path, *constants)`` per data file, typed
-    by ``ddl``. The one-row-per-file mapping is broadcast-joined on the
-    row's ``_metadata.file_path`` (or ``path_col``, that path captured on
-    the scan frame) with Hadoop's ``file:/`` prefix stripped and the
+    """Attach per-file constants to scanned rows: ``read_iceberg_v2``'s
+    partition values and sequence numbers, and the native read's flags for
+    a merge-on-read delete that scopes only some of its files (native
+    partition values live in the files). ``rows`` holds ``(plain local
+    path, *constants)`` per data file, typed by ``ddl``. The
+    one-row-per-file mapping is broadcast-joined on the frame's
+    ``__file`` (:data:`FILE_KEY_SQL`, projected on the scan) with the
     manifest side URI-quoted to match, so the scan stays one FileScan.
     The ``__file`` key column stays. The mapping is an Arrow table, which
     Spark keeps as a local relation; a Python list becomes an RDD that
@@ -909,10 +915,7 @@ def attach_file_constants(
          for j, f in enumerate(schema.fields)],
         names=schema.names,
     ), schema=schema)
-    raw = F.col(path_col or "_metadata.file_path")
-    return df.withColumn(
-        "__file", F.regexp_replace(raw, "^file:/+", "/")
-    ).join(F.broadcast(mapping), "__file")
+    return df.join(F.broadcast(mapping), "__file")
 
 
 def _uri_path_unquote(path: str) -> str:
@@ -966,6 +969,7 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
     """
     from apache_iceberg_demo_spark.io import scratch_dir
     from apache_iceberg_demo_spark.sources import transforms as _T
+    from apache_iceberg_demo_spark.sources.warehouse import _part_copy
 
     meta = wh._load_meta(name)
     # hidden partitioning (spec "Partition Transforms"): a table created
@@ -1039,7 +1043,7 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
     names_by_fid: dict[int, list[str]] = {}
 
     def _record(col: str, fid: int) -> None:
-        if col in trs:
+        if col in trs or col.removeprefix(_part_copy("")) in trs:
             return  # hidden partition column: not a schema/mapping column
         if seen_fids.setdefault(col, fid) != fid:
             raise ValueError(
@@ -2041,14 +2045,13 @@ def read_iceberg_v2(
         # the parquet row ordinal — Iceberg's `pos`; captured on the scan
         # frame (where _metadata resolves), consumed by the anti-join below
         out = out.withColumn("__pos", F.col("_metadata.row_index"))
-    pnames = {n for n, _ in part_fields}
     # A data column sharing a partition column's name — a table evolved
     # from unpartitioned to identity-partitioned still CONTAINS the column
     # in its old files — would make the post-join reference ambiguous.
     # Shadow-rename the scan-side column; the typed projection below
     # coalesces (manifest constant, shadowed data value) so old files keep
     # their stored values and new files get the manifest constant.
-    data_shadow = {n: f"__data_{n}" for n in sorted(pnames) if n in out.columns}
+    data_shadow = {n: f"__data_{n}" for n, _ in sorted(part_fields) if n in out.columns}
     out = out.withColumnsRenamed(data_shadow)
     if part_fields or need_seq:
         # the per-file constants from the manifests: partition values, and
@@ -2066,7 +2069,9 @@ def read_iceberg_v2(
             for u, vals in file_parts.items()
         ]
         # __file stays while position deletes need it (dropped at the end)
-        out = attach_file_constants(spark, out, rows, map_ddl)
+        out = attach_file_constants(
+            spark, out.selectExpr("*", FILE_KEY_SQL), rows, map_ddl
+        )
         if not pos_deletes:
             out = out.drop("__file")
     # bind the declared column set/order/types through the spec's
@@ -2083,12 +2088,13 @@ def read_iceberg_v2(
     proj = []
     for f in schema["fields"]:
         st = spark_type(f["type"])
-        if f["name"] in pnames:
-            # pre-spec-evolution files stored the column as data; the
-            # manifest constant is NULL for them — fall back
-            srcs = [n for n in (f["name"], data_shadow.get(f["name"])) if n]
-        else:
-            srcs = [n for n in nm.get(f["id"], [f["name"]]) if n in out.columns]
+        # a name that is also a partition field is the manifest constant,
+        # NULL for files written under a spec without it; their stored
+        # value is the shadowed data column (a later rename keeps both)
+        srcs = [
+            m for n in nm.get(f["id"], [f["name"]])
+            for m in (n, data_shadow.get(n)) if m in out.columns
+        ]
         proj.append((
             F.coalesce(*[F.col(n).cast(st) for n in srcs]) if srcs
             else F.lit(None).cast(st)
@@ -2198,25 +2204,26 @@ def read_iceberg_v2(
     # position deletes (spec): a (file_path, pos) pair removes that exact
     # row from data files with sequence number <= the delete's. Applied as
     # a broadcast LEFT ANTI join on the captured scan coordinates.
+    # The pairs become an Arrow-backed local relation (no Python worker),
+    # each distinct path quoted once, the way __file carries it.
     if pos_deletes:
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         for d in pos_deletes:
-            tbl = pq.read_table(d["path"])
-            pairs = [
-                # same java.net.URI quoting as the identity-join keys —
-                # __file carries the escaped form
-                (_uri_path_quote(re.sub("^file:/+", "/", p)), int(x))
-                for p, x in zip(
-                    tbl.column("file_path").to_pylist(),
-                    tbl.column("pos").to_pylist(),
-                )
-            ]
-            if not pairs:
+            tbl = pq.read_table(d["path"], columns=["file_path", "pos"])
+            if not tbl.num_rows:
                 continue
-            pdf = spark.createDataFrame(
-                pairs, schema="`__dfile` string, `__dpos` bigint"
-            )
+            fp = tbl.column("file_path").combine_chunks().dictionary_encode()
+            quoted = pa.array([
+                _uri_path_quote(re.sub("^file:/+", "/", p))
+                for p in fp.dictionary.to_pylist()
+            ], pa.string())
+            pdf = spark.createDataFrame(pa.table({
+                "__dfile": pc.take(quoted, fp.indices),
+                "__dpos": tbl.column("pos").cast(pa.int64()),
+            }), schema="`__dfile` string, `__dpos` bigint")
             cond = (
                 (F.col("__file") == F.col("__dfile"))
                 & (F.col("__pos") == F.col("__dpos"))

@@ -42,6 +42,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def _hive_unescape(s: str) -> str:
@@ -72,6 +73,17 @@ def _hive_unescape(s: str) -> str:
 def _quote(name: str) -> str:
     """A column name as a Spark SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(t) -> str:
+    """A Spark SQL type string; nested field names come out quoted (one
+    JVM round trip, which ``simpleString`` avoids but cannot quote)."""
+    return StructType([StructField("x", t)]).toDDL()[2:]
+
+
+def _part_copy(col: str) -> str:
+    """The reserved physical name of a partition column's in-file copy."""
+    return f"__part_{col}"
 
 
 def _now_ms() -> int:
@@ -301,6 +313,8 @@ class Warehouse:
                         if st is None or not st.has_min_max:
                             continue
                         cname = col.path_in_schema
+                        if cname.startswith(_part_copy("")):
+                            continue  # the manifest's partition value
                         try:
                             mn, mx = st.min, st.max
                         except Exception:
@@ -414,8 +428,12 @@ class Warehouse:
         # each new data file records the ids it was written under: reads
         # bind its physical columns through them, whatever the snapshot log
         # still holds. A retried append keeps the ids of its first attempt.
+        # A partition column binds through its in-file copy.
         for f in files:
-            f.setdefault("fids", fids)
+            f.setdefault("fids", {
+                _part_copy(c) if c in f["partition"] else c: i
+                for c, i in fids.items()
+            })
         snapshot = {
             "snapshot_id": snap_id,
             "parent_id": parent,
@@ -509,16 +527,28 @@ class Warehouse:
         ``_commit`` stamps the entries with the field ids they bind by) and
         return their manifest entries. Unless the frame defines the schema
         (a replace: ``conform=False``), columns are cast to the declared
-        types the read schema assumes."""
+        types the read schema assumes. Spark's ``partitionBy`` strips each
+        partition column from its files, so a copy is stored under
+        :func:`_part_copy`'s name: the value the hive dir (and so the
+        manifest) records, a string ``''`` as NULL like the dir. Reads bind
+        it by field id like any column. One SQL projection does both."""
         tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self._table_dir(name), "data", tag)
-        if conform:
-            types = {x.name: x.dataType for x in self._declared_schema(meta).fields}
-            df = df.select(*[
-                F.col(c).cast(types[c]).alias(c) if c in types else c
-                for c in df.columns
-            ])
         pcols = self._pcols(partition_by)
+        have = {x.name: x.dataType for x in df.schema.fields}
+        types = dict(have)  # column -> the type it is written as
+        if conform:
+            types.update((x.name, x.dataType) for x in self._declared_schema(meta).fields
+                         if x.name in have)
+        exprs = {
+            c: _quote(c) if t == types[c] else f"CAST({_quote(c)} AS {_sql_type(types[c])})"
+            for c, t in have.items()
+        }
+        df = df.selectExpr(
+            *[f"{e} AS {_quote(c)}" for c, e in exprs.items()],
+            *[(f"nullif({exprs[c]}, '')" if isinstance(types[c], StringType) else exprs[c])
+              + f" AS {_quote(_part_copy(c))}" for c in pcols],
+        )
         if pcols and shuffle:
             # hash-repartition on the partition columns: each value lands in
             # exactly ONE task, so the write emits one file per value whatever
@@ -1421,19 +1451,21 @@ class Warehouse:
         Columns bind by field id through the ``fids`` each manifest entry
         was written under, so renames follow identity and a column added
         later or dropped-then-re-added reads NULL over older files, whatever
-        snapshots have expired. Files that bind alike share one parquet scan
-        with a read schema from metadata: a table without schema evolution
-        is ONE FileScan. Manifest partition values (never paths) and one
-        flag per scoping merge-on-read delete attach as per-file constants
-        (``iceberg_v2.attach_file_constants``). Delete ``i`` applies as
-        ``~(__del_i AND coalesce(pred_i, false))``, its names bound through
-        the ``schema`` and ``fids`` the delete entry was recorded with.
-        ``removed=True`` returns the deleted rows instead, with ``__file``
-        (URI-quoted) and ``__pos``.
+        snapshots have expired. Partition columns are no exception: each
+        file holds a copy (``_write_data``), so the manifest's partition
+        values only prune here. Files that bind alike share one parquet
+        scan with a read schema from metadata: a table without schema
+        evolution is ONE FileScan. A merge-on-read delete binds its names
+        through the ``schema`` and ``fids`` it was recorded with; one whose
+        scope covers every scanned file applies as ``NOT coalesce(pred,
+        false)``, and only a delete scoping some of them attaches a flag
+        per file (``iceberg_v2.attach_file_constants``), applying as
+        ``NOT (__del_i AND coalesce(pred_i, false))``. ``removed=True``
+        returns the deleted rows instead, with ``__file`` (URI-quoted) and
+        ``__pos``.
         """
-        from pyspark.sql.types import StructField, StructType
-
         from apache_iceberg_demo_spark.sources.iceberg_v2 import (
+            FILE_KEY_SQL,
             attach_file_constants,
             scan_parquet_files,
         )
@@ -1449,10 +1481,13 @@ class Warehouse:
         # delete predicate names that no declared column carries
         cols = [(x.name, x.dataType, snap["fids"][x.name]) for x in declared.fields]
         by_fid = {fid: c for c, _, fid in cols}
-        scoped = []  # (predicate, scoped paths, {predicate name: column})
+        # (predicate, {predicate name: column}, scope, or None for a scope
+        # covering every scanned file)
+        scoped = []
         for d in deletes:
             scope = set(d["files"])
-            if not any(f["path"] in scope for f in files):
+            n_in = sum(f["path"] in scope for f in files)
+            if not n_in:
                 continue
             names = {}
             for x in self._declared_schema(d).fields:
@@ -1461,35 +1496,24 @@ class Warehouse:
                     by_fid[fid] = f"__field_{fid}"
                     cols.append((by_fid[fid], x.dataType, fid))
                 names[x.name] = by_fid[fid]
-            scoped.append((d["predicate"], scope, names))
+            scoped.append((d["predicate"], names, None if n_in == len(files) else scope))
+        partial = {i: s for i, (_, _, s) in enumerate(scoped) if s is not None}
         types = {c: t for c, t, _ in cols}
         # Every column goes under a hidden name until the last projection,
         # so each delete predicate can see its own names beside them. A
         # column a file does not hold binds to its hidden name, which no
         # file holds either: the parquet scan reads it as a typed NULL.
         hidden = {c: f"__v{j}" for j, c in enumerate(types)}
-
-        def binding(f: dict) -> tuple:
-            # (column, the physical name this file holds it under)
-            inv = {fid: c for c, fid in f["fids"].items()}
-            return tuple((c, inv.get(fid, hidden[c])) for c, _, fid in cols)
-
-        binds = [binding(f) for f in files]
-        consts: dict[str, dict[int, str]] = {}  # column -> {file: value}
-        for i, (f, b) in enumerate(zip(files, binds)):
-            for c, src in b:
-                if src in f["partition"]:
-                    v = f["partition"][src]
-                    consts.setdefault(c, {})[i] = None if v is None else str(v)
-        attach = bool(consts or scoped or removed)
-        coords = ["__file", "__pos"] if removed else []
         paths = [os.path.abspath(self._abs_path(name, f["path"])) for f in files]
         groups: dict[tuple, list[str]] = {}
-        for path, b in zip(paths, binds):
-            groups.setdefault(b, []).append(path)
+        for path, f in zip(paths, files):
+            inv = {fid: c for c, fid in f["fids"].items()}
+            key = tuple((c, inv.get(fid, hidden[c])) for c, _, fid in cols)
+            groups.setdefault(key, []).append(path)
         # The projections are SQL strings: each Column-API call is several
         # Py4J round trips, and a 16-column read with one delete made ~1,600
         # of them before its first job.
+        with_file = bool(partial) or removed
         df = None
         for key, group in groups.items():
             part = scan_parquet_files(
@@ -1497,50 +1521,32 @@ class Warehouse:
                 StructType([StructField(src, types[c]) for c, src in key]),
             ).selectExpr(
                 *[f"{_quote(src)} AS {hidden[c]}" for c, src in key],
-                *(["_metadata.file_path AS __file"] if attach else []),
+                *([FILE_KEY_SQL] if with_file else []),
                 *(["_metadata.row_index AS __pos"] if removed else []),
             )
             df = part if df is None else df.unionByName(part)
-        if attach:
-            pcs = list(consts)
-            dels = [f"__del_{j}" for j in range(len(scoped))]
+        if partial:
             df = attach_file_constants(
                 self.spark, df,
-                [
-                    (path, *[consts[c].get(i) for c in pcs],
-                     *[f["path"] in fs for _, fs, _ in scoped])
-                    for i, (path, f) in enumerate(zip(paths, files))
-                ],
-                ", ".join([f"`__pc_{j}` string" for j in range(len(pcs))]
-                          + [f"`{d}` boolean" for d in dels]),
-                path_col="__file",
+                [(path, *[f["path"] in s for s in partial.values()])
+                 for path, f in zip(paths, files)],
+                ", ".join(f"`__del_{i}` boolean" for i in partial),
             )
-            # a partition constant wins over the (absent, NULL) data column
-            # of the same field
+        for i, (pred, names, _) in enumerate(scoped):
+            hit = f"coalesce(({pred}), false)"
+            if i in partial:
+                hit = f"__del_{i} AND {hit}"
             df = df.selectExpr(
-                *[
-                    f"coalesce(CAST(__pc_{pcs.index(c)} AS {t.simpleString()}),"
-                    f" {hidden[c]}) AS {hidden[c]}" if c in consts else hidden[c]
-                    for c, t in types.items()
-                ],
-                *dels,
-                *coords,
-            )
-            for d, (pred, _, names) in zip(dels, scoped):
-                hit = f"{d} AND coalesce(({pred}), false)"
-                df = df.selectExpr(
-                    "*", *[f"{hidden[c]} AS {_quote(n)}" for n, c in names.items()]
-                ).filter(hit if removed else f"NOT ({hit})").drop(*names)
+                "*", *[f"{hidden[c]} AS {_quote(n)}" for n, c in names.items()]
+            ).filter(hit if removed else f"NOT ({hit})").drop(*names)
         df = df.selectExpr(
             *[f"{hidden[x.name]} AS {_quote(x.name)}" for x in declared.fields],
-            *coords,
+            *(["__file", "__pos"] if removed else []),
         )
         return df.filter(where) if where is not None else df
 
     @staticmethod
     def _declared_schema(meta_or_snap: dict):
-        from pyspark.sql.types import StructType
-
         return StructType.fromJson(json.loads(meta_or_snap["schema"]))
 
     @staticmethod
@@ -1823,7 +1829,6 @@ class Warehouse:
     def add_column(self, name: str, col: str, dtype: str) -> dict:
         """ALTER TABLE ADD COLUMN — existing files read the new column as
         NULL; no rewrite."""
-        from pyspark.sql.types import StructField, StructType
 
         def mutate(schema: StructType, _fids: dict) -> StructType:
             if col in schema.fieldNames():
@@ -1847,12 +1852,9 @@ class Warehouse:
         Renaming a DERIVED partition column — including an IDENTITY
         partition column, whose name is its own derived name — is refused:
         the name is baked into the on-disk hive layout (``col=value``
-        dirs, and identity values live only in the dir name, not the
-        parquet). ADVICE r13: the old ``"(" in spec`` gate silently
-        stranded plain identity specs on the old name (every later append
-        crashed); evolve the spec or write to a new table instead."""
-        from pyspark.sql.types import StructField, StructType
-
+        dirs) and the spec string. ADVICE r13: the old ``"(" in spec`` gate
+        silently stranded plain identity specs on the old name (every later
+        append crashed); evolve the spec or write to a new table instead."""
         from apache_iceberg_demo_spark.sources import transforms as T
 
         meta0 = self._load_meta(name)
@@ -1931,8 +1933,6 @@ class Warehouse:
         non-identity transform sources); dropping a non-identity DERIVED
         partition column merely hides it from reads (writers re-derive
         it from the source)."""
-        from pyspark.sql.types import StructType
-
         from apache_iceberg_demo_spark.sources import transforms as T
 
         cur_spec = self._load_meta(name).get("partition_spec")

@@ -3620,3 +3620,20 @@ def test_positional_delete_on_special_char_partition_paths(spark, tmp_path):
     assert sorted(map(tuple, got.collect()), key=str) == sorted(
         map(tuple, wh.read("x").collect()), key=str
     )
+
+
+def test_position_deletes_build_from_a_local_relation(spark, tmp_path):
+    """The spec read builds each position-delete file's (file, pos) side
+    from Arrow: the broadcast's build side is a LocalTableScan, not a
+    Python RDD scan."""
+    from apache_iceberg_demo_spark.io import load
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    r = load(spark, SF, "region")
+    wh.create_or_replace("r", r, partition_by="r_name")
+    wh.delete_where_mor("r", "r_regionkey > 1")  # positional
+    location = export_iceberg_v2(wh, "r", str(tmp_path / "ice"))
+    spec = read_iceberg_v2(spark, location)
+    plan = spec._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan [__dfile" in plan and "ExistingRDD" not in plan
+    assert sorted(x.r_regionkey for x in spec.collect()) == [0, 1]

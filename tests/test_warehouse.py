@@ -1608,3 +1608,126 @@ def test_row_level_op_keeps_mor_deletes_on_earlier_spec_files(spark, wh):
     wh.delete_where_mor("t", "k = 1")
     wh.delete_where("t", "cat = 'y'")
     assert _rows(wh.read("t")) == [(2, "x")]
+
+
+def _broadcasts(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "BroadcastExchange"
+    )
+
+
+def test_partitioned_read_needs_no_join(spark, wh):
+    """Partition values come from each file's stored copy, so a partitioned
+    table reads through one FileScan with no broadcast join, and a
+    merge-on-read delete whose scope covers every scanned file is a plain
+    filter. Only a delete scoping some of the scanned files attaches its
+    per-file flag through the join."""
+    def batch(lo: int, n: int = 8):
+        return spark.createDataFrame(
+            [(i, i % 4, i * 10) for i in range(lo, lo + n)],
+            "id bigint, p int, v bigint",
+        )
+
+    def check(n_broadcasts: int) -> None:
+        for k, df in [(None, wh.read("t")), (1, wh.read("t", where="p = 1"))]:
+            assert _file_scans(df) == 1 and _broadcasts(df) == n_broadcasts
+            want = {i: v for i, v in model.items() if k is None or i % 4 == k}
+            assert dict((r.id, r.v) for r in df.collect()) == want
+
+    wh.create_or_replace("t", batch(0), partition_by="p")
+    model = {i: i * 10 for i in range(8)}
+    for c in (1, 2):
+        wh.append("t", batch(c * 8))
+        model.update({i: i * 10 for i in range(c * 8, c * 8 + 8)})
+    check(0)
+    wh.delete_where_mor("t", "id % 3 = 0")
+    model = {i: v for i, v in model.items() if i % 3}
+    check(0)
+    wh.append("t", batch(24))
+    model.update({i: i * 10 for i in range(24, 32)})
+    check(1)
+    # a where that prunes to the new files alone drops the delete again
+    df = wh.read("t", where="id >= 24")
+    assert _broadcasts(df) == 0 and sorted(r.id for r in df.collect()) == list(
+        range(24, 32)
+    )
+
+
+def _copies_and_manifest(spark, wh, table: str, col: str) -> list:
+    """Per data file: the distinct values of the partition column's stored
+    copy, and the file's manifest partition value cast to the declared type
+    (what a read attached before the copy existed)."""
+    from apache_iceberg_demo_spark.sources.warehouse import _part_copy
+
+    meta = wh._load_meta(table)
+    snap = wh._snapshot(meta, meta["current_snapshot_id"])
+    typ = wh._declared_schema(snap)[col].dataType.simpleString()
+    out = []
+    for f in snap["manifest"]:
+        stored = spark.read.schema(f"`{_part_copy(col)}` {typ}").parquet(
+            wh._abs_path(table, f["path"])
+        ).collect()
+        want = spark.createDataFrame(
+            [(f["partition"][col],)], "v string"
+        ).selectExpr(f"CAST(v AS {typ})").first()[0]
+        out.append(({repr(r[0]) for r in stored}, repr(want)))
+    return out
+
+
+@pytest.mark.parametrize(
+    "ddl, values",
+    [
+        # '' and NULL share the hive default dir: both store NULL
+        ("string", ["", None, "a b", "x%y=z/#", "é:ü"]),
+        ("double", [-0.0, 0.0, float("nan"), 1.5, None]),
+        ("boolean", [True, False, None]),
+        ("timestamp", ["2024-03-05 10:00:00.123456", "1969-12-31 23:59:59.5", None]),
+    ],
+)
+def test_partition_copy_holds_the_manifest_value(spark, wh, ddl, values):
+    """Each file's copy of its partition column holds exactly the value its
+    manifest entry records, cast to the declared type: the native read,
+    which binds the copy, returns what the manifest-constant read did."""
+    rows = [(i, v) for i, v in enumerate(values)]
+    src = spark.createDataFrame(rows, "k int, c string").selectExpr(
+        "k", f"CAST(c AS {ddl}) AS c"
+    ) if ddl == "timestamp" else spark.createDataFrame(rows, f"k int, c {ddl}")
+    wh.create_or_replace("t", src, partition_by="c")
+    want = {r.k: repr(None if r.c == "" else r.c) for r in src.collect()}
+    pairs = _copies_and_manifest(spark, wh, "t", "c")
+    assert {m for _, m in pairs} == set(want.values())
+    for stored, manifest in pairs:
+        assert stored == {manifest}
+    assert {r.k: repr(r.c) for r in wh.read("t").collect()} == want
+
+
+def test_partition_copy_binds_after_rename_and_spec_evolution(spark, tmp_path, wh):
+    """Files written under an identity spec keep binding their copy by field
+    id after the spec moves off the column and the column is renamed; the
+    v2 export's name-mapping carries the copy's name too."""
+    from apache_iceberg_demo_spark.sources.iceberg_v2 import (
+        export_iceberg_v2,
+        read_iceberg_v2,
+    )
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "id bigint, p int, v bigint")
+
+    wh.create_or_replace("t", frame([(1, 0, 10), (2, 1, 20)]), partition_by="p")
+    wh.append("t", frame([(3, 1, 30)]))
+    wh.evolve_partition_spec("t", "bucket(2, id)")
+    wh.append("t", frame([(4, 0, 40)]))
+    want = [(1, 0, 10), (2, 1, 20), (3, 1, 30), (4, 0, 40)]
+    assert _rows(wh.read("t").select("id", "p", "v")) == want
+    wh.rename_column("t", "p", "q")
+    wh.append(
+        "t", spark.createDataFrame([(5, 1, 50)], "id bigint, q int, v bigint")
+    )
+    want.append((5, 1, 50))
+    assert _rows(wh.read("t").select("id", "q", "v")) == want
+    assert sorted(r.id for r in wh.read("t", where="q = 1").collect()) == [2, 3, 5]
+    wh.delete_where_mor("t", "q = 0")
+    want = [r for r in want if r[1] != 0]
+    assert _rows(wh.read("t").select("id", "q", "v")) == want
+    loc = export_iceberg_v2(wh, "t", str(tmp_path / "ice"))
+    assert _rows(read_iceberg_v2(spark, loc).select("id", "q", "v")) == want
