@@ -78,7 +78,8 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def summarise(rows: list[dict]) -> dict:
-    bench = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
     by: dict[int, dict] = {}
     missing = 0
     for r in rows:
@@ -149,13 +150,16 @@ def main() -> int:
     ap.add_argument("--summarise", metavar="JSONL")
     args = ap.parse_args()
     if args.summarise:
-        rows = [json.loads(line) for line in open(args.summarise)]
+        with open(args.summarise) as f:
+            rows = [json.loads(line) for line in f]
         print(report(summarise(rows)))
         return 0
     if not (args.ref and args.workload):
         ap.error("REF and --workload are required unless --summarise is given")
     prefix = args.out or f"ab_{args.workload}"
-    ref_dir = export_ref(args.ref)
+    commit = subprocess.run(["git", "-C", ROOT, "rev-parse", args.ref], check=True,
+                            capture_output=True, text=True).stdout.strip()
+    ref_dir = export_ref(commit)
     rows: list[dict] = []
     try:
         with open(prefix + ".jsonl", "w") as f:
@@ -171,7 +175,8 @@ def main() -> int:
     finally:
         shutil.rmtree(ref_dir, ignore_errors=True)
     s = summarise(rows)
-    s.update(ref=args.ref, workload=args.workload, first_seed=args.first_seed)
+    s.update(ref=args.ref, ref_commit=commit, workload=args.workload,
+             first_seed=args.first_seed)
     with open(prefix + ".json", "w") as f:
         json.dump(s, f, indent=1)
     print(report(s))
