@@ -90,11 +90,29 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
+#: a committed metadata version's file name under ``<table>/metadata/``
+_VERSION_FILE = re.compile(r"v(\d+)\.metadata\.json")
+
+#: how many ancestor version ids each version keeps in ``commit_log``
+#: (Iceberg's ``write.metadata.previous-versions-max`` default)
+_COMMIT_LOG = 100
+
+
+def _unlink_if_present(path: str) -> None:
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
+
+
 class CommitConflictError(RuntimeError):
-    """Optimistic-concurrency commit failure: the table's metadata advanced
-    after this writer loaded it (Iceberg's ``CommitFailedException``
-    analog). Commutative operations (fast appends) catch this, reload, and
-    reapply; non-commutative ones surface it to the caller."""
+    """Optimistic-concurrency commit failure (Iceberg's
+    ``CommitFailedException`` analog): the version this writer would
+    create, ``v<N+1>.metadata.json`` after loading ``N``, already exists,
+    or a newer version that does not descend from it does. Nothing of the
+    failed commit stays visible. Commutative operations (fast appends)
+    catch this, reload, and reapply; non-commutative ones surface it to
+    the caller."""
 
 
 class Warehouse:
@@ -135,143 +153,85 @@ class Warehouse:
     def _table_dir(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _meta_path(self, name: str) -> str:
-        return os.path.join(self._table_dir(name), "metadata.json")
+    def _meta_path(self, name: str, version: int) -> str:
+        return os.path.join(self._table_dir(name), "metadata", f"v{version}.metadata.json")
+
+    def _versions(self, name: str) -> list[int]:
+        """The committed metadata versions of a table, ascending."""
+        try:
+            names = os.listdir(os.path.join(self._table_dir(name), "metadata"))
+        except FileNotFoundError:
+            return []
+        return sorted(int(m[1]) for m in map(_VERSION_FILE.fullmatch, names) if m)
+
+    def exists(self, name: str) -> bool:
+        """Whether the table has a committed version."""
+        return bool(self._versions(name))
 
     def _load_meta(self, name: str) -> dict:
-        with open(self._meta_path(name)) as f:
-            return json.load(f)
+        """The table's current metadata: the highest ``v<N>.metadata.json``,
+        with ``N`` in ``commit_seq``. A version removed between the listing
+        and the open was superseded, so the listing is taken again; a file
+        that does not parse raises."""
+        while True:
+            versions = self._versions(name)
+            if not versions:
+                raise FileNotFoundError(f"table {name!r} has no metadata")
+            try:
+                with open(self._meta_path(name, versions[-1])) as f:
+                    meta = json.load(f)
+            except FileNotFoundError:
+                continue
+            meta["commit_seq"] = versions[-1]
+            return meta
 
     def _store_meta(self, name: str, meta: dict) -> None:
-        """Atomic rename commit with OPTIMISTIC CONCURRENCY (the Iceberg
-        commit contract, HadoopTableOperations pattern): every metadata
-        write validates, under a short-lived lock file, that the on-disk
-        ``commit_seq`` still equals the one this writer LOADED — a
-        concurrent commit in between raises :class:`CommitConflictError`
-        (Iceberg's ``CommitFailedException``) instead of silently
-        overwriting the other writer's snapshot (lost update). Every
-        load→modify→store path inherits the check automatically because
-        ``_load_meta`` carries the seq inside the dict."""
-        meta_path = self._meta_path(name)
-        lock = meta_path + ".lock"
-        deadline = time.monotonic() + 10.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                # FENCING TOKEN: a unique id written INTO the lock file we
-                # created (plus its inode as a cheap first check).
-                # Re-verified immediately before the metadata replace — if
-                # a breaker ever steals this lock (the residual race
-                # below), the holder aborts instead of committing, so a
-                # lock steal can only ever cause a safe retry, never two
-                # writers both passing the commit_seq CAS (lost update).
-                # The content token matters: an inode-only fence is
-                # defeated by filesystem inode RECYCLING (unlink + O_CREAT
-                # routinely hands the freed inode straight to the next
-                # writer — observed on this container's fs).
-                my_token = uuid.uuid4().hex.encode()
-                os.write(fd, my_token)
-                my_ino = os.fstat(fd).st_ino
-                os.close(fd)
-                break
-            except FileExistsError:
-                # break STALE locks (a crashed writer's leak would otherwise
-                # block every future commit): a healthy store holds the lock
-                # for milliseconds, so a minute-old lock file is abandoned.
-                # The break is an atomic RENAME so exactly one breaker wins:
-                # a plain unlink is a TOCTOU — between our mtime read and the
-                # unlink, another breaker may remove the stale file and a new
-                # writer acquire a FRESH lock, which our unlink would then
-                # destroy, letting two writers into the commit window.
-                try:
-                    st = os.stat(lock)
-                    if time.time() - st.st_mtime > 60.0:
-                        self._break_stale_lock(lock, st)
-                        continue
-                except OSError:
-                    continue  # raced with the holder's release — retry
-                if time.monotonic() > deadline:
-                    raise CommitConflictError(
-                        f"table {name!r}: commit lock held too long"
-                    )
-                time.sleep(0.01)
+        """Commit ``meta`` as the version after the one it was loaded from,
+        the Hadoop-catalog protocol (Iceberg ``HadoopTableOperations``):
+
+        1. the JSON goes to a temp file in ``metadata/``;
+        2. ``os.link`` publishes it as ``v<N+1>.metadata.json``; the link
+           fails if that name exists, so of two writers loaded at ``N``
+           exactly one commits and the other gets
+           :class:`CommitConflictError`;
+        3. the directory is listed again. A newer version that does not
+           descend from this one means the name was free only because
+           cleanup had removed it under a stale writer: the file is
+           unlinked and the commit conflicts. Each version lists the ids
+           of the last :data:`_COMMIT_LOG` versions it descends from in
+           ``commit_log``, which tells that case from a writer that has
+           already committed on top of this one;
+        4. only then are the versions below ``N+1`` removed, so a table
+           holds one version at rest.
+
+        A failed store leaves ``meta`` as it was, ready for a reload and
+        retry. A crashed writer leaves at most a temp file or an older
+        version behind; neither blocks the next commit."""
+        version = int(meta.get("commit_seq", 0)) + 1
+        log = meta.get("commit_log", [])[1 - _COMMIT_LOG:] + [uuid.uuid4().hex]
+        target = self._meta_path(name, version)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        tmp = f"{target}.{log[-1]}.tmp"
         try:
-            expected = int(meta.get("commit_seq", 0))
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    on_disk = int(json.load(f).get("commit_seq", 0))
-                if on_disk != expected:
-                    raise CommitConflictError(
-                        f"table {name!r}: metadata advanced under this "
-                        f"writer (seq {on_disk} != base {expected})"
-                    )
-            elif expected:
-                raise CommitConflictError(
-                    f"table {name!r}: metadata file vanished under writer"
-                )
-            meta["commit_seq"] = expected + 1
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
-                json.dump(meta, f, indent=1)
-            # fence check at the point of truth: we commit only while the
-            # lock path still holds the file we created (inode AND token —
-            # inode alone is recyclable)
-            if not self._holds_lock(lock, my_ino, my_token):
-                os.unlink(tmp)
-                meta["commit_seq"] = expected  # caller may retry cleanly
-                raise CommitConflictError(
-                    f"table {name!r}: commit lock stolen under this writer"
-                )
-            os.replace(tmp, meta_path)
+                json.dump(dict(meta, commit_seq=version, commit_log=log), f, indent=1)
+            os.link(tmp, target)
+        except FileExistsError:
+            raise CommitConflictError(
+                f"table {name!r}: version {version} is already committed"
+            ) from None
         finally:
-            # release only a lock we still own — never destroy a fresh
-            # lock some other writer acquired after ours was stolen
-            try:
-                if self._holds_lock(lock, my_ino, my_token):
-                    os.unlink(lock)
-            except OSError:
-                pass
-
-    @staticmethod
-    def _holds_lock(lock: str, ino: int, token: bytes) -> bool:
-        """True iff the lock path still holds the file this writer created."""
-        try:
-            if os.stat(lock).st_ino != ino:
-                return False
-            with open(lock, "rb") as f:
-                return f.read() == token
-        except OSError:
-            return False
-
-    @staticmethod
-    def _break_stale_lock(lock: str, st: os.stat_result) -> None:
-        """Remove an abandoned lock file, verified by inode against the
-        observation ``st`` that judged it stale. If the rename grabbed a
-        DIFFERENT (fresh) lock, give it back via ``os.link`` — which,
-        unlike rename, fails loudly instead of silently replacing a newer
-        lock a third writer created in the gap (that clobber would put two
-        writers inside the commit window at once; the holder-side fence in
-        ``_store_meta`` would still abort them, but the lock must not be
-        the thing that lets it happen)."""
-        broken = lock + f".broken-{uuid.uuid4().hex}"
-        os.rename(lock, broken)
-        try:
-            if os.stat(broken).st_ino == st.st_ino:
-                os.unlink(broken)  # broke the lock we observed
-            else:
-                # between our stat and rename another breaker removed the
-                # stale file and a NEW writer acquired a fresh lock — we
-                # renamed THAT one away. Restore it without clobbering:
-                try:
-                    os.link(broken, lock)
-                except FileExistsError:
-                    # yet another writer already re-created the lock path;
-                    # the displaced holder is protected by its fence token
-                    # (it re-checks the inode before committing)
-                    pass
-                os.unlink(broken)
-        except OSError:
-            pass  # raced with the displaced holder's own release
+            _unlink_if_present(tmp)
+        versions = self._versions(name)
+        if versions[-1] > version and log[-1] not in self._load_meta(name)["commit_log"]:
+            _unlink_if_present(target)
+            raise CommitConflictError(
+                f"table {name!r}: version {versions[-1]} superseded base {version - 1}"
+            )
+        meta.update(commit_seq=version, commit_log=log)
+        for v in versions:
+            if v < version:
+                _unlink_if_present(self._meta_path(name, v))
 
     def _abs_path(self, name: str, entry_path: str) -> str:
         """Resolve a manifest path. Paths are stored RELATIVE to the table
@@ -400,19 +360,16 @@ class Warehouse:
         schema_ddl: str,
         partition_by,  # str | list[str] | None (multi-field specs: list)
         parent: Optional[int],
-        meta: Optional[dict],
+        meta: dict,
         advance_current: bool = True,
+        snap_extra=None,
     ) -> dict:
+        """Append a snapshot of ``files`` to ``meta`` and store it: one
+        commit, one metadata version. ``snap_extra(snapshot)``, when given,
+        adds the operation's own snapshot fields (a delete entry, the
+        staged flag) before that store, so no commit is ever published
+        without them."""
         snap_id = self._next_snap_id(meta, parent)
-        if meta is None:
-            meta = {
-                "table": name,
-                "format_version": 1,
-                "schema": schema_ddl,
-                "partition_by": partition_by,
-                "current_snapshot_id": snap_id,
-                "snapshots": [],
-            }
         # Iceberg-style field ids: every schema column has a stable id;
         # columns new to the table (including RE-ADDED names after a drop —
         # the evolution mutators remove the old id first) get a fresh one, so
@@ -451,19 +408,20 @@ class Warehouse:
             },
         }
         # Iceberg v2 merge-on-read: delete entries recorded on the parent
-        # still apply to the data files they were scoped to, so child
-        # snapshots inherit them. Scoping by file path makes inheritance
-        # self-limiting: files rewritten/compacted away leave the entry
-        # inert (empty scope intersection), exactly like sequence-number
-        # scoping in the Iceberg spec.
-        if parent is not None:
-            par = next(
-                (s for s in meta["snapshots"] if s["snapshot_id"] == parent), None
-            )
-            if par and par.get("delete_predicates"):
-                snapshot["delete_predicates"] = [
-                    dict(d) for d in par["delete_predicates"]
-                ]
+        # still apply to the data files they were scoped to, so a child
+        # snapshot inherits each entry that scopes one of its files. Files
+        # rewritten away (a replace, a compaction) leave an entry inert and
+        # it is dropped, exactly like sequence-number scoping in the
+        # Iceberg spec.
+        par = next((s for s in meta["snapshots"] if s["snapshot_id"] == parent), {})
+        live = {f["path"] for f in files}
+        inherited = [
+            dict(d) for d in par.get("delete_predicates", []) if live.intersection(d["files"])
+        ]
+        if inherited:
+            snapshot["delete_predicates"] = inherited
+        if snap_extra is not None:
+            snap_extra(snapshot)
         meta["schema"] = schema_ddl  # schema-wins-on-replace (SURVEY.md §1.3)
         if advance_current:
             meta["current_snapshot_id"] = snap_id
@@ -530,8 +488,11 @@ class Warehouse:
         types the read schema assumes. Spark's ``partitionBy`` strips each
         partition column from its files, so a copy is stored under
         :func:`_part_copy`'s name: the value the hive dir (and so the
-        manifest) records, a string ``''`` as NULL like the dir. Reads bind
-        it by field id like any column. One SQL projection does both."""
+        manifest) records. Reads bind it by field id like any column. A
+        string partition column is projected as ``nullif(c, '')``: the hive
+        writer sends ``''`` and NULL to one dir, and the repartition must
+        see them as one value too, or that dir gets a file from each. One
+        SQL projection does all of it."""
         tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self._table_dir(name), "data", tag)
         pcols = self._pcols(partition_by)
@@ -544,10 +505,12 @@ class Warehouse:
             c: _quote(c) if t == types[c] else f"CAST({_quote(c)} AS {_sql_type(types[c])})"
             for c, t in have.items()
         }
+        for c in pcols:
+            if isinstance(types[c], StringType):
+                exprs[c] = f"nullif({exprs[c]}, '')"
         df = df.selectExpr(
             *[f"{e} AS {_quote(c)}" for c, e in exprs.items()],
-            *[(f"nullif({exprs[c]}, '')" if isinstance(types[c], StringType) else exprs[c])
-              + f" AS {_quote(_part_copy(c))}" for c in pcols],
+            *[f"{exprs[c]} AS {_quote(_part_copy(c))}" for c in pcols],
         )
         if pcols and shuffle:
             # hash-repartition on the partition columns: each value lands in
@@ -787,9 +750,7 @@ class Warehouse:
             # each data file covers a tight key range — manifest min/max
             # stats then prune aggressively (tested: file-skip selectivity)
             df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        exists = os.path.exists(self._meta_path(name))
-        meta = self._load_meta(name) if exists else None
+        meta = self._load_meta(name) if self.exists(name) else None
         if meta is not None:
             self._check_spec_compat(meta, spec)
         parent = meta["current_snapshot_id"] if meta else None
@@ -799,26 +760,23 @@ class Warehouse:
             name, df, meta, parent, partition_by, shuffle=not cluster_by,
             conform=False,
         )
-        if meta is not None:
-            meta["partition_by"] = partition_by
-        snap = self._commit(
-            name, "replace", files, df.schema.json(), partition_by, parent, meta
-        )
-        meta = self._load_meta(name)
-        old_spec = meta.get("partition_spec")
-        if exists and old_spec != spec:
+        if meta is None:
+            meta = {"table": name, "format_version": 1, "snapshots": []}
+        elif meta.get("partition_spec") != spec:
             # spec lineage must survive replaces too: a later evolution /
             # export needs every transform a historical snapshot's files
             # were laid out under (the width-collision guard reads this)
             meta.setdefault("spec_history", []).append(
-                {"spec": old_spec, "until_snapshot_id": parent}
+                {"spec": meta.get("partition_spec"), "until_snapshot_id": parent}
             )
+        meta["partition_by"] = partition_by
         meta["partition_spec"] = spec
         # recorded for metadata consumers (Iceberg sort-order export): the
         # pre-write range+sort layout IS the table's declared sort order
         meta["sort_order"] = list(cluster_by) if cluster_by else None
-        self._store_meta(name, meta)
-        return snap
+        return self._commit(
+            name, "replace", files, df.schema.json(), partition_by, parent, meta
+        )
 
     def append(
         self,
@@ -828,6 +786,7 @@ class Warehouse:
         _parent: Optional[int] = None,
         _advance_current: bool = True,
         _delta_out: Optional[list] = None,
+        _snap_extra=None,
     ) -> dict:
         """Snapshot-append: new files + previous snapshot's files stay live.
         Hidden-partition transforms recorded at create time are re-applied to
@@ -846,7 +805,8 @@ class Warehouse:
         hooks for branch appends and WAP staging: the commit chains off an
         explicit parent and leaves ``current_snapshot_id`` untouched, so
         concurrent readers can never observe unpublished data through a
-        temporarily-redirected main pointer."""
+        temporarily-redirected main pointer. ``_snap_extra`` is
+        ``_commit``'s snapshot edit; it is applied on every retry."""
         meta = self._load_meta(name)
         spec = meta.get("partition_spec")
         if spec and any(
@@ -877,6 +837,7 @@ class Warehouse:
                     parent,
                     meta,
                     advance_current=_advance_current,
+                    snap_extra=_snap_extra,
                 )
             except CommitConflictError:
                 if attempt == retries - 1:
@@ -893,10 +854,19 @@ class Warehouse:
         (auditable, still time-travelable) but readers see the restored
         state. Metadata-only: no data files move or rewrite. The target's
         field ids come back with its schema (a column renamed since binds
-        its old files again); ``next_field_id`` stays monotonic."""
+        its old files again); ``next_field_id`` stays monotonic. So do the
+        target's merge-on-read delete entries, not the current snapshot's:
+        the restored state reads exactly as the target did."""
         meta = self._load_meta(name)
         target = self._snapshot(meta, snapshot_id)
         meta["fids"] = dict(target["fids"])
+        deletes = [dict(d) for d in target.get("delete_predicates", [])]
+
+        def restore_deletes(s: dict) -> None:
+            s.pop("delete_predicates", None)
+            if deletes:
+                s["delete_predicates"] = deletes
+
         return self._commit(
             name,
             "rollback",
@@ -905,6 +875,7 @@ class Warehouse:
             meta.get("partition_by"),
             meta["current_snapshot_id"],
             meta,
+            snap_extra=restore_deletes,
         )
 
     def cherry_pick(self, name: str, snapshot_id: int) -> dict:
@@ -1088,7 +1059,15 @@ class Warehouse:
         meta = self._load_meta(name)
         parent = meta["current_snapshot_id"]
         prev = self._snapshot(meta, parent)
-        snap = self._commit(
+        scope = [f["path"] for f in prev["manifest"]]
+
+        def add_entry(s: dict) -> None:
+            s.setdefault("delete_predicates", []).append(
+                {"predicate": predicate, "files": scope,
+                 "schema": s["schema"], "fids": s["fids"]}
+            )
+
+        return self._commit(
             name,
             "delete-mor",
             list(prev["manifest"]),
@@ -1096,34 +1075,22 @@ class Warehouse:
             meta.get("partition_by"),
             parent,
             meta,
+            snap_extra=add_entry,
         )
-        meta = self._load_meta(name)
-        s = self._snapshot(meta, snap["snapshot_id"])
-        s.setdefault("delete_predicates", []).append(
-            {"predicate": predicate, "files": [f["path"] for f in prev["manifest"]],
-             "schema": s["schema"], "fids": s["fids"]}
-        )
-        self._store_meta(name, meta)
-        snap["delete_predicates"] = list(s["delete_predicates"])
-        return snap
 
     def apply_deletes(self, name: str) -> dict:
         """Materialize outstanding merge-on-read deletes into data files
-        (the compaction that pays the MoR debt) and clear the entries."""
+        (the compaction that pays the MoR debt): a replace with the
+        delete-applied rows, whose new files no entry scopes, so none is
+        inherited."""
         meta = self._load_meta(name)
         cur = self._snapshot(meta, meta["current_snapshot_id"])
         if not cur.get("delete_predicates"):
             return cur
         materialized = self.read(name)  # delete-applied view
-        snap = self.create_or_replace(
+        return self.create_or_replace(
             name, materialized, partition_by=meta.get("partition_spec")
         )
-        meta = self._load_meta(name)
-        s = self._snapshot(meta, snap["snapshot_id"])
-        s.pop("delete_predicates", None)
-        self._store_meta(name, meta)
-        snap.pop("delete_predicates", None)
-        return snap
 
     def update_where(self, name: str, predicate: str, assignments: dict) -> dict:
         """Row-level UPDATE (copy-on-write): SET ``col = sql_expr`` on rows
@@ -1308,20 +1275,9 @@ class Warehouse:
         pointer stays on the parent — readers see NOTHING until `publish`.
         The staged snapshot is auditable via ``read(name, snapshot_id=...)``.
         """
-        snap = self.append(name, df, _advance_current=False)
-        for attempt in range(5):
-            meta = self._load_meta(name)
-            for s in meta["snapshots"]:
-                if s["snapshot_id"] == snap["snapshot_id"]:
-                    s["staged"] = True
-            try:
-                self._store_meta(name, meta)
-                break
-            except CommitConflictError:
-                if attempt == 4:
-                    raise
-        snap["staged"] = True
-        return snap
+        return self.append(
+            name, df, _advance_current=False, _snap_extra=lambda s: s.update(staged=True)
+        )
 
     def publish(self, name: str, snapshot_id: int) -> dict:
         """Write-Audit-Publish step 3: atomically advance the current pointer
@@ -1760,11 +1716,12 @@ class Warehouse:
     def remove_orphan_files(self, name: str, min_age_s: float = 0.0) -> int:
         """Iceberg ``remove_orphan_files``: delete data files under the table
         location that NO snapshot references — the debris of failed/aborted
-        writes (a task wrote its file, the commit never happened). Distinct
-        from ``expire_snapshots``, which GCs files of *known* dropped
-        snapshots; orphans are unknown to the metadata entirely, so the scan
-        is location-driven: walk the data dir, keep what any manifest
-        claims, remove the rest.
+        writes (a task wrote its file, the commit never happened) and the
+        metadata temp files of writers that died before their commit.
+        Distinct from ``expire_snapshots``, which GCs files of *known*
+        dropped snapshots; orphans are unknown to the metadata entirely, so
+        the scan is location-driven: walk the table dir, keep what any
+        manifest claims, remove the rest.
 
         ``min_age_s`` is Iceberg's ``older_than`` safety valve (its default
         is 3 DAYS): a concurrent writer's files are unreferenced between
@@ -1778,16 +1735,14 @@ class Warehouse:
             for f in s["manifest"]
         }
         removed = 0
-        data_root = os.path.join(self._table_dir(name), "data")
         cutoff = time.time() - min_age_s
-        for dirpath, _dirs, files in os.walk(data_root):
+        for dirpath, _dirs, files in os.walk(self._table_dir(name)):
             for fn in files:
                 path = os.path.join(dirpath, fn)
-                if (
-                    fn.endswith(".parquet")
-                    and os.path.realpath(path) not in live
-                    and os.path.getmtime(path) <= cutoff
-                ):
+                dead = fn.endswith(".tmp") or (
+                    fn.endswith(".parquet") and os.path.realpath(path) not in live
+                )
+                if dead and os.path.getmtime(path) <= cutoff:
                     os.remove(path)
                     removed += 1
         return removed

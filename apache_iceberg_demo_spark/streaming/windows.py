@@ -515,7 +515,7 @@ def b9_foreachbatch_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def upsert(batch_df: DataFrame, _batch_id: int) -> None:
         part = partial(batch_df)
-        if not os.path.exists(os.path.join(wh.root, t, "metadata.json")):
+        if not wh.exists(t):
             wh.create_or_replace(t, part)
             return
         cur = wh.read(t)

@@ -759,7 +759,7 @@ def test_missing_data_file_fails_loudly(spark, wh):
 def test_corrupt_metadata_fails_loudly(spark, wh):
     li = _lineitem(spark)
     wh.create_or_replace("t", li)
-    with open(wh._meta_path("t"), "w") as f:
+    with open(wh._meta_path("t", wh._load_meta("t")["commit_seq"]), "w") as f:
         f.write("{not json")
     with pytest.raises(Exception):
         wh.read("t")
@@ -973,19 +973,29 @@ def test_branch_append_rechains_on_rival_advance(spark, wh, monkeypatch):
     assert meta["current_snapshot_id"] == 1
 
 
-def test_stale_commit_lock_is_broken(spark, wh):
-    """A crashed writer's leaked lock file must not block commits forever:
-    locks older than the staleness horizon are broken and the commit
-    proceeds."""
+def test_crashed_writer_never_blocks_a_commit(spark, wh):
+    """A writer that died mid-commit leaves a temp file, or a version below
+    the current one that it never cleaned up. Neither is a lock: the next
+    commit lands, and the older version goes in its cleanup."""
+    import shutil as _shutil
+
     li = _lineitem(spark).select("l_orderkey", "l_quantity")
     wh.create_or_replace("t", li.filter(F.col("l_orderkey") % 2 == 0))
-    lock = wh._meta_path("t") + ".lock"
-    open(lock, "w").close()
-    old = __import__("time").time() - 120
-    os.utime(lock, (old, old))
+    wh.append("t", li.filter(F.col("l_orderkey") % 3 == 0))
+    assert wh._versions("t") == [2]
+    _shutil.copy(wh._meta_path("t", 2), wh._meta_path("t", 1))
+    tmp = wh._meta_path("t", 3) + ".crashed.tmp"
+    open(tmp, "w").close()
     snap = wh.append("t", li.filter(F.col("l_orderkey") % 2 == 1))
     assert snap["operation"] == "append"
-    assert not os.path.exists(lock)
+    assert wh._versions("t") == [3]
+    want = li.filter(F.col("l_orderkey") % 2 == 0).count() + sum(
+        li.filter(F.col("l_orderkey") % m == r).count() for m, r in ((3, 0), (2, 1))
+    )
+    assert wh.read("t").count() == want
+    # orphan cleanup removes the crashed writer's temp file
+    assert wh.remove_orphan_files("t") == 1
+    assert not os.path.exists(tmp)
 
 
 def test_branch_and_stage_never_expose_unpublished_state(spark, wh, monkeypatch):
@@ -1018,6 +1028,100 @@ def test_branch_and_stage_never_expose_unpublished_state(spark, wh, monkeypatch)
     )
     # and main still reads only its own rows
     assert wh.read("t").count() == li.filter(F.col("l_orderkey") % 2 == 0).count()
+
+
+@pytest.mark.parametrize("op", ["create", "replace", "delete_mor", "stage", "apply_deletes"])
+def test_mutator_stores_metadata_once(spark, wh, monkeypatch, op):
+    """Each of these mutators is one commit: one ``_store_meta``, so no
+    intermediate version is ever published without the operation's own
+    fields (a delete entry, the staged flag, the spec)."""
+    li = _lineitem(spark).select("l_orderkey", "l_quantity")
+    if op != "create":
+        wh.create_or_replace("t", li.limit(100))
+    if op == "apply_deletes":
+        wh.delete_where_mor("t", "l_orderkey % 2 = 0")
+    stores = []
+    real_store = Warehouse._store_meta
+
+    def counting_store(self, name, meta):
+        stores.append(meta["current_snapshot_id"])
+        return real_store(self, name, meta)
+
+    monkeypatch.setattr(Warehouse, "_store_meta", counting_store)
+    if op in ("create", "replace"):
+        wh.create_or_replace("t", li.limit(50), partition_by="l_quantity")
+    elif op == "delete_mor":
+        snap = wh.delete_where_mor("t", "l_quantity > 10")
+        assert [d["predicate"] for d in snap["delete_predicates"]] == ["l_quantity > 10"]
+    elif op == "stage":
+        assert wh.stage_append("t", li.limit(10))["staged"] is True
+    else:
+        assert "delete_predicates" not in wh.apply_deletes("t")
+    monkeypatch.undo()
+    assert len(stores) == 1, stores
+    meta = wh._load_meta("t")
+    if op in ("create", "replace"):
+        assert meta["partition_spec"] == "l_quantity"
+    if op == "stage":
+        assert meta["snapshots"][-1]["staged"] is True
+
+
+def test_mor_delete_never_half_commits(spark, wh, monkeypatch):
+    """A rival append lands between ``delete_where_mor``'s load and the
+    store of its delete entry. Either the delete commits with its entry,
+    or it raises CommitConflictError and no ``delete-mor`` snapshot is in
+    the log: a snapshot that deleted nothing would read differently once
+    its entry landed."""
+    from apache_iceberg_demo_spark.sources.warehouse import CommitConflictError
+
+    li = _lineitem(spark).select("l_orderkey", "l_quantity")
+    wh.create_or_replace("t", li.filter(F.col("l_orderkey") % 2 == 0))
+    rival = Warehouse(spark, wh.root)
+    real_store = Warehouse._store_meta
+    fired = []
+
+    def racing_store(self, name, meta):
+        carries_entry = any(
+            s["operation"] == "delete-mor" and s.get("delete_predicates")
+            for s in meta["snapshots"]
+        )
+        if self is wh and carries_entry and not fired:
+            fired.append(True)
+            rival.append(name, li.filter(F.col("l_orderkey") % 2 == 1))
+        return real_store(self, name, meta)
+
+    monkeypatch.setattr(Warehouse, "_store_meta", racing_store)
+    try:
+        snap = wh.delete_where_mor("t", "l_quantity > 10")
+    except CommitConflictError:
+        snap = None
+    monkeypatch.undo()
+
+    assert fired
+    snaps = wh._load_meta("t")["snapshots"]
+    mor = [s for s in snaps if s["operation"] == "delete-mor"]
+    if snap is None:
+        assert mor == [], "a delete-mor snapshot without its entry is in the log"
+        assert wh.read("t").count() == li.count()
+    else:
+        assert [s["snapshot_id"] for s in mor] == [snap["snapshot_id"]]
+        assert mor[0]["delete_predicates"][0]["predicate"] == "l_quantity > 10"
+
+
+def test_rollback_restores_the_targets_deletes(spark, wh):
+    """A rollback reads as its target did, merge-on-read deletes included:
+    back to a snapshot after a delete the rows stay deleted (even across a
+    replace, whose new files inherit no delete entry), and back to one
+    before it they return."""
+    df = spark.createDataFrame([(i, i * 10) for i in range(1, 7)], "k int, v int")
+    wh.create_or_replace("t", df)  # 1
+    wh.delete_where_mor("t", "k <= 2")  # 2
+    wh.create_or_replace("t", df.filter("k > 4"))  # 3
+    assert "delete_predicates" not in wh._snapshot(wh._load_meta("t"), 3)
+    wh.rollback_to("t", 2)
+    assert sorted(r.k for r in wh.read("t").collect()) == [3, 4, 5, 6]
+    wh.rollback_to("t", 1)
+    assert sorted(r.k for r in wh.read("t").collect()) == [1, 2, 3, 4, 5, 6]
 
 
 def test_expire_commits_metadata_before_deleting_files(spark, wh, monkeypatch):
@@ -1064,119 +1168,156 @@ def test_orphan_removal_age_guard_spares_fresh_files(spark, wh):
     assert not os.path.exists(fresh)
 
 
-def test_lock_break_restore_never_clobbers_fresh_lock(spark, wh, monkeypatch):
-    """Three-way race (VERDICT r08 item 3): breaker B judged a lock stale,
-    renamed it away — but it was actually fresh acquirer C's lock (another
-    breaker had already removed the stale one), and while B noticed the
-    inode mismatch a THIRD writer D grabbed the vacated path. B's restore
-    must NOT replace D's lock: POSIX rename silently clobbers (the old
-    bug, demonstrated below); os.link fails loudly and leaves D alone."""
-    import uuid as _uuid
+def test_two_writers_at_one_version_exactly_one_commits(spark, wh):
+    """Two writers loaded at version N: the exclusive create lets exactly
+    one of them commit N+1; the other gets CommitConflictError, reloads,
+    and commits N+2 over it, so neither update is lost."""
+    from apache_iceberg_demo_spark.sources.warehouse import CommitConflictError
 
     li = _lineitem(spark).select("l_orderkey", "l_quantity")
     wh.create_or_replace("t", li.limit(10))
-    lock = wh._meta_path("t") + ".lock"
-
-    # the observation that judged the (long-gone) original lock stale
-    dummy = lock + ".gone"
-    open(dummy, "w").close()
-    st_old = os.stat(dummy)
-    os.unlink(dummy)
-
-    # fresh acquirer C holds the path when B's rename lands
-    open(lock, "w").close()
-
-    d_ino = []
-    real_rename = os.rename
-
-    def rename_then_d_acquires(src, dst):
-        real_rename(src, dst)
-        if ".broken-" in dst and not d_ino:
-            # writer D wins the vacated path in B's mismatch window
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            d_ino.append(os.fstat(fd).st_ino)
-            os.close(fd)
-
-    monkeypatch.setattr(os, "rename", rename_then_d_acquires)
-    wh._break_stale_lock(lock, st_old)
-    monkeypatch.undo()
-
-    assert d_ino, "interleave did not fire"
-    assert os.stat(lock).st_ino == d_ino[0], "D's fresh lock was clobbered"
-    assert not [
-        f for f in os.listdir(os.path.dirname(lock)) if ".broken-" in f
-    ], "broken temp file leaked"
-
-    # the OLD restore primitive (os.rename) demonstrably clobbers: same
-    # fixture, rename instead of link — D2's lock is silently replaced
-    broken2 = lock + f".broken-{_uuid.uuid4().hex}"
-    open(broken2, "w").close()
-    os.unlink(lock)
-    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    d2_ino = os.fstat(fd).st_ino
-    os.close(fd)
-    real_rename(broken2, lock)  # old code path: silent replace
-    assert os.stat(lock).st_ino != d2_ino, (
-        "rename no longer clobbers?? POSIX changed"
-    )
-    os.unlink(lock)
-
-
-def test_fence_aborts_commit_when_lock_stolen(spark, wh, monkeypatch):
-    """Holder-side fencing token (VERDICT r08 item 3): if the holder's lock
-    is stolen between acquisition and the metadata replace (breaker broke
-    it as 'stale', a rival re-acquired), the holder must raise
-    CommitConflictError and leave the on-disk metadata AND the thief's
-    lock untouched — a lock steal becomes a safe retry, never a lost
-    update past the commit_seq CAS."""
-    import json as _json
-
-    from apache_iceberg_demo_spark.sources.warehouse import (
-        CommitConflictError,
-    )
-
-    li = _lineitem(spark).select("l_orderkey", "l_quantity")
-    wh.create_or_replace("t", li.limit(10))
-    meta_path = wh._meta_path("t")
-    lock = meta_path + ".lock"
-    before = open(meta_path).read()
-
-    thief_ino = []
-    real_dump = _json.dump
-
-    def dump_then_steal(obj, f, **kw):
-        real_dump(obj, f, **kw)
-        # between the holder's tmp write and its fence check: a breaker
-        # removes the holder's lock and a rival acquires a fresh one
-        if not thief_ino and os.path.exists(lock):
-            os.unlink(lock)
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            thief_ino.append(os.fstat(fd).st_ino)
-            os.close(fd)
-
+    a, b = wh._load_meta("t"), wh._load_meta("t")
+    assert a["commit_seq"] == b["commit_seq"] == 1
+    a.setdefault("refs", {})["a"] = 1
+    b.setdefault("refs", {})["b"] = 1
+    wh._store_meta("t", a)
+    with pytest.raises(CommitConflictError):
+        wh._store_meta("t", b)
+    assert b["commit_seq"] == 1, "a failed store moved the writer's base"
+    assert wh._versions("t") == [2]
+    assert wh._load_meta("t")["refs"] == {"a": 1}
+    b = wh._load_meta("t")
+    b["refs"]["b"] = 1
+    wh._store_meta("t", b)
     meta = wh._load_meta("t")
-    meta["properties"] = {"x": "1"}
-    monkeypatch.setattr(_json, "dump", dump_then_steal)
-    with pytest.raises(CommitConflictError, match="stolen"):
-        wh._store_meta("t", meta)
+    assert meta["commit_seq"] == 3 and meta["refs"] == {"a": 1, "b": 1}
+    assert sorted(os.listdir(os.path.dirname(wh._meta_path("t", 3)))) == [
+        "v3.metadata.json"
+    ]
+
+
+def test_stale_writer_over_a_cleaned_up_version_conflicts(spark, wh):
+    """Cleanup frees the names of old versions, so a writer loaded two
+    commits ago can create its target again. The listing after the create
+    sees a newer version that does not descend from it: the writer's file
+    goes and the commit conflicts, leaving the current version as it was."""
+    from apache_iceberg_demo_spark.sources.warehouse import CommitConflictError
+
+    li = _lineitem(spark).select("l_orderkey", "l_quantity")
+    wh.create_or_replace("t", li.filter(F.col("l_orderkey") % 2 == 0))
+    stale = wh._load_meta("t")
+    wh.append("t", li.filter(F.col("l_orderkey") % 4 == 1))
+    wh.append("t", li.filter(F.col("l_orderkey") % 4 == 3))
+    assert wh._versions("t") == [3]
+    before = open(wh._meta_path("t", 3)).read()
+    stale.setdefault("refs", {})["stale"] = 1
+    with pytest.raises(CommitConflictError):
+        wh._store_meta("t", stale)
+    assert wh._versions("t") == [3]
+    assert open(wh._meta_path("t", 3)).read() == before
+    assert wh.read("t").count() == li.count()
+
+
+def test_commit_built_on_before_its_check_still_lands(spark, wh, monkeypatch):
+    """A rival may load a writer's new version and commit on top of it
+    before the writer lists the directory. The writer's commit is then
+    part of the table: it must not report a conflict, or the append retry
+    would add its files a second time."""
+    from apache_iceberg_demo_spark.sources.warehouse import _content_hash
+
+    li = _lineitem(spark).select("l_orderkey", "l_quantity")
+    base = li.filter(F.col("l_orderkey") % 3 == 0)
+    batch_a = li.filter(F.col("l_orderkey") % 3 == 1)
+    batch_b = li.filter(F.col("l_orderkey") % 3 == 2)
+    wh.create_or_replace("t", base)
+    rival = Warehouse(spark, wh.root)
+    real_link = os.link
+    fired = []
+
+    def link_then_rival_commits(src, dst):
+        real_link(src, dst)
+        if not fired:
+            fired.append(dst)
+            rival.append("t", batch_a)
+
+    monkeypatch.setattr(os, "link", link_then_rival_commits)
+    snap = wh.append("t", batch_b)
     monkeypatch.undo()
 
-    assert thief_ino, "steal interleave did not fire"
-    assert open(meta_path).read() == before, "fenced commit still landed"
-    assert os.stat(lock).st_ino == thief_ino[0], (
-        "holder's release destroyed the thief's lock"
+    assert fired and fired[0].endswith("v2.metadata.json")
+    meta = wh._load_meta("t")
+    assert meta["commit_seq"] == 3 and wh._versions("t") == [3]
+    assert [s["operation"] for s in meta["snapshots"]] == ["replace", "append", "append"]
+    assert meta["snapshots"][1]["snapshot_id"] == snap["snapshot_id"]
+    assert _content_hash(wh.read("t")) == _content_hash(
+        base.unionByName(batch_b).unionByName(batch_a)
     )
-    assert not [
-        f
-        for f in os.listdir(os.path.dirname(meta_path))
-        if ".tmp-" in f
-    ], "tmp file leaked on the fence path"
-    os.unlink(lock)
-    # the aborted writer retries cleanly after a fresh load
-    meta2 = wh._load_meta("t")
-    meta2["properties"] = {"x": "2"}
-    wh._store_meta("t", meta2)
-    assert wh._load_meta("t")["properties"] == {"x": "2"}
+
+
+def test_commit_protocol_stress_every_update_lands_once(tmp_path):
+    """Metadata-only read-modify-write commits from more threads than
+    cores, with a short switch interval: each increment lands exactly
+    once. A lost update reads low; a commit reported as a conflict after
+    it landed is retried and reads high."""
+    import sys
+    import threading
+
+    from apache_iceberg_demo_spark.sources.warehouse import CommitConflictError
+
+    wh = Warehouse(None, str(tmp_path / "wh"))
+    wh._store_meta("t", {"n": 0})
+    n_threads, per_thread = 8, 25
+
+    def writer():
+        for _ in range(per_thread):
+            while True:
+                meta = wh._load_meta("t")
+                meta["n"] += 1
+                try:
+                    wh._store_meta("t", meta)
+                    break
+                except CommitConflictError:
+                    continue
+
+    threads = [threading.Thread(target=writer) for _ in range(n_threads)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t_ in threads:
+            t_.start()
+        for t_ in threads:
+            t_.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t_.is_alive() for t_ in threads)
+    total = n_threads * per_thread
+    assert wh._load_meta("t")["n"] == total
+    assert wh._versions("t") == [total + 1]
+
+
+def test_reader_whose_version_is_removed_rereads(spark, wh, monkeypatch):
+    """A reader lists the directory, then a commit removes the version it
+    chose before the open: the load lists again and returns the rows of
+    the version that replaced it."""
+    li = _lineitem(spark).select("l_orderkey", "l_quantity")
+    wh.create_or_replace("t", li.filter(F.col("l_orderkey") % 2 == 0))
+    rival = Warehouse(spark, wh.root)
+    real_versions = Warehouse._versions
+    fired = []
+
+    def list_then_rival_commits(self, name):
+        listed = real_versions(self, name)
+        if self is wh and not fired:
+            fired.append(listed)
+            rival.append(name, li.filter(F.col("l_orderkey") % 2 == 1))
+        return listed
+
+    monkeypatch.setattr(Warehouse, "_versions", list_then_rival_commits)
+    got = wh.read("t").count()
+    monkeypatch.undo()
+
+    assert fired == [[1]] and wh._versions("t") == [2]
+    assert got == li.count()
 
 
 def test_branch_rechain_survives_expired_old_head(spark, wh, monkeypatch):
@@ -1699,6 +1840,13 @@ def test_partition_copy_holds_the_manifest_value(spark, wh, ddl, values):
     for stored, manifest in pairs:
         assert stored == {manifest}
     assert {r.k: repr(r.c) for r in wh.read("t").collect()} == want
+    # one file per partition dir: '' and NULL share a dir, and a writer
+    meta = wh._load_meta("t")
+    dirs = [
+        os.path.dirname(f["path"])
+        for f in wh._snapshot(meta, meta["current_snapshot_id"])["manifest"]
+    ]
+    assert len(dirs) == len(set(dirs)), sorted(dirs)
 
 
 def test_partition_copy_binds_after_rename_and_spec_evolution(spark, tmp_path, wh):
