@@ -9,11 +9,6 @@ are deduplicated" and "docs are packed": exact repeated-span detection
 public paper; the reference's own dedup story stops at whole-file Iceberg
 snapshots), per-domain volume caps, and per-source distribution monitoring.
 
-This module is imported LAST by ``registry.load_all`` on purpose: its
-entries rank after every previously-registered driver-unverified query, so
-adding surface here never displaces the queries the round-5 driver budget
-was sequenced to verify (registry.py::_reorder).
-
 Scale notes are per-operator; none of these collects to the driver.
 """
 

@@ -18,11 +18,6 @@ one Iceberg table (``/root/reference/README.md:85-211``); these operators
 are the engine-side capabilities a user would reach for next when that
 table feeds a training pipeline.
 
-This module is imported LAST by ``registry.load_all`` (after corpus.py):
-its entries rank behind every previously-registered driver-unverified
-query, so adding surface here never displaces the ordering the round-5
-driver budget was sequenced against (registry.py::_reorder).
-
 Scale notes are per-operator; none of these collects to the driver.
 """
 

@@ -6,10 +6,6 @@ distributed pair-counting core of BPE tokenizer training.
 Reference basis: the reference demo's query surface is engine-portable SQL
 over shared files (``/root/reference/README.md:85-211``); every oracle here
 is plain ANSI SQL DuckDB runs on the same parquet.
-
-This module is imported LAST by ``registry.load_all`` (after roundout) so
-its entries append after every previously-registered driver-unverified query
-and never displace the driver-budget sequencing (registry._reorder).
 """
 
 from __future__ import annotations

@@ -15,10 +15,6 @@ Reference basis: the reference demo's query surface is engine-portable SQL
 over shared files (``/root/reference/README.md:85-211``); these entries keep
 that property — every oracle is plain ANSI SQL DuckDB runs on the same
 parquet.
-
-This module is imported LAST by ``registry.load_all`` (after corpus/mlprep)
-so its entries append after every previously-registered driver-unverified
-query and never displace the driver-budget sequencing (registry._reorder).
 """
 
 from __future__ import annotations

@@ -38,6 +38,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
     cpus = default_parallelism()
+    # The driver heap defaults to half the host's memory, at most 48g: a JVM
+    # allowed more than the host has grows past it and is OOM-killed mid-run.
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(48, host_gb // 2))}g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -47,7 +51,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # runtime bloom-filter join pruning: a selective dimension filter

@@ -13,8 +13,9 @@ the driver; fix it (DECIMAL or fixed-point partials) before the driver
 finds it.
 
 Run: timeout 3600 python tools/determinism_probe.py [sf_dir] [name1 ...]
-Default query set: every oracle-paired query not yet in _DRIVER_VERIFIED
-(the ones whose first driver hash check is still ahead of them).
+Default query set: the oracle-paired queries in the middle tier of
+registry.driver_order (the ones whose first driver hash check is still
+ahead of them).
 Prints one line per query; exit 1 on any layout-sensitive result.
 """
 
@@ -74,11 +75,8 @@ def main() -> int:
             print(f"unknown query names: {unknown}")
             return 1
     else:
-        names = [
-            n
-            for n in registry.QUERIES
-            if n in registry.ORACLES and n not in registry._DRIVER_VERIFIED
-        ]
+        _, unchecked = registry.driver_order(registry.QUERIES, registry.ORACLES)
+        names = [n for n in unchecked if n in registry.ORACLES]
 
     results: dict[str, list] = {n: [] for n in names}
     errors: dict[str, str] = {}
