@@ -129,18 +129,20 @@ def driver_order(
     Without any such file every query outside ``_HEAD`` is in tier 2. A
     malformed file raises."""
     last: dict[str, int] = {}  # round of each query's green latest row
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")), key=_round_of):
+    paths = glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
+    for path in sorted(paths, key=_round_of):
         with open(path) as f:
             rows = json.load(f)
         for name, row in rows.items():
-            if row["hash_match"] is True or (
-                name not in paired and row["err"] == "no_oracle" and row["spark_rows"] >= 0
-            ):
+            rows_only = row["err"] == "no_oracle" and row["spark_rows"] >= 0
+            if row["hash_match"] is True or (rows_only and name not in paired):
                 last[name] = _round_of(path)
             else:
                 last.pop(name, None)
     rest = [n for n in names if n not in _HEAD]
-    unchecked = sorted((n for n in rest if n not in last), key=lambda n: (n not in paired, n))
+    unchecked = sorted(
+        (n for n in rest if n not in last), key=lambda n: (n not in paired, n)
+    )
     checked = sorted((n for n in rest if n in last), key=lambda n: (last[n], n))
     return [n for n in _HEAD if n in names] + unchecked + checked, unchecked
 

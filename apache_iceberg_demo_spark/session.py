@@ -41,7 +41,9 @@ def get_spark(
     # The driver heap defaults to half the host's memory, at most 48g: a JVM
     # allowed more than the host has grows past it and is OOM-killed mid-run.
     host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(48, host_gb // 2))}g")
+    driver_mem = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(48, host_gb // 2))}g"
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -34,7 +34,9 @@ def test_red_latest_row_needs_a_check(tmp_path):
 
 def test_rows_only_green_counts_only_without_an_oracle(tmp_path):
     _write(tmp_path, "01", {"q_paired": ROWS_ONLY, "q_plain": ROWS_ONLY})
-    order, unchecked = registry.driver_order(["q_plain", "q_paired"], {"q_paired"}, str(tmp_path))
+    order, unchecked = registry.driver_order(
+        ["q_plain", "q_paired"], {"q_paired"}, str(tmp_path)
+    )
     assert unchecked == ["q_paired"]
     assert order == ["q_paired", "q_plain"]
 
@@ -42,20 +44,26 @@ def test_rows_only_green_counts_only_without_an_oracle(tmp_path):
 def test_older_rounds_first_then_by_name(tmp_path):
     _write(tmp_path, "2", {"q_z": GREEN, "q_c": GREEN})
     _write(tmp_path, "10", {"q_a": GREEN, "q_b": GREEN, "q_c": GREEN})
-    order, unchecked = registry.driver_order(["q_a", "q_b", "q_c", "q_z"], set(), str(tmp_path))
+    order, unchecked = registry.driver_order(
+        ["q_a", "q_b", "q_c", "q_z"], set(), str(tmp_path)
+    )
     assert unchecked == []
     assert order == ["q_z", "q_a", "q_b", "q_c"]
 
 
 def test_head_leads_whatever_the_record(tmp_path):
     _write(tmp_path, "01", {_HEAD[1]: RED, _HEAD[0]: GREEN})
-    order, unchecked = registry.driver_order(["q_new", _HEAD[1], _HEAD[0]], set(), str(tmp_path))
+    order, unchecked = registry.driver_order(
+        ["q_new", _HEAD[1], _HEAD[0]], set(), str(tmp_path)
+    )
     assert order == [_HEAD[0], _HEAD[1], "q_new"]
     assert unchecked == ["q_new"]
 
 
 def test_no_record_puts_everyone_in_the_unchecked_tier(tmp_path):
-    order, unchecked = registry.driver_order(["q_c", "q_b", "q_a"], {"q_c"}, str(tmp_path))
+    order, unchecked = registry.driver_order(
+        ["q_c", "q_b", "q_a"], {"q_c"}, str(tmp_path)
+    )
     assert unchecked == order == ["q_c", "q_a", "q_b"]
 
 
@@ -79,7 +87,8 @@ def test_repo_order_is_head_then_stalest_green():
         rnd = int(os.path.basename(path)[len("CORRECTNESS_r") : -len(".json")])
         with open(path) as f:
             for name, row in json.load(f).items():
-                if row["hash_match"] or (row["err"] == "no_oracle" and row["spark_rows"] >= 0):
+                rows_only = row["err"] == "no_oracle" and row["spark_rows"] >= 0
+                if row["hash_match"] or rows_only:
                     last[name] = max(rnd, last.get(name, 0))
     rest = qs[len(_HEAD) :]
     fresh = [n for n in rest if n not in last]
