@@ -75,6 +75,11 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _sql_str(value: str) -> str:
+    """A string as a Spark SQL literal (``\\`` is the parser's escape)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _sql_type(t) -> str:
     """A Spark SQL type string; nested field names come out quoted (one
     JVM round trip, which ``simpleString`` avoids but cannot quote)."""
@@ -1414,15 +1419,15 @@ class Warehouse:
         evolution is ONE FileScan. A merge-on-read delete binds its names
         through the ``schema`` and ``fids`` it was recorded with; one whose
         scope covers every scanned file applies as ``NOT coalesce(pred,
-        false)``, and only a delete scoping some of them attaches a flag
-        per file (``iceberg_v2.attach_file_constants``), applying as
-        ``NOT (__del_i AND coalesce(pred_i, false))``. ``removed=True``
-        returns the deleted rows instead, with ``__file`` (URI-quoted) and
-        ``__pos``.
+        false)``, and one scoping some of them as ``NOT (__file IN (scope)
+        AND coalesce(pred, false))`` on the scan's file key, its scope
+        paths URI-quoted as ``_metadata.file_path`` renders them: a filter,
+        no join. ``removed=True`` returns the deleted rows instead, with
+        ``__file`` (URI-quoted) and ``__pos``.
         """
         from apache_iceberg_demo_spark.sources.iceberg_v2 import (
             FILE_KEY_SQL,
-            attach_file_constants,
+            _uri_path_quote,
             scan_parquet_files,
         )
 
@@ -1437,13 +1442,14 @@ class Warehouse:
         # delete predicate names that no declared column carries
         cols = [(x.name, x.dataType, snap["fids"][x.name]) for x in declared.fields]
         by_fid = {fid: c for c, _, fid in cols}
-        # (predicate, {predicate name: column}, scope, or None for a scope
-        # covering every scanned file)
+        paths = [os.path.abspath(self._abs_path(name, f["path"])) for f in files]
+        # (predicate, {predicate name: column}, the scanned paths in scope,
+        # or None for a scope covering every scanned file)
         scoped = []
         for d in deletes:
             scope = set(d["files"])
-            n_in = sum(f["path"] in scope for f in files)
-            if not n_in:
+            in_scope = [p for p, f in zip(paths, files) if f["path"] in scope]
+            if not in_scope:
                 continue
             names = {}
             for x in self._declared_schema(d).fields:
@@ -1452,15 +1458,15 @@ class Warehouse:
                     by_fid[fid] = f"__field_{fid}"
                     cols.append((by_fid[fid], x.dataType, fid))
                 names[x.name] = by_fid[fid]
-            scoped.append((d["predicate"], names, None if n_in == len(files) else scope))
-        partial = {i: s for i, (_, _, s) in enumerate(scoped) if s is not None}
+            if len(in_scope) == len(files):
+                in_scope = None
+            scoped.append((d["predicate"], names, in_scope))
         types = {c: t for c, t, _ in cols}
         # Every column goes under a hidden name until the last projection,
         # so each delete predicate can see its own names beside them. A
         # column a file does not hold binds to its hidden name, which no
         # file holds either: the parquet scan reads it as a typed NULL.
         hidden = {c: f"__v{j}" for j, c in enumerate(types)}
-        paths = [os.path.abspath(self._abs_path(name, f["path"])) for f in files]
         groups: dict[tuple, list[str]] = {}
         for path, f in zip(paths, files):
             inv = {fid: c for c, fid in f["fids"].items()}
@@ -1469,7 +1475,7 @@ class Warehouse:
         # The projections are SQL strings: each Column-API call is several
         # Py4J round trips, and a 16-column read with one delete made ~1,600
         # of them before its first job.
-        with_file = bool(partial) or removed
+        with_file = removed or any(s is not None for _, _, s in scoped)
         df = None
         for key, group in groups.items():
             part = scan_parquet_files(
@@ -1481,17 +1487,11 @@ class Warehouse:
                 *(["_metadata.row_index AS __pos"] if removed else []),
             )
             df = part if df is None else df.unionByName(part)
-        if partial:
-            df = attach_file_constants(
-                self.spark, df,
-                [(path, *[f["path"] in s for s in partial.values()])
-                 for path, f in zip(paths, files)],
-                ", ".join(f"`__del_{i}` boolean" for i in partial),
-            )
-        for i, (pred, names, _) in enumerate(scoped):
+        for pred, names, in_scope in scoped:
             hit = f"coalesce(({pred}), false)"
-            if i in partial:
-                hit = f"__del_{i} AND {hit}"
+            if in_scope is not None:
+                keys = ", ".join(_sql_str(_uri_path_quote(p)) for p in in_scope)
+                hit = f"__file IN ({keys}) AND {hit}"
             df = df.selectExpr(
                 "*", *[f"{hidden[c]} AS {_quote(n)}" for n, c in names.items()]
             ).filter(hit if removed else f"NOT ({hit})").drop(*names)

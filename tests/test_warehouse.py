@@ -1758,20 +1758,20 @@ def _broadcasts(df) -> int:
 
 
 def test_partitioned_read_needs_no_join(spark, wh):
-    """Partition values come from each file's stored copy, so a partitioned
-    table reads through one FileScan with no broadcast join, and a
-    merge-on-read delete whose scope covers every scanned file is a plain
-    filter. Only a delete scoping some of the scanned files attaches its
-    per-file flag through the join."""
+    """Partition values come from each file's stored copy and a
+    merge-on-read delete applies as a filter, so a partitioned table reads
+    through one FileScan with no broadcast join at every step: before the
+    delete, under a delete scoping every scanned file, and under one
+    scoping only some of them (a filter on the scan's file key)."""
     def batch(lo: int, n: int = 8):
         return spark.createDataFrame(
             [(i, i % 4, i * 10) for i in range(lo, lo + n)],
             "id bigint, p int, v bigint",
         )
 
-    def check(n_broadcasts: int) -> None:
+    def check() -> None:
         for k, df in [(None, wh.read("t")), (1, wh.read("t", where="p = 1"))]:
-            assert _file_scans(df) == 1 and _broadcasts(df) == n_broadcasts
+            assert _file_scans(df) == 1 and _broadcasts(df) == 0
             want = {i: v for i, v in model.items() if k is None or i % 4 == k}
             assert dict((r.id, r.v) for r in df.collect()) == want
 
@@ -1780,18 +1780,65 @@ def test_partitioned_read_needs_no_join(spark, wh):
     for c in (1, 2):
         wh.append("t", batch(c * 8))
         model.update({i: i * 10 for i in range(c * 8, c * 8 + 8)})
-    check(0)
+    check()
     wh.delete_where_mor("t", "id % 3 = 0")
     model = {i: v for i, v in model.items() if i % 3}
-    check(0)
+    check()
     wh.append("t", batch(24))
     model.update({i: i * 10 for i in range(24, 32)})
-    check(1)
-    # a where that prunes to the new files alone drops the delete again
+    check()
+    # a where that prunes to the new files alone drops the delete
     df = wh.read("t", where="id >= 24")
-    assert _broadcasts(df) == 0 and sorted(r.id for r in df.collect()) == list(
-        range(24, 32)
+    assert _file_scans(df) == 1 and _broadcasts(df) == 0
+    assert sorted(r.id for r in df.collect()) == list(range(24, 32))
+
+
+def test_partial_delete_scope_matches_special_char_paths(spark, tmp_path, wh):
+    """A merge-on-read delete scoping only some files matches them by their
+    ``_metadata.file_path``, which URI-quotes the hive-escaped partition
+    dirs. A scope path that did not match would silently keep deleted rows;
+    a filter that matched too much would drop rows appended after the
+    delete. The native read, a pruned read and the v2 export's position
+    deletes all agree with a row model."""
+    from apache_iceberg_demo_spark.sources.iceberg_v2 import (
+        export_iceberg_v2,
+        read_iceberg_v2,
     )
+
+    values = ["a b", "it's", "back\\slash", "50%", "x#y", "k=v", "é:ü",
+              "''", "", None]
+
+    def batch(lo: int):
+        return spark.createDataFrame(
+            [(i, values[i % len(values)], i * 10) for i in range(lo, lo + 20)],
+            "id bigint, c string, v bigint",
+        )
+
+    # '' and NULL share the hive default dir: both read back NULL
+    model = {i: (None if c == "" else c, v) for i, c, v in
+             ((i, values[i % len(values)], i * 10) for i in range(20))}
+    wh.create_or_replace("t", batch(0), partition_by="c")
+    wh.delete_where_mor("t", "id % 3 = 0")
+    model = {i: r for i, r in model.items() if i % 3}
+    wh.append("t", batch(20))
+    model.update({i: (None if c == "" else c, v) for i, c, v in
+                  ((i, values[i % len(values)], i * 10) for i in range(20, 40))})
+
+    def rows(df) -> dict:
+        return {r.id: (r.c, r.v) for r in df.collect()}
+
+    df = wh.read("t")
+    assert _file_scans(df) == 1 and _broadcasts(df) == 0
+    assert rows(df) == model
+    for w, keep in [
+        ("c IS NOT NULL", lambda i, c: c is not None),
+        ("id < 30", lambda i, c: i < 30),
+    ]:
+        df = wh.read("t", where=w)
+        assert _broadcasts(df) == 0
+        assert rows(df) == {i: r for i, r in model.items() if keep(i, r[0])}
+    loc = export_iceberg_v2(wh, "t", str(tmp_path / "ice"))
+    assert rows(read_iceberg_v2(spark, loc)) == model
 
 
 def _copies_and_manifest(spark, wh, table: str, col: str) -> list:
