@@ -885,22 +885,23 @@ def scan_parquet_files(
         return reader.parquet(*paths)
 
 
-#: the join key of :func:`attach_file_constants` as a scan projection: the
-#: row's ``_metadata.file_path`` with Hadoop's ``file:/`` prefix stripped
+#: a row's data file as a scan projection: its ``_metadata.file_path`` with
+#: Hadoop's ``file:/`` prefix stripped. :func:`attach_file_constants` joins
+#: on it; the native read filters a partially scoped delete on it.
 FILE_KEY_SQL = "regexp_replace(_metadata.file_path, '^file:/+', '/') AS __file"
 
 
 def attach_file_constants(
     spark: SparkSession, df: DataFrame, rows: list, ddl: str
 ) -> DataFrame:
-    """Attach per-file constants to scanned rows: ``read_iceberg_v2``'s
-    partition values and sequence numbers, and the native read's flags for
-    a merge-on-read delete that scopes only some of its files (native
-    partition values live in the files). ``rows`` holds ``(plain local
-    path, *constants)`` per data file, typed by ``ddl``. The
-    one-row-per-file mapping is broadcast-joined on the frame's
-    ``__file`` (:data:`FILE_KEY_SQL`, projected on the scan) with the
-    manifest side URI-quoted to match, so the scan stays one FileScan.
+    """Attach ``read_iceberg_v2``'s per-file constants, partition values
+    and sequence numbers, to scanned rows (the native read needs none:
+    its partition values live in the files, and a delete scope is a filter
+    on ``__file``). ``rows`` holds ``(plain local path, *constants)`` per
+    data file, typed by ``ddl``. The one-row-per-file mapping is
+    broadcast-joined on the frame's ``__file`` (:data:`FILE_KEY_SQL`,
+    projected on the scan) with the manifest side URI-quoted to match, so
+    the scan stays one FileScan.
     The ``__file`` key column stays. The mapping is an Arrow table, which
     Spark keeps as a local relation; a Python list becomes an RDD that
     every broadcasting action re-runs."""

@@ -1809,20 +1809,16 @@ def test_partial_delete_scope_matches_special_char_paths(spark, tmp_path, wh):
               "''", "", None]
 
     def batch(lo: int):
-        return spark.createDataFrame(
-            [(i, values[i % len(values)], i * 10) for i in range(lo, lo + 20)],
-            "id bigint, c string, v bigint",
-        )
+        rows = [(i, values[i % len(values)], i * 10) for i in range(lo, lo + 20)]
+        # '' and NULL share the hive default dir: both read back NULL
+        model.update({i: (c or None, v) for i, c, v in rows})
+        return spark.createDataFrame(rows, "id bigint, c string, v bigint")
 
-    # '' and NULL share the hive default dir: both read back NULL
-    model = {i: (None if c == "" else c, v) for i, c, v in
-             ((i, values[i % len(values)], i * 10) for i in range(20))}
+    model = {}
     wh.create_or_replace("t", batch(0), partition_by="c")
     wh.delete_where_mor("t", "id % 3 = 0")
     model = {i: r for i, r in model.items() if i % 3}
     wh.append("t", batch(20))
-    model.update({i: (None if c == "" else c, v) for i, c, v in
-                  ((i, values[i % len(values)], i * 10) for i in range(20, 40))})
 
     def rows(df) -> dict:
         return {r.id: (r.c, r.v) for r in df.collect()}

@@ -3,6 +3,7 @@ checkout.
 
     python3 tools/ab.py REF --workload W --pairs N [--first-seed S] [--out PREFIX]
     python3 tools/ab.py --summarise PREFIX.jsonl
+    python3 tools/ab.py REF --lines FILE.py [FILE.py ...]
 
 REF (any revision) is exported with ``git archive`` into a scratch
 directory, so the ``parent`` side runs exactly its committed files, as
@@ -26,11 +27,18 @@ and a verdict:
 It also counts failed operations per side. ``--summarise`` re-reads such a
 JSONL (``plans/r19/perfbench_*_pairs.jsonl`` have the same shape) without
 running anything.
+
+``--lines`` runs nothing either: it prints the code lines of each named
+file at REF and in the checkout, and their totals. A code line holds a
+token other than a comment, a newline or indentation, and is not part of
+a docstring.
 """
 
 from __future__ import annotations
 
 import argparse
+import ast
+import io
 import json
 import math
 import os
@@ -39,6 +47,7 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import tokenize
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -140,6 +149,45 @@ def report(s: dict) -> str:
     return "\n".join(lines)
 
 
+def code_lines(src: str) -> int:
+    """Lines of ``src`` holding code: a token other than a comment, a
+    newline or indentation, outside every docstring."""
+    doc: set[int] = set()
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                             ast.AsyncFunctionDef)):
+            b = node.body
+            if (b and isinstance(b[0], ast.Expr)
+                    and isinstance(b[0].value, ast.Constant)
+                    and isinstance(b[0].value.value, str)):
+                doc.update(range(b[0].lineno, b[0].end_lineno + 1))
+    skip = (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
+            tokenize.DEDENT, tokenize.ENDMARKER)
+    lines: set[int] = set()
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type not in skip:
+            lines.update(range(tok.start[0], tok.end[0] + 1))
+    return len(lines - doc)
+
+
+def line_counts(ref: str, paths: list[str]) -> list[tuple[str, int, int]]:
+    """``(path, code lines at ref, code lines in the checkout)`` per path; a
+    file missing on one side counts 0 there."""
+    out = []
+    for path in paths:
+        rel = os.path.relpath(os.path.abspath(path), ROOT)
+        old = subprocess.run(["git", "-C", ROOT, "show", f"{ref}:{rel}"],
+                             capture_output=True, text=True)
+        new = os.path.join(ROOT, rel)
+        out.append((
+            rel,
+            code_lines(old.stdout) if old.returncode == 0 else 0,
+            code_lines(open(new, encoding="utf-8").read())
+            if os.path.exists(new) else 0,
+        ))
+    return out
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("ref", nargs="?")
@@ -148,7 +196,17 @@ def main() -> int:
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--out", help="output prefix (default ab_<workload>)")
     ap.add_argument("--summarise", metavar="JSONL")
+    ap.add_argument("--lines", nargs="+", metavar="FILE",
+                    help="print code-line counts at REF and in the checkout")
     args = ap.parse_args()
+    if args.lines:
+        if not args.ref:
+            ap.error("--lines needs REF")
+        rows = line_counts(args.ref, args.lines)
+        rows.append(("total", sum(r[1] for r in rows), sum(r[2] for r in rows)))
+        for rel, old, new in rows:
+            print(f"{rel}  {args.ref} {old}  checkout {new}  delta {new - old:+d}")
+        return 0
     if args.summarise:
         with open(args.summarise) as f:
             rows = [json.loads(line) for line in f]

@@ -13,14 +13,16 @@ Optional trailing names restrict the run to those queries (fast re-checks of
 freshly converted oracles). ``--changed-since`` (default REF: HEAD) instead
 derives the set from git: every query whose DEFINING module has a diff vs
 REF, unioned with any explicit names — the minutes-scale mid-round gate
-(r09 VERDICT item 7); close-out still runs the full registry. Changed files
-that define no queries (registry/io/tuning/session...) add the four
-headline canaries so infra edits never select an empty set. Prints one line
-per query and a final summary; exit 1 on any failure.
+(r09 VERDICT item 7); close-out still runs the full registry. A file whose
+diff touches only docstrings and comments does not count as changed.
+Changed files that define no queries (registry/io/tuning/session...) add
+the four headline canaries so infra edits never select an empty set.
+Prints one line per query and a final summary; exit 1 on any failure.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import sys
 import time
@@ -42,6 +44,33 @@ _CANARIES = [
 ]
 
 
+def _code_dump(src: str) -> str | None:
+    """The module's AST without docstrings (comments never reach the AST),
+    or None if it does not parse."""
+    try:
+        tree = ast.parse(src)
+    except SyntaxError:
+        return None
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                             ast.AsyncFunctionDef)):
+            body = node.body
+            if (body and isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)
+                    and isinstance(body[0].value.value, str)):
+                node.body = body[1:] or [ast.Pass()]
+    return ast.dump(tree)
+
+
+def _same_code(old: str | None, new: str | None) -> bool:
+    """True when two module sources differ only in docstrings, comments
+    and layout. A missing or unparsable side counts as different."""
+    if old is None or new is None:
+        return False
+    a = _code_dump(old)
+    return a is not None and a == _code_dump(new)
+
+
 def _changed_query_names(qs: dict, ref: str) -> list[str]:
     import subprocess
 
@@ -53,7 +82,22 @@ def _changed_query_names(qs: dict, ref: str) -> list[str]:
         cwd=repo,
         check=True,
     ).stdout.split()
-    changed = {os.path.normpath(f) for f in out}
+
+    def source(f: str, at_ref: bool) -> str | None:
+        if at_ref:
+            p = subprocess.run(["git", "show", f"{ref}:{f}"], cwd=repo,
+                               capture_output=True, text=True)
+            return p.stdout if p.returncode == 0 else None
+        path = os.path.join(repo, f)
+        if not os.path.exists(path):
+            return None
+        with open(path, encoding="utf-8") as fh:
+            return fh.read()
+
+    changed = {
+        os.path.normpath(f) for f in out
+        if not _same_code(source(f, True), source(f, False))
+    }
 
     def module_file(fn) -> str:
         mod = sys.modules.get(getattr(fn, "__module__", ""), None)

@@ -3,7 +3,11 @@ empty-string partition routing bugs): for random tables (identity / bucket /
 truncate / days / multi-field layouts, with nulls + special chars) and
 random predicates, `read(where=P)` must equal `read().filter(P)` — and
 the same through export -> read_iceberg_v2. Catches any unsound prune
-(file-skip, manifest-summary, transform, bounds) end to end.
+(file-skip, manifest-summary, transform, bounds) end to end. About half the
+tables take a merge-on-read delete and then an append, so the delete scopes
+only some of their files (the native read's file-key filter; position or
+equality deletes in the export); those draws come from a second stream, so
+a seed's tables and predicates are the ones it drew before.
 
 Usage: python tools/read_equivalence_fuzzer.py [SEED] [N_TABLES] [N_PREDS]
 Round-14 sweeps: seeds 14/99/7/23/41, ~2500 predicate evaluations — the
@@ -23,6 +27,7 @@ SEED = int(sys.argv[1]) if len(sys.argv) > 1 else 14
 N_TABLES = int(sys.argv[2]) if len(sys.argv) > 2 else 12
 N_PREDS = int(sys.argv[3]) if len(sys.argv) > 3 else 24
 rng = random.Random(SEED)
+mor = random.Random(SEED + 1)
 
 ROOT = os.environ.get("SPARK_GRAFT_FUZZ_DIR", "/tmp/fuzz_read")
 shutil.rmtree(ROOT, ignore_errors=True)
@@ -49,18 +54,27 @@ TAGS = ["a b", "p%q", "café", "x=y", "plain", "4-NOT SPECIFIED", None,
         "O'Brien", ""]
 BIG = 9007199254740992  # 2^53
 
-def make_rows(n):
+def make_rows(n, r=rng):
     rows = []
     for i in range(n):
-        k = rng.choice(
-            [rng.randint(-50, 50), rng.randint(BIG - 2, BIG + 2),
+        k = r.choice(
+            [r.randint(-50, 50), r.randint(BIG - 2, BIG + 2),
              -(2**63), 2**63 - 1, None]
         )
-        tag = rng.choice(TAGS)
-        v = rng.choice([round(rng.uniform(-10, 10), 3), None])
-        day = rng.randint(-400, 400)
+        tag = r.choice(TAGS)
+        v = r.choice([round(r.uniform(-10, 10), 3), None])
+        day = r.randint(-400, 400)
         rows.append((i, k, tag, v, day))
     return rows
+
+
+def make_frame(rows):
+    return spark.createDataFrame(
+        rows, "i int, k long, tag string, v double, day int"
+    ).withColumn(
+        "ts",
+        F.expr("timestamp'1970-01-01 12:00:00' + make_interval(0,0,0,day,0,0,0)"),
+    ).drop("day")
 
 SPECS = [
     None, "tag", "bucket(4, k)", "truncate(3, tag)", "days(ts)",
@@ -101,21 +115,24 @@ def make_pred():
 
 fails = 0
 checked = 0
+with_deletes = 0
 for t in range(N_TABLES):
     spec = rng.choice(SPECS)
     n = rng.randint(5, 40)
-    df = spark.createDataFrame(
-        make_rows(n), "i int, k long, tag string, v double, day int"
-    ).withColumn(
-        "ts",
-        F.expr("timestamp'1970-01-01 12:00:00' + make_interval(0,0,0,day,0,0,0)"),
-    ).drop("day")
+    df = make_frame(make_rows(n))
     name = f"t{t}"
     try:
         wh.create_or_replace(name, df, partition_by=spec)
     except Exception as e:
         print(f"[skip] table {t} spec={spec}: {type(e).__name__}: {e}")
         continue
+    if mor.random() < 0.5:
+        tag = mor.choice([x for x in TAGS if x is not None])
+        wh.delete_where_mor(name, mor.choice(
+            [f"i % 3 = {mor.randint(0, 2)}", f"tag = {sql_quote(tag)}"]
+        ))
+        wh.append(name, make_frame(make_rows(mor.randint(5, 20), mor)))
+        with_deletes += 1
     base_cols = ["i", "k", "tag", "v", "ts"]
     full = wh.read(name)
     loc = None
@@ -157,7 +174,7 @@ for t in range(N_TABLES):
                 fails += 1
                 print(f"[FAIL] spec-reader t{t} spec={spec!r} pred={pred!r}: "
                       f"{len(sgot)} vs {len(expect)} rows")
-print(f"checked {checked} predicate evaluations across {N_TABLES} tables; "
-      f"failures: {fails}")
+print(f"checked {checked} predicate evaluations across {N_TABLES} tables "
+      f"({with_deletes} with a partially scoped delete); failures: {fails}")
 spark.stop()
 sys.exit(1 if fails else 0)
