@@ -886,37 +886,22 @@ def scan_parquet_files(
 
 
 #: a row's data file as a scan projection: its ``_metadata.file_path`` with
-#: Hadoop's ``file:/`` prefix stripped. :func:`attach_file_constants` joins
-#: on it; the native read filters a partially scoped delete on it.
+#: Hadoop's ``file:/`` prefix stripped. A delete that scopes only some of a
+#: scan's files filters on it (:func:`file_scope_sql`); a position delete
+#: anti-joins on it.
 FILE_KEY_SQL = "regexp_replace(_metadata.file_path, '^file:/+', '/') AS __file"
 
 
-def attach_file_constants(
-    spark: SparkSession, df: DataFrame, rows: list, ddl: str
-) -> DataFrame:
-    """Attach ``read_iceberg_v2``'s per-file constants, partition values
-    and sequence numbers, to scanned rows (the native read needs none:
-    its partition values live in the files, and a delete scope is a filter
-    on ``__file``). ``rows`` holds ``(plain local path, *constants)`` per
-    data file, typed by ``ddl``. The one-row-per-file mapping is
-    broadcast-joined on the frame's ``__file`` (:data:`FILE_KEY_SQL`,
-    projected on the scan) with the manifest side URI-quoted to match, so
-    the scan stays one FileScan.
-    The ``__file`` key column stays. The mapping is an Arrow table, which
-    Spark keeps as a local relation; a Python list becomes an RDD that
-    every broadcasting action re-runs."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import _parse_datatype_string
-
-    schema = _parse_datatype_string("`__file` string, " + ddl)
-    rows = [(_uri_path_quote(r[0]), *r[1:]) for r in rows]
-    mapping = spark.createDataFrame(pa.table(
-        [pa.array([r[j] for r in rows], to_arrow_type(f.dataType))
-         for j, f in enumerate(schema.fields)],
-        names=schema.names,
-    ), schema=schema)
-    return df.join(F.broadcast(mapping), "__file")
+def file_scope_sql(paths) -> str:
+    """``__file IN (...)``: true for the rows of the data files at the plain
+    local ``paths``. Each path is URI-quoted as ``_metadata.file_path``
+    renders it, then written as a Spark SQL string literal (``\\`` is the
+    parser's escape)."""
+    lits = (
+        "'" + _uri_path_quote(p).replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for p in paths
+    )
+    return f"__file IN ({', '.join(lits)})"
 
 
 def _uri_path_unquote(path: str) -> str:
@@ -1043,9 +1028,14 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
     seen_fids: dict[str, int] = {}
     names_by_fid: dict[int, list[str]] = {}
 
+    def _hidden(col: str) -> bool:
+        """A hidden partition column or its in-file copy: neither a schema
+        nor a mapping column, and no column metrics."""
+        return col in trs or col.removeprefix(_part_copy("")) in trs
+
     def _record(col: str, fid: int) -> None:
-        if col in trs or col.removeprefix(_part_copy("")) in trs:
-            return  # hidden partition column: not a schema/mapping column
+        if _hidden(col):
+            return
         if seen_fids.setdefault(col, fid) != fid:
             raise ValueError(
                 f"table {name!r}: column {col!r} was dropped and "
@@ -1373,10 +1363,14 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
                 if cached is None:
                     cached = footer_cache[abs_path] = _footer_metrics(abs_path)
                 fm, split_offsets = cached
+                # bound through the ids the file was written under: an old
+                # spelling keeps its id, and an identity partition column's
+                # in-file copy reports under the column's id
+                ffids = f["fids"]
                 col_sizes, val_counts, null_counts = [], [], []
-                for nm in sorted(fm, key=lambda n: fids.get(n, 1 << 30)):
-                    fid = fids.get(nm)
-                    if fid is None:  # column unknown at this schema vintage
+                for nm in sorted(fm, key=lambda n: ffids.get(n, 1 << 30)):
+                    fid = ffids.get(nm)
+                    if fid is None or _hidden(nm):
                         continue
                     sz, nv, nn = fm[nm]
                     col_sizes.append({"key": int(fid), "value": int(sz)})
@@ -1618,6 +1612,20 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
         f["name"]: f["id"]
         for f in (schemas[head_schema_id]["fields"] if chain else [])
     }
+    # spec: the name mapping resolves columns in data files written WITHOUT
+    # Iceberg field ids (all of ours — plain-Spark parquet). Current name
+    # first, historical spellings after; then every id only older files
+    # carry (a dropped column an equality delete still names).
+    name_mapping = [
+        {"field-id": fid, "names": [c] + [
+            n for n in names_by_fid.get(fid, []) if n != c
+        ]}
+        for c, fid in cur_fids.items()
+    ] + [
+        {"field-id": fid, "names": names}
+        for fid, names in sorted(names_by_fid.items())
+        if chain and fid not in cur_fids.values()
+    ]
     sort_fields = [
         {
             "transform": "identity",
@@ -1653,24 +1661,7 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
         ),
         "properties": {
             "write.format.default": "parquet",
-            # spec: resolves columns in data files written WITHOUT Iceberg
-            # field ids (all of ours — plain-Spark parquet). Current name
-            # first, historical spellings after.
-            "schema.name-mapping.default": json.dumps(
-                [
-                    {
-                        "field-id": f["id"],
-                        "names": [f["name"]]
-                        + [
-                            n
-                            for n in names_by_fid.get(f["id"], [])
-                            if n != f["name"]
-                        ],
-                    }
-                    for sch in ([schemas[head_schema_id]] if chain else [])
-                    for f in sch["fields"]
-                ]
-            ),
+            "schema.name-mapping.default": json.dumps(name_mapping),
         },
         "current-snapshot-id": int(meta["current_snapshot_id"]),
         "snapshots": snapshots_json,
@@ -1736,19 +1727,20 @@ def read_iceberg_v2(
     ``ref``, or ``as_of_ms`` — the spec's as-of-timestamp read, resolved
     through the snapshot-log as the last MAIN snapshot whose
     ``timestamp-ms`` <= the bound) → manifest-list Avro → manifest Avro
-    entries → data-file URIs
-    + partition values. Partition values are attached FROM THE MANIFESTS
-    (spec semantics — Iceberg never re-infers them from paths): ONE
-    vectorized FileScan over every surviving file, with the per-file
-    constants (partition values, data sequence number) broadcast-joined
-    against ``_metadata.file_path`` — the mapping is manifest-sized (one
-    row per FILE, ~100k rows at 100 TB), never data-sized; this is how a
-    DataSourceV2 reader populates identity-partition constants per split.
-    Manifests under different partition specs union their fields by name
-    (absent columns NULL-fill). ``where`` prunes files from manifest
-    bounds/partition values BEFORE the scan. Equality deletes apply under
-    the spec's strictly-less sequence rule, position deletes under <= with
-    a broadcast anti-join on (file, pos).
+    entries → data-file URIs. ONE vectorized FileScan over every surviving
+    file; every column, identity partition sources included, comes from
+    the data files, bound through the name mapping
+    (``schema.name-mapping.default``), so manifests under different
+    partition specs union their fields by name (absent columns NULL-fill).
+    A data file whose manifest entry has no ``value_counts`` for an
+    identity field's source column does not store it (a Hive-migrated
+    file): the read raises ``ValueError`` rather than read NULL. ``where``
+    prunes files from manifest bounds/partition values BEFORE the scan.
+    Equality deletes apply under the spec's strictly-less sequence rule as
+    a filter on the scan's file key (:func:`file_scope_sql`) when they
+    scope only some of the files; position deletes keep the pairs of files
+    no newer than the delete and apply as a broadcast anti-join on
+    (file, pos). No other join.
     """
     mdir = os.path.join(_from_uri(location), "metadata")
     meta = _load_table_metadata(mdir)
@@ -1783,17 +1775,11 @@ def read_iceberg_v2(
     )
     _, _, manifest_files = read_ocf(_from_uri(snap["manifest-list"]))
 
-    # file URI -> {partition col: value} + data sequence number, straight
-    # from the manifests (spec semantics: Iceberg never re-infers partition
-    # values from paths); content=1 manifests carry delete files. Data
-    # manifests may be written under DIFFERENT partition specs (spec
-    # evolution — the norm for long-lived Iceberg tables): the partition
-    # fields are UNIONED across manifests in first-seen order and each
-    # file's values bind by NAME against the union, None-filling columns
-    # its own spec lacks — never positionally against the last manifest.
-    file_parts: dict[str, dict] = {}
+    # data file URI -> data sequence number, straight from the manifests
+    # (the delete sequence rules scope against it); content=1 manifests
+    # carry delete files. The manifests' partition values only prune: each
+    # data file stores its identity partition columns.
     file_seqs: dict[str, int] = {}
-    part_types: dict[str, str] = {}  # ordered union of all specs' fields
     eq_deletes: dict[str, dict] = {}
     pos_deletes: list[dict] = []
     # IS [NOT] NULL conjuncts prune on the null-count metrics (fids
@@ -1807,6 +1793,8 @@ def read_iceberg_v2(
     specs_by_id = {s["spec-id"]: s for s in meta.get("partition-specs", [])}
     snap_types_by_id = {f["id"]: f["type"] for f in schema["fields"]}
     snap_fields_by_id = {f["id"]: f for f in schema["fields"]}
+    names_by_id = {f["id"]: f["name"] for f in schema["fields"]}
+    ids_by_name = {n: i for i, n in names_by_id.items()}
     for mf in manifest_files:
         # manifest-level pruning (spec "Manifest Lists" field summaries):
         # a DATA manifest whose per-partition-field bounds exclude the
@@ -1900,35 +1888,13 @@ def read_iceberg_v2(
                     )
             continue
         spec_fields = json.loads(mmeta["partition-spec"])
-        # resolve identity source types through ALL schema versions,
-        # newest winning: a historical spec may bind a field id that has
-        # LEFT the current schema (replace-with-a-new-transform drops the
-        # old derived column from the declared schema; drop_column after
-        # a spec evolution does too — r14 probe: KeyError). Such fields
-        # still join their values in, but the typed projection (declared
-        # columns only) drops them — metadata-only, exactly right.
-        by_src = {
-            f["id"]: f for s in meta["schemas"] for f in s["fields"]
-        }
-        by_src.update({f["id"]: f for f in schema["fields"]})
-        # only IDENTITY fields become data columns (their value joins into
-        # the scan); transformed fields (day/bucket/truncate/…) are hidden
-        # — metadata-only, used for pruning, never projected
-        local_fields = [
-            (pf["name"], by_src[pf["source-id"]]["type"])
-            for pf in spec_fields
+        # transformed fields (day/bucket/truncate/…) are hidden —
+        # metadata-only, used for pruning; an identity field's source
+        # column must be stored in the file, which its value count proves
+        identity_ids = [
+            pf["source-id"] for pf in spec_fields
             if pf.get("transform", "identity") == "identity"
-            and pf["source-id"] in by_src
         ]
-        for n, t in local_fields:
-            if part_types.setdefault(n, t) != t:
-                raise ValueError(
-                    f"partition field {n!r} bound to two types across "
-                    f"specs ({part_types[n]} vs {t})"
-                )
-        types_by_id = {f["id"]: f["type"] for f in schema["fields"]}
-        names_by_id = {f["id"]: f["name"] for f in schema["fields"]}
-        ids_by_name = {n: i for i, n in names_by_id.items()}
         for e in entries:
             if e["status"] == 2:  # DELETED
                 continue
@@ -1946,8 +1912,8 @@ def read_iceberg_v2(
                 }
                 for kv in df_rec.get("lower_bounds") or []:
                     fid = kv["key"]
-                    if fid in uppers and fid in types_by_id:
-                        t = types_by_id[fid]
+                    if fid in uppers and fid in snap_types_by_id:
+                        t = snap_types_by_id[fid]
                         lo = try_bound_value(t, kv["value"])
                         hi = try_bound_value(t, uppers[fid])
                         if lo is not None and hi is not None:
@@ -1972,13 +1938,14 @@ def read_iceberg_v2(
                     v = part_rec.get(pf["name"])
                     return None if v is None else (v, v)
 
-                if _transform_skip(spec_fields, by_src, conjuncts, _entry_range):
+                if _transform_skip(
+                    spec_fields, snap_fields_by_id, conjuncts, _entry_range
+                ):
                     continue
+            vals = {
+                kv["key"]: kv["value"] for kv in df_rec.get("value_counts") or []
+            }
             if null_conjuncts:
-                vals = {
-                    kv["key"]: kv["value"]
-                    for kv in df_rec.get("value_counts") or []
-                }
                 nulls = {
                     kv["key"]: kv["value"]
                     for kv in df_rec.get("null_value_counts") or []
@@ -2005,11 +1972,15 @@ def read_iceberg_v2(
                 and df_rec["file_path"] not in restrict_files
             ):
                 continue  # incremental scan: only the requested files
-            file_parts[df_rec["file_path"]] = {
-                n: df_rec["partition"].get(n) for n, _ in local_fields
-            }
+            for fid in identity_ids:
+                if fid not in vals:
+                    raise ValueError(
+                        f"data file {df_rec['file_path']} does not store "
+                        f"identity partition column "
+                        f"{names_by_id.get(fid, fid)!r} (no value_counts "
+                        f"for field id {fid}); rewrite it with the column"
+                    )
             file_seqs[df_rec["file_path"]] = e["sequence_number"] or 0
-    part_fields = list(part_types.items())
 
     _SPARK_TYPE = {
         "int": "int",
@@ -2027,142 +1998,77 @@ def read_iceberg_v2(
     def spark_type(ice: str) -> str:
         return _SPARK_TYPE.get(ice, ice)  # decimal(p,s) passes through
 
-    if not file_parts:
+    if not file_seqs:
         ddl = ", ".join(
             f"`{f['name']}` {spark_type(f['type'])}" for f in schema["fields"]
         )
         return spark.createDataFrame([], schema=ddl)
-    # ONE scan over every data file; partition values attach per file
-    # (attach_file_constants), as a DataSourceV2 reader populates
-    # identity-partition constants per split.
-    # mergeSchema: files written before a rename/add carry old spellings or
-    # miss columns entirely; the merged scan schema surfaces every physical
-    # name so the name-mapping projection below can coalesce them
+    # equality deletes (spec "Scan Planning"): a delete file with sequence
+    # number d removes matching rows from data files with sequence number
+    # STRICTLY LESS than d — the plain paths of those files, or None when
+    # that is every scanned file; a delete scoping none is skipped
+    eq_scoped = []
+    for d in eq_deletes.values():
+        scope = [_from_uri(u) for u, s in file_seqs.items() if s < d["seq"]]
+        if scope:
+            eq_scoped.append((d, None if len(scope) == len(file_seqs) else scope))
+    # ONE scan over every data file. mergeSchema: files written before a
+    # rename/add carry old spellings or miss columns entirely, and an
+    # identity partition column is stored under its copy's name; the
+    # merged scan schema surfaces every physical name so the name-mapping
+    # projection below can coalesce them. The file key and the parquet row
+    # ordinal (Iceberg's `pos`) are captured on the scan, where _metadata
+    # resolves.
+    with_file = bool(pos_deletes) or any(s is not None for _, s in eq_scoped)
+    extras = (["__file"] if with_file else []) + (["__pos"] if pos_deletes else [])
     out = scan_parquet_files(
-        spark, [_from_uri(u) for u in file_parts], mergeSchema="true"
+        spark, [_from_uri(u) for u in file_seqs], mergeSchema="true"
+    ).selectExpr(
+        "*",
+        *([FILE_KEY_SQL] if with_file else []),
+        *(["_metadata.row_index AS __pos"] if pos_deletes else []),
     )
-    need_seq = bool(eq_deletes or pos_deletes)
-    if pos_deletes:
-        # the parquet row ordinal — Iceberg's `pos`; captured on the scan
-        # frame (where _metadata resolves), consumed by the anti-join below
-        out = out.withColumn("__pos", F.col("_metadata.row_index"))
-    # A data column sharing a partition column's name — a table evolved
-    # from unpartitioned to identity-partitioned still CONTAINS the column
-    # in its old files — would make the post-join reference ambiguous.
-    # Shadow-rename the scan-side column; the typed projection below
-    # coalesces (manifest constant, shadowed data value) so old files keep
-    # their stored values and new files get the manifest constant.
-    data_shadow = {n: f"__data_{n}" for n, _ in sorted(part_fields) if n in out.columns}
-    out = out.withColumnsRenamed(data_shadow)
-    if part_fields or need_seq:
-        # the per-file constants from the manifests: partition values, and
-        # the data sequence number the delete sequence rules scope against.
-        # The manifest's Avro branch stores int/long/double/string values
-        # natively and every other type (date, timestamp, decimal, float,
-        # boolean) as its hive STRING — declare those columns string here;
-        # the typed projection casts them to the declared Iceberg type.
-        map_ddl = "`__seq` bigint" + "".join(
-            f", `{n}` {spark_type(t) if t in _PARTITION_AVRO else 'string'}"
-            for n, t in part_fields
-        )
-        rows = [
-            (_from_uri(u), file_seqs[u], *[vals.get(n) for n, _ in part_fields])
-            for u, vals in file_parts.items()
-        ]
-        # __file stays while position deletes need it (dropped at the end)
-        out = attach_file_constants(
-            spark, out.selectExpr("*", FILE_KEY_SQL), rows, map_ddl
-        )
-        if not pos_deletes:
-            out = out.drop("__file")
     # bind the declared column set/order/types through the spec's
     # name-mapping (schema.name-mapping.default): per field id, the ordered
     # physical spellings that may carry it. Files written before a rename
-    # have the old name, post-rename files the new one — coalesce in
-    # mapping order. Columns added after a file was written → NULL.
+    # have the old name, post-rename files the new one, and a partitioned
+    # file the copy's — coalesce in mapping order. Columns added after a
+    # file was written → NULL.
     nm = {
         m["field-id"]: m["names"]
         for m in json.loads(
             meta.get("properties", {}).get("schema.name-mapping.default", "[]")
         )
     }
-    proj = []
-    for f in schema["fields"]:
-        st = spark_type(f["type"])
-        # a name that is also a partition field is the manifest constant,
-        # NULL for files written under a spec without it; their stored
-        # value is the shadowed data column (a later rename keeps both)
-        srcs = [
-            m for n in nm.get(f["id"], [f["name"]])
-            for m in (n, data_shadow.get(n)) if m in out.columns
-        ]
-        proj.append((
-            F.coalesce(*[F.col(n).cast(st) for n in srcs]) if srcs
-            else F.lit(None).cast(st)
-        ).alias(f["name"]))
-    extras = (["__seq"] if need_seq else []) + (
-        ["__file", "__pos"] if pos_deletes else []
-    )
-    # equality deletes may reference a field id that was DROPPED from the
-    # current schema afterwards (Iceberg allows the drop; the delete still
-    # applies by field id against the stored values — r14 probe found the
-    # KeyError). Resolve such fids through the HISTORICAL schema versions'
-    # spellings and carry the physical column through the projection under
-    # a synthetic name; rows where no file carries the column are NULL and
-    # equality never matches NULL, exactly the spec semantics.
-    dropped_eq: dict[int, str] = {}
-    eqdrop_aliases: list[str] = []
-    if eq_deletes:
-        cur_ids = {f["id"] for f in schema["fields"]}
-        for d in eq_deletes.values():
-            for fid in d["ids"]:
-                if fid in cur_ids or fid in dropped_eq:
-                    continue
-                cands, typ = [], "string"
-                for s in meta["schemas"]:
-                    for f in s["fields"]:
-                        if f["id"] == fid and f["name"] not in cands:
-                            cands.append(f["name"])
-                            typ = f["type"]
-                alias = f"__eqdrop_{fid}"
-                st = spark_type(typ)
-                exprs = []
-                for n in cands:
-                    if n in out.columns:
-                        exprs.append(F.col(n).cast(st))
-                    if n in data_shadow:
-                        # the physical data column was shadow-renamed
-                        # because the name is also a (historical)
-                        # partition field — post-evolution files store
-                        # the value as DATA while the manifest constant
-                        # is NULL; fall back exactly like the typed
-                        # projection does (r14 review finding)
-                        exprs.append(F.col(data_shadow[n]).cast(st))
-                proj.append(
-                    (
-                        F.coalesce(*exprs)
-                        if exprs
-                        else F.lit(None).cast(st)
-                    ).alias(alias)
-                )
-                dropped_eq[fid] = alias
-                eqdrop_aliases.append(alias)
-    out = out.select(*proj, *extras)
-    # the __eqdrop columns are PRODUCED by proj — listing them in the
-    # select's extras too would duplicate the column via Spark's
-    # lateral-column-alias fallback (r14 review, verified empirically);
-    # they join extras only for the final drop
-    extras.extend(eqdrop_aliases)
-    # equality deletes (spec "Scan Planning"): a delete file with sequence
-    # number d removes matching rows from data files with sequence number
-    # STRICTLY LESS than d. Key tuples are manifest-scale small (they came
-    # from a predicate — real Iceberg compacts delete files on the same
-    # assumption), so they apply as an isin / OR-of-AND filter rather than
-    # a join; a NULL data value never matches (SQL equality semantics).
-    if eq_deletes:
-        import pyarrow.parquet as pq
+    stored = set(out.columns)
 
-        name_by_id = {f["id"]: f["name"] for f in schema["fields"]}
+    def bind(fid: int, names: list, st: Optional[str], alias: str):
+        srcs = [F.col(n) for n in nm.get(fid, names) if n in stored]
+        if st is not None:
+            srcs = [c.cast(st) for c in srcs]
+        null = F.lit(None) if st is None else F.lit(None).cast(st)
+        return (F.coalesce(*srcs) if srcs else null).alias(alias)
+
+    # an equality delete may name a field id DROPPED from the current
+    # schema since (Iceberg allows the drop; the delete still applies by
+    # field id against the stored values): it binds through the mapping
+    # under a synthetic name; rows of files that never carried it are
+    # NULL, which equality never matches
+    col_of = {f["id"]: f["name"] for f in schema["fields"]}
+    dropped = sorted({i for d, _ in eq_scoped for i in d["ids"]} - set(col_of))
+    col_of.update((i, f"__eqdrop_{i}") for i in dropped)
+    out = out.select(
+        *[bind(f["id"], [f["name"]], spark_type(f["type"]), f["name"])
+          for f in schema["fields"]],
+        *[bind(i, [], None, col_of[i]) for i in dropped],
+        *extras,
+    )
+    # Key tuples are manifest-scale small (they came from a predicate —
+    # real Iceberg compacts delete files on the same assumption), so they
+    # apply as an isin / OR-of-AND filter rather than a join; a NULL data
+    # value never matches (SQL equality semantics).
+    if eq_scoped:
+        import pyarrow.parquet as pq
 
         def _delete_col(tbl, fid: int, pos: int):
             # bind the delete-file column by its parquet field-id metadata
@@ -2175,10 +2081,8 @@ def read_iceberg_v2(
                     return tbl.column(i)
             return tbl.column(pos)
 
-        for d in eq_deletes.values():
-            cols = [
-                name_by_id.get(i, dropped_eq.get(i)) for i in d["ids"]
-            ]
+        for d, scope in eq_scoped:
+            cols = [col_of[i] for i in d["ids"]]
             tbl = pq.read_table(d["path"])
             if len(cols) == 1:
                 match = F.col(cols[0]).isin(
@@ -2200,39 +2104,40 @@ def read_iceberg_v2(
                     for c, v in zip(cols, row):
                         row_match = row_match & (F.col(c) == F.lit(v))
                     match = match | row_match
-            cond = (F.col("__seq") < F.lit(int(d["seq"]))) & match
-            out = out.filter(~F.coalesce(cond, F.lit(False)))
+            hit = F.coalesce(match, F.lit(False))
+            if scope is not None:
+                hit = F.expr(file_scope_sql(scope)) & hit
+            out = out.filter(~hit)
     # position deletes (spec): a (file_path, pos) pair removes that exact
-    # row from data files with sequence number <= the delete's. Applied as
-    # a broadcast LEFT ANTI join on the captured scan coordinates.
-    # The pairs become an Arrow-backed local relation (no Python worker),
-    # each distinct path quoted once, the way __file carries it.
+    # row from data files with sequence number <= the delete's, so only
+    # the pairs naming such files are kept. Applied as a broadcast LEFT
+    # ANTI join on the captured scan coordinates. The pairs become an
+    # Arrow-backed local relation (no Python worker), each distinct path
+    # quoted once, the way __file carries it.
     if pos_deletes:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         for d in pos_deletes:
+            older = {_from_uri(u) for u, s in file_seqs.items() if s <= d["seq"]}
             tbl = pq.read_table(d["path"], columns=["file_path", "pos"])
-            if not tbl.num_rows:
-                continue
             fp = tbl.column("file_path").combine_chunks().dictionary_encode()
-            quoted = pa.array([
-                _uri_path_quote(re.sub("^file:/+", "/", p))
-                for p in fp.dictionary.to_pylist()
-            ], pa.string())
+            paths = [re.sub("^file:/+", "/", p) for p in fp.dictionary.to_pylist()]
+            keep = pc.take(pa.array([p in older for p in paths], pa.bool_()), fp.indices)
+            if not pc.any(keep).as_py():
+                continue
+            quoted = pa.array([_uri_path_quote(p) for p in paths], pa.string())
             pdf = spark.createDataFrame(pa.table({
                 "__dfile": pc.take(quoted, fp.indices),
                 "__dpos": tbl.column("pos").cast(pa.int64()),
-            }), schema="`__dfile` string, `__dpos` bigint")
+            }).filter(keep), schema="`__dfile` string, `__dpos` bigint")
             cond = (
                 (F.col("__file") == F.col("__dfile"))
                 & (F.col("__pos") == F.col("__dpos"))
-                & (F.col("__seq") <= F.lit(int(d["seq"])))
             )
             out = out.join(F.broadcast(pdf), on=cond, how="left_anti")
-    if extras:
-        out = out.drop(*extras)
+    out = out.drop(*extras, *[col_of[i] for i in dropped])
     return out.filter(where) if where is not None else out
 
 

@@ -75,11 +75,6 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _sql_str(value: str) -> str:
-    """A string as a Spark SQL literal (``\\`` is the parser's escape)."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _sql_type(t) -> str:
     """A Spark SQL type string; nested field names come out quoted (one
     JVM round trip, which ``simpleString`` avoids but cannot quote)."""
@@ -1427,7 +1422,7 @@ class Warehouse:
         """
         from apache_iceberg_demo_spark.sources.iceberg_v2 import (
             FILE_KEY_SQL,
-            _uri_path_quote,
+            file_scope_sql,
             scan_parquet_files,
         )
 
@@ -1490,8 +1485,7 @@ class Warehouse:
         for pred, names, in_scope in scoped:
             hit = f"coalesce(({pred}), false)"
             if in_scope is not None:
-                keys = ", ".join(_sql_str(_uri_path_quote(p)) for p in in_scope)
-                hit = f"__file IN ({keys}) AND {hit}"
+                hit = f"{file_scope_sql(in_scope)} AND {hit}"
             df = df.selectExpr(
                 "*", *[f"{hidden[c]} AS {_quote(n)}" for n, c in names.items()]
             ).filter(hit if removed else f"NOT ({hit})").drop(*names)

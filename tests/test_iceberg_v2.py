@@ -1531,12 +1531,14 @@ def test_unpartitioned_to_partitioned_evolution_keeps_old_values(spark, tmp_path
     assert got.filter(F.col("l_returnflag").isNull()).count() == 0
 
 
-def test_reader_unions_partition_fields_across_manifests(spark, tmp_path):
-    """ADVICE r10: a manifest LIST may reference data manifests written
-    under DIFFERENT partition specs (the norm for real Iceberg tables).
-    Partition tuples must bind by NAME against the union of spec fields,
-    never positionally against the last manifest processed. Hand-assembles
-    a two-manifest table the exporter itself never produces."""
+def _two_spec_table(root: str, store_identity: bool) -> None:
+    """Hand-assemble a table whose one snapshot lists two data manifests
+    under DIFFERENT partition specs (identity ``a``, then identity ``b``),
+    a shape the exporter itself never produces. ``f1`` (a = 5) holds
+    v = 1, 2 and b = 10, 20; ``f2`` (b = 9) holds v = 3 and a = 7. With
+    ``store_identity`` each file also stores its own identity column and
+    its entry records ``value_counts`` for every stored column; without,
+    the files omit it, as Hive-style partitioning does."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1546,18 +1548,20 @@ def test_reader_unions_partition_fields_across_manifests(spark, tmp_path):
         _to_uri,
     )
 
-    root = str(tmp_path / "ice")
     mdir = os.path.join(root, "metadata")
     ddir = os.path.join(root, "data")
     os.makedirs(mdir), os.makedirs(ddir)
-    # two data files; the a-partitioned one omits column a, the
-    # b-partitioned one omits b (identity partitioning drops the column)
+    cols1 = {"v": [1, 2], "b": [10, 20]}
+    cols2 = {"v": [3], "a": [7]}
+    if store_identity:
+        cols1["a"], cols2["b"] = [5, 5], [9]
     f1 = os.path.join(ddir, "f1.parquet")
-    pq.write_table(pa.table({"v": pa.array([1, 2], pa.int64()),
-                             "b": pa.array([10, 20], pa.int64())}), f1)
+    pq.write_table(pa.table({c: pa.array(x, pa.int64())
+                             for c, x in cols1.items()}), f1)
     f2 = os.path.join(ddir, "f2.parquet")
-    pq.write_table(pa.table({"v": pa.array([3], pa.int64()),
-                             "a": pa.array([7], pa.int64())}), f2)
+    pq.write_table(pa.table({c: pa.array(x, pa.int64())
+                             for c, x in cols2.items()}), f2)
+    fid_of = {"v": 1, "a": 2, "b": 3}
     schema = {
         "type": "struct", "schema-id": 0,
         "fields": [
@@ -1569,15 +1573,18 @@ def test_reader_unions_partition_fields_across_manifests(spark, tmp_path):
     spec0 = [{"name": "a", "transform": "identity", "source-id": 2, "field-id": 1000}]
     spec1 = [{"name": "b", "transform": "identity", "source-id": 3, "field-id": 1001}]
 
-    def entry(path, part):
+    def entry(path, part, cols):
+        n = len(cols["v"])
         return {
             "status": 1, "snapshot_id": 1, "sequence_number": 1,
             "file_sequence_number": 1,
             "data_file": {
                 "content": 0, "file_path": _to_uri(path),
                 "file_format": "PARQUET", "partition": part,
-                "record_count": 1,
+                "record_count": n,
                 "file_size_in_bytes": os.path.getsize(path),
+                "value_counts": [{"key": fid_of[c], "value": n}
+                                 for c in cols] if store_identity else None,
                 "lower_bounds": None, "upper_bounds": None,
             },
         }
@@ -1589,7 +1596,7 @@ def test_reader_unions_partition_fields_across_manifests(spark, tmp_path):
             [{"name": "a", "type": ["null", "long"], "default": None,
               "field-id": 1000}]
         ),
-        [entry(f1, {"a": 5})],
+        [entry(f1, {"a": 5}, cols1)],
         metadata={"schema": json.dumps(schema), "schema-id": "0",
                   "partition-spec": json.dumps(spec0),
                   "partition-spec-id": "0", "format-version": "2",
@@ -1602,7 +1609,7 @@ def test_reader_unions_partition_fields_across_manifests(spark, tmp_path):
             [{"name": "b", "type": ["null", "long"], "default": None,
               "field-id": 1001}]
         ),
-        [entry(f2, {"b": 9})],
+        [entry(f2, {"b": 9}, cols2)],
         metadata={"schema": json.dumps(schema), "schema-id": "0",
                   "partition-spec": json.dumps(spec1),
                   "partition-spec-id": "1", "format-version": "2",
@@ -1644,10 +1651,28 @@ def test_reader_unions_partition_fields_across_manifests(spark, tmp_path):
     with open(os.path.join(mdir, "version-hint.text"), "w") as f:
         f.write("1")
 
+
+def test_reader_unions_partition_fields_across_manifests(spark, tmp_path):
+    """ADVICE r10: a manifest LIST may reference data manifests written
+    under DIFFERENT partition specs (the norm for real Iceberg tables).
+    Each spec's identity field binds by NAME from the files that store
+    it, so the read unions both specs' fields."""
+    root = str(tmp_path / "ice")
+    _two_spec_table(root, store_identity=True)
     got = sorted(map(tuple, read_iceberg_v2(spark, root).collect()))
-    # f1 rows: a from the manifest constant (5), b from the DATA column;
-    # f2 row: a from the data column (7), b from the manifest constant (9)
     assert got == [(1, 5, 10), (2, 5, 20), (3, 7, 9)]
+
+
+def test_reader_refuses_files_without_identity_columns(spark, tmp_path):
+    """A data file that does not store an identity partition source
+    column (no ``value_counts`` for its field id — a Hive-migrated file)
+    makes the read raise, naming the file and the column, rather than
+    read NULL: identity values come from the files only."""
+    root = str(tmp_path / "ice")
+    _two_spec_table(root, store_identity=False)
+    with pytest.raises(ValueError, match=r"f1\.parquet does not store "
+                       r"identity partition column 'a'"):
+        read_iceberg_v2(spark, root)
 
 
 def test_name_mapping_resolves_renamed_lineage(spark, tmp_path):
@@ -1729,22 +1754,41 @@ def test_reexport_versions_metadata(spark, tmp_path):
     assert read_iceberg_v2(spark, ice).count() == 25
 
 
-def test_spec_read_plan_is_single_scan_plus_broadcast(spark, exported):
-    """Scale shape: the spec-path read of a partitioned table must be ONE
-    vectorized FileScan with the manifest mapping attached via a BROADCAST
-    join — never a per-partition-value union (the demo table alone has
-    dozens of partition values) and never a shuffle for the mapping."""
-    _, _, location = exported
-    df = read_iceberg_v2(spark, location)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+def test_spec_read_plan_is_single_scan_without_join(spark, exported, tmp_path):
+    """Scale shape: the spec-path read of a partitioned table is ONE
+    vectorized FileScan and no join — never a per-partition-value union
+    (the demo table alone has dozens of partition values). Partition
+    values come from the files; an equality delete followed by an append
+    scopes only the older files, and that scope is a filter on the file
+    key, not a join."""
     import re
 
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "BroadcastHashJoin" in plan
-    assert "Union" not in plan
-    assert "SortMergeJoin" not in plan
+    def plan_of(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    def assert_one_scan_no_join(plan):
+        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
+        for op in ("BroadcastHashJoin", "BroadcastExchange", "Union",
+                   "SortMergeJoin"):
+            assert op not in plan, op
+
+    wh, name, location = exported
+    assert_one_scan_no_join(plan_of(read_iceberg_v2(spark, location)))
+
+    wh.create_or_replace("li_eq", wh.read(name), partition_by="l_linenumber")
+    wh.delete_where_mor("li_eq", "l_returnflag = 'R'")
+    wh.append("li_eq", wh.read(name).filter("l_returnflag = 'R'"))
+    loc = export_iceberg_v2(wh, "li_eq", str(tmp_path / "ice"))
+    assert _load_validator().validate(loc, deep=True) == []
+    df = read_iceberg_v2(spark, loc)
+    plan = plan_of(df)
+    assert_one_scan_no_join(plan)
+    assert "file_path" in plan.split("Filter", 1)[1]  # the partial scope
+    got = sorted(map(tuple, df.collect()), key=str)
+    assert got == sorted(map(tuple, wh.read("li_eq").collect()), key=str)
+    assert sum(r.l_returnflag == "R" for r in df.collect()) > 0
 
 
 def test_sort_order_and_summary_export(spark, tmp_path):
@@ -3556,6 +3600,31 @@ def test_special_char_and_null_identity_partitions(spark, tmp_path):
         == on.filter("op = '4-NOT SPECIFIED'").count()
     )
 
+    # (4) equality deletes that scope only SOME files (an append after
+    # each) over special-character dirs: the scope is a filter on the
+    # files' URI-quoted, SQL-escaped paths, so every one must match
+    S = "k int, tag string"
+    model = [(1, " "), (2, "'"), (3, "%"), (4, "="), (5, "é"), (6, ""),
+             (7, None), (8, "%"), (9, "'")]
+    wh.create_or_replace("sp", spark.createDataFrame(model, S),
+                         partition_by="tag")
+    steps = [
+        ("tag = '%'", [(10, "%"), (11, "'"), (12, "")]),
+        ("k IN (2, 10)", [(2, "é"), (13, "="), (14, None)]),
+    ]
+    for pred, rows in steps:
+        wh.delete_where_mor("sp", pred)
+        model = [r for r in model
+                 if not (r[1] == "%" if pred.startswith("tag") else r[0] in (2, 10))]
+        wh.append("sp", spark.createDataFrame(rows, S))
+        model += rows
+    locs = export_iceberg_v2(wh, "sp", str(tmp_path / "ice_sp"))
+    assert mod.validate(locs, deep=True) == []
+    want = sorted(((k, t or None) for k, t in model), key=str)  # '' is NULL
+    assert sorted(map(tuple, wh.read("sp").collect()), key=str) == want
+    assert sorted(map(tuple, read_iceberg_v2(spark, locs).collect()),
+                  key=str) == want
+
 
 def test_positional_delete_on_special_char_partition_paths(spark, tmp_path):
     """ADVICE r13 (high): position-delete paths were stored verbatim from
@@ -3625,7 +3694,7 @@ def test_positional_delete_on_special_char_partition_paths(spark, tmp_path):
 def test_position_deletes_build_from_a_local_relation(spark, tmp_path):
     """The spec read builds each position-delete file's (file, pos) side
     from Arrow: the broadcast's build side is a LocalTableScan, not a
-    Python RDD scan."""
+    Python RDD scan. That anti-join is the plan's only join."""
     from apache_iceberg_demo_spark.io import load
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
@@ -3636,4 +3705,5 @@ def test_position_deletes_build_from_a_local_relation(spark, tmp_path):
     spec = read_iceberg_v2(spark, location)
     plan = spec._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan [__dfile" in plan and "ExistingRDD" not in plan
+    assert plan.count("Join") == 1
     assert sorted(x.r_regionkey for x in spec.collect()) == [0, 1]

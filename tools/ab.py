@@ -24,6 +24,13 @@ and a verdict:
   parent's IQR;
 - ``noise``: anything else.
 
+A ``slower`` or ``beyond bound`` verdict is a regression call, and one
+block can make it by chance. When any metric gets one, a second block of
+as many pairs runs on the seeds after the first block's and is written to
+``PREFIX_retry.jsonl``; the summary keeps its verdict per flagged metric
+(``retry_verdict``) and marks the call ``confirmed`` only if the second
+block makes a regression call on that metric too.
+
 It also counts failed operations per side. ``--summarise`` re-reads such a
 JSONL (``plans/r19/perfbench_*_pairs.jsonl`` have the same shape) without
 running anything.
@@ -141,12 +148,58 @@ def report(s: dict) -> str:
         f"all correct {s['all_correct']}"
     ]
     for k, m in s["metrics"].items():
+        retry = ""
+        if "confirmed" in m:
+            retry = (f"  retry {m['retry_verdict']}: "
+                     f"{'confirmed' if m['confirmed'] else 'not confirmed'}")
         lines.append(
             f"{k:18s} parent {m['parent_median']:9.3f} (IQR {m['parent_iqr']:.3f})"
             f"  change {m['change_median']:9.3f}  rel {m['rel']:+.3f}"
             f"  won {m['change_won']}/{s['pairs']}  bound {m['bound']}  {m['verdict']}"
+            + retry
         )
     return "\n".join(lines)
+
+
+#: verdicts that call a regression; each is retried before it counts
+REGRESSIONS = ("slower", "beyond bound")
+
+
+def run_block(ref_dir: str, workload: str, pairs: int, first_seed: int,
+              path: str) -> list[dict]:
+    """``pairs`` alternating pairs on seeds ``first_seed`` onward; each
+    run's row is also appended to the JSONL file ``path`` as it ends."""
+    rows: list[dict] = []
+    with open(path, "w") as f:
+        for i in range(1, pairs + 1):
+            seed = first_seed + i - 1
+            order = ("parent", "change") if i % 2 else ("change", "parent")
+            for side in order:
+                res = run_once(ref_dir if side == "parent" else ROOT,
+                               workload, seed)
+                rows.append({"pair": i, "side": side, "seed": seed, "result": res})
+                f.write(json.dumps(rows[-1]) + "\n")
+                f.flush()
+    return rows
+
+
+def compare(ref_dir: str, workload: str, pairs: int, first_seed: int,
+            prefix: str) -> dict:
+    """The summary of a block of pairs written to ``PREFIX.jsonl``, with
+    every regression call retried on a second block of fresh seeds
+    (``PREFIX_retry.jsonl``, summarised under ``retry``)."""
+    s = summarise(run_block(ref_dir, workload, pairs, first_seed,
+                            prefix + ".jsonl"))
+    flagged = [k for k, m in s["metrics"].items() if m["verdict"] in REGRESSIONS]
+    if flagged:
+        s["retry"] = summarise(run_block(ref_dir, workload, pairs,
+                                         first_seed + pairs,
+                                         prefix + "_retry.jsonl"))
+        for k in flagged:
+            again = s["retry"]["metrics"].get(k, {}).get("verdict")
+            s["metrics"][k].update(retry_verdict=again,
+                                   confirmed=again in REGRESSIONS)
+    return s
 
 
 def code_lines(src: str) -> int:
@@ -218,21 +271,10 @@ def main() -> int:
     commit = subprocess.run(["git", "-C", ROOT, "rev-parse", args.ref], check=True,
                             capture_output=True, text=True).stdout.strip()
     ref_dir = export_ref(commit)
-    rows: list[dict] = []
     try:
-        with open(prefix + ".jsonl", "w") as f:
-            for i in range(1, args.pairs + 1):
-                seed = args.first_seed + i - 1
-                order = ("parent", "change") if i % 2 else ("change", "parent")
-                for side in order:
-                    res = run_once(ref_dir if side == "parent" else ROOT,
-                                   args.workload, seed)
-                    rows.append({"pair": i, "side": side, "seed": seed, "result": res})
-                    f.write(json.dumps(rows[-1]) + "\n")
-                    f.flush()
+        s = compare(ref_dir, args.workload, args.pairs, args.first_seed, prefix)
     finally:
         shutil.rmtree(ref_dir, ignore_errors=True)
-    s = summarise(rows)
     s.update(ref=args.ref, ref_commit=commit, workload=args.workload,
              first_seed=args.first_seed)
     with open(prefix + ".json", "w") as f:
