@@ -278,8 +278,10 @@ def _transform_skip(
 ) -> bool:
     """True iff a NON-identity spec field's transformed value range is
     provably disjoint with a conjunct on its SOURCE column — the hidden-
-    partitioning pruning step (manifest summaries and file entries share
-    it via ``range_of(field, result_type) -> (lo, hi) | None``).
+    partitioning pruning step of both readers (manifest summaries, spec
+    file entries and native manifest entries share it via
+    ``range_of(field, transform, source_type) -> (lo, hi) | None``).
+    ``fields_by_id`` maps a field id to its ``name`` and Iceberg ``type``.
     Conservative: unknown transform / missing range / no matching
     conjunct → False."""
     from apache_iceberg_demo_spark.sources import transforms as _T
@@ -298,7 +300,7 @@ def _transform_skip(
         )
         if tr is None:
             continue  # void/foreign transform: never prune
-        rng = range_of(pf, tr.result_type(src["type"]))
+        rng = range_of(pf, tr, src["type"])
         if rng is None:
             continue
         lo, hi = rng
@@ -603,20 +605,6 @@ def _split_outside_quotes(pred: str, sep_word: Optional[str]):
         i += 1
     parts.append("".join(buf))
     return parts
-
-
-def _null_conjuncts(where: Optional[str]) -> list[tuple[str, bool]]:
-    """Top-level ``col IS [NOT] NULL`` conjuncts of ``where`` as
-    (column, is_not_null) pairs — the metric-pruning hooks."""
-    out: list[tuple[str, bool]] = []
-    if where is not None:
-        for conj in _split_outside_quotes(where, "AND") or []:
-            m = re.match(
-                r"^\s*([A-Za-z_]\w*)\s+IS\s+(NOT\s+)?NULL\s*$", conj, re.I
-            )
-            if m:
-                out.append((m.group(1), bool(m.group(2))))
-    return out
 
 
 def _parse_equality_predicate(pred: str):
@@ -1171,6 +1159,9 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
         ice_types = {
             f["name"]: f["type"] for f in schemas[schema_id]["fields"]
         }
+        ice_types_by_id = {
+            f["id"]: f["type"] for f in schemas[schema_id]["fields"]
+        }
 
         # parent delta in file-URI space: what THIS snapshot added/removed
         # relative to its exported parent (an expired parent truncates the
@@ -1348,26 +1339,19 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
             ]
             entries = []
             for f in added:
-                lower, upper = [], []
-                for col, (mn, mx) in sorted(f.get("stats", {}).items()):
-                    t = ice_types.get(col)
-                    fid = fids.get(col)
-                    if t is None or fid is None:
-                        continue
-                    lb, ub = bound_bytes(t, mn), bound_bytes(t, mx)
-                    if lb is not None and ub is not None:
-                        lower.append({"key": int(fid), "value": lb})
-                        upper.append({"key": int(fid), "value": ub})
                 abs_path = wh._abs_path(name, f["path"])
                 cached = footer_cache.get(abs_path)
                 if cached is None:
                     cached = footer_cache[abs_path] = _footer_metrics(abs_path)
                 fm, split_offsets = cached
-                # bound through the ids the file was written under: an old
-                # spelling keeps its id, and an identity partition column's
-                # in-file copy reports under the column's id
-                ffids = f["fids"]
+                # metrics and bounds bind through the ids the file was
+                # written under: an old spelling keeps its id, and an
+                # identity partition column's in-file copy reports under
+                # the column's id. Bounds need the id's type in this
+                # snapshot's schema.
+                ffids, stats = f["fids"], f.get("stats", {})
                 col_sizes, val_counts, null_counts = [], [], []
+                lower, upper = [], []
                 for nm in sorted(fm, key=lambda n: ffids.get(n, 1 << 30)):
                     fid = ffids.get(nm)
                     if fid is None or _hidden(nm):
@@ -1377,6 +1361,13 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
                     val_counts.append({"key": int(fid), "value": int(nv)})
                     if nn is not None:
                         null_counts.append({"key": int(fid), "value": int(nn)})
+                    t = ice_types_by_id.get(fid)
+                    if t is not None and nm in stats:
+                        mn, mx = stats[nm]
+                        lb, ub = bound_bytes(t, mn), bound_bytes(t, mx)
+                        if lb is not None and ub is not None:
+                            lower.append({"key": int(fid), "value": lb})
+                            upper.append({"key": int(fid), "value": ub})
                 entries.append(
                     {
                         "status": 1,  # ADDED
@@ -1782,10 +1773,6 @@ def read_iceberg_v2(
     file_seqs: dict[str, int] = {}
     eq_deletes: dict[str, dict] = {}
     pos_deletes: list[dict] = []
-    # IS [NOT] NULL conjuncts prune on the null-count metrics (fids
-    # 109/110) — affirmative evidence only: a fid absent from the maps
-    # (partial metrics are spec-legal) never skips
-    null_conjuncts = _null_conjuncts(where)
     # simple AND-conjuncts, parsed once: hidden-partitioning pruning maps
     # them through the spec transforms (day/month/year/hour/bucket/
     # truncate) and compares in transformed space
@@ -1794,16 +1781,18 @@ def read_iceberg_v2(
     snap_types_by_id = {f["id"]: f["type"] for f in schema["fields"]}
     snap_fields_by_id = {f["id"]: f for f in schema["fields"]}
     names_by_id = {f["id"]: f["name"] for f in schema["fields"]}
-    ids_by_name = {n: i for i, n in names_by_id.items()}
+    from apache_iceberg_demo_spark.sources.warehouse import Warehouse
+
     for mf in manifest_files:
         # manifest-level pruning (spec "Manifest Lists" field summaries):
         # a DATA manifest whose per-partition-field bounds exclude the
         # predicate is never even OPENED — the planning gate that matters
-        # when a 100 TB table carries thousands of manifests. Identity
-        # bounds feed _can_skip directly; transformed fields prune via
-        # _transform_skip (bounds live in the transform's result space);
-        # delete manifests are never skipped (extra delete files are
-        # harmless, missing ones are not).
+        # when a 100 TB table carries thousands of manifests. An identity
+        # field's bounds and no-nulls summary go into a view of its source
+        # column (bound by id) for Warehouse._can_skip; transformed fields
+        # prune via _transform_skip (bounds live in the transform's result
+        # space); delete manifests are never skipped (extra delete files
+        # are harmless, missing ones are not).
         if (
             where is not None
             and mf.get("content", 0) == 0
@@ -1812,32 +1801,22 @@ def read_iceberg_v2(
             spec_fields = specs_by_id.get(
                 mf["partition_spec_id"], {}
             ).get("fields", [])
-            stats, no_null_cols = {}, set()
+            view = {"partition": {}, "stats": {}, "nulls": {}}
             for fld, summ in zip(spec_fields, mf["partitions"]):
-                if fld.get("transform") != "identity":
-                    continue
-                t = snap_types_by_id.get(fld["source-id"])
-                if t is None:
+                col = names_by_id.get(fld["source-id"])
+                if fld.get("transform") != "identity" or col is None:
                     continue
                 if not summ["contains_null"]:
-                    no_null_cols.add(fld["name"])
+                    # identity partition: value NULL <=> the column is
+                    # NULL for every row of the file
+                    view["nulls"][col] = (0, None)
+                t = snap_types_by_id[fld["source-id"]]
                 lb, ub = summ.get("lower_bound"), summ.get("upper_bound")
                 if lb is not None and ub is not None:
                     lo, hi = try_bound_value(t, lb), try_bound_value(t, ub)
                     if lo is not None and hi is not None:
-                        stats[fld["name"]] = [lo, hi]
-            from apache_iceberg_demo_spark.sources.warehouse import Warehouse
-
-            if stats and Warehouse._can_skip(
-                {"partition": {}, "stats": stats}, where
-            ):
-                continue
-            # identity partition: value NULL <=> the column is NULL for
-            # every row of the file, so a no-nulls summary kills IS NULL
-            if any(
-                not is_not and col in no_null_cols
-                for col, is_not in null_conjuncts
-            ):
+                        view["stats"][col] = [lo, hi]
+            if Warehouse._can_skip(view, where):
                 continue
             # hidden-partitioning manifest prune: transformed-space bounds
             summ_by_name = {
@@ -1845,10 +1824,11 @@ def read_iceberg_v2(
                 for fld, s in zip(spec_fields, mf["partitions"])
             }
 
-            def _mf_range(pf: dict, result_type: str):
+            def _mf_range(pf: dict, tr, src_type: str):
                 s = summ_by_name.get(pf["name"])
                 if s is None:
                     return None
+                result_type = tr.result_type(src_type)
                 lo = _decode_transformed_bound(result_type, s.get("lower_bound"))
                 hi = _decode_transformed_bound(result_type, s.get("upper_bound"))
                 if lo is None or hi is None:
@@ -1901,12 +1881,33 @@ def read_iceberg_v2(
             df_rec = e["data_file"]
             if df_rec["file_format"].upper() != "PARQUET":
                 raise ValueError(f"unsupported format {df_rec['file_format']}")
-            # manifest-level file skipping (Iceberg scan planning): decode
-            # the entry's bounds and reuse the warehouse's conservative
-            # min/max pruner — a pruned file is never listed to the scan,
-            # the 100 TB fast path the bounds exist for
+            vals = {
+                kv["key"]: kv["value"] for kv in df_rec.get("value_counts") or []
+            }
+            # manifest-level file skipping (Iceberg scan planning): the
+            # entry's decoded bounds, identity partition values and null
+            # counts, each bound to the snapshot's column by field id,
+            # form one view for the warehouse's conservative pruner — a
+            # pruned file is never listed to the scan, the 100 TB fast
+            # path the metrics exist for. A field id absent from a metrics
+            # map (partial metrics are spec-legal) never skips.
             if where is not None:
-                stats = {}
+                part_rec = df_rec["partition"]
+                view = {
+                    "partition": {
+                        names_by_id[pf["source-id"]]: str(part_rec[pf["name"]])
+                        for pf in spec_fields
+                        if pf.get("transform", "identity") == "identity"
+                        and pf["source-id"] in names_by_id
+                        and part_rec.get(pf["name"]) is not None
+                    },
+                    "stats": {},
+                    "nulls": {
+                        names_by_id[kv["key"]]: (kv["value"], vals.get(kv["key"]))
+                        for kv in df_rec.get("null_value_counts") or []
+                        if kv["key"] in names_by_id
+                    },
+                }
                 uppers = {
                     kv["key"]: kv["value"] for kv in df_rec.get("upper_bounds") or []
                 }
@@ -1917,55 +1918,17 @@ def read_iceberg_v2(
                         lo = try_bound_value(t, kv["value"])
                         hi = try_bound_value(t, uppers[fid])
                         if lo is not None and hi is not None:
-                            stats[names_by_id[fid]] = [lo, hi]
-                entry_view = {
-                    "partition": {
-                        n: str(v)
-                        for n, v in df_rec["partition"].items()
-                        if v is not None
-                    },
-                    "stats": stats,
-                }
-                from apache_iceberg_demo_spark.sources.warehouse import Warehouse
+                            view["stats"][names_by_id[fid]] = [lo, hi]
 
-                if Warehouse._can_skip(entry_view, where):
-                    continue
                 # hidden-partitioning file prune: the entry's transformed
                 # partition value is an exact point range
-                part_rec = df_rec["partition"]
-
-                def _entry_range(pf: dict, _result_type: str):
+                def _entry_range(pf: dict, _tr, _src_type: str):
                     v = part_rec.get(pf["name"])
                     return None if v is None else (v, v)
 
-                if _transform_skip(
+                if Warehouse._can_skip(view, where) or _transform_skip(
                     spec_fields, snap_fields_by_id, conjuncts, _entry_range
                 ):
-                    continue
-            vals = {
-                kv["key"]: kv["value"] for kv in df_rec.get("value_counts") or []
-            }
-            if null_conjuncts:
-                nulls = {
-                    kv["key"]: kv["value"]
-                    for kv in df_rec.get("null_value_counts") or []
-                }
-                skip = False
-                for col, is_not_null in null_conjuncts:
-                    fid = ids_by_name.get(col)
-                    if fid is None or fid not in nulls:
-                        continue
-                    if not is_not_null and nulls[fid] == 0:
-                        skip = True  # column has no NULLs in this file
-                        break
-                    if (
-                        is_not_null
-                        and fid in vals
-                        and nulls[fid] == vals[fid]
-                    ):
-                        skip = True  # every stored value is NULL
-                        break
-                if skip:
                     continue
             if (
                 restrict_files is not None

@@ -358,7 +358,6 @@ class Warehouse:
         operation: str,
         files: list[dict],
         schema_ddl: str,
-        partition_by,  # str | list[str] | None (multi-field specs: list)
         parent: Optional[int],
         meta: dict,
         advance_current: bool = True,
@@ -532,63 +531,6 @@ class Warehouse:
             writer = writer.partitionBy(*pcols)
         writer.parquet(data_dir)
         return self._manifest_for_dir(name, data_dir)
-
-    def _transform_prune(
-        self, meta: dict, snap: dict, files: list[dict], where: str
-    ) -> list[dict]:
-        """Hidden-partitioning file pruning on the NATIVE read path: map
-        SOURCE-column conjuncts through the table's partition transform
-        and drop files whose (transformed) partition value is provably
-        disjoint. Matters most for bucket tables — a key-equality
-        predicate cannot prune via min/max stats (the hash destroys
-        order) but prunes to 1-of-N files here. Conservative: no
-        transform spec / no matching conjunct / unconvertible value →
-        keep the file."""
-        from apache_iceberg_demo_spark.sources import transforms as T
-
-        spec_str = meta.get("partition_spec")
-        if not spec_str or "(" not in str(spec_str):
-            return files
-        trs = [
-            t for t in T.parse_spec_list(spec_str) if t.kind != "identity"
-        ]
-        all_conjs = T.simple_conjuncts(where)
-        type_of = {
-            f["name"]: f["type"] if isinstance(f["type"], str) else "string"
-            for f in json.loads(snap["schema"])["fields"]
-        }
-        # pair each transform field with its source-column conjuncts; a
-        # field whose source type can't be resolved never prunes
-        active = []
-        for tr in trs:
-            src_type = type_of.get(tr.source)
-            if src_type is None:
-                continue
-            conjs = [c for c in all_conjs if c[0] == tr.source]
-            if conjs:
-                active.append((tr, src_type, conjs))
-        if not active:
-            return files
-        kept = []
-        for f in files:
-            skip = False
-            for tr, src_type, conjs in active:
-                raw = f["partition"].get(tr.derived)
-                if raw is None:
-                    continue
-                try:
-                    tv = T.partition_value_to_spec(tr, raw, src_type)
-                except (ValueError, TypeError):
-                    continue
-                if any(
-                    T.prune_disjoint(tr, op, lit, tv, tv, src_type)
-                    for _, op, lit in conjs
-                ):
-                    skip = True  # ANY field's disjointness proves no match
-                    break
-            if not skip:
-                kept.append(f)
-        return kept
 
     #: Iceberg-style hidden partition transforms (public Iceberg spec names):
     #: the table tracks `(transform, source_col)`; writers derive the partition
@@ -775,7 +717,7 @@ class Warehouse:
         # pre-write range+sort layout IS the table's declared sort order
         meta["sort_order"] = list(cluster_by) if cluster_by else None
         return self._commit(
-            name, "replace", files, df.schema.json(), partition_by, parent, meta
+            name, "replace", files, df.schema.json(), parent, meta
         )
 
     def append(
@@ -833,7 +775,6 @@ class Warehouse:
                     "append",
                     all_files,
                     meta["schema"],
-                    meta.get("partition_by"),
                     parent,
                     meta,
                     advance_current=_advance_current,
@@ -872,7 +813,6 @@ class Warehouse:
             "rollback",
             list(target["manifest"]),
             target["schema"],
-            meta.get("partition_by"),
             meta["current_snapshot_id"],
             meta,
             snap_extra=restore_deletes,
@@ -904,7 +844,6 @@ class Warehouse:
             "cherry-pick",
             cur["manifest"] + added,
             meta["schema"],
-            meta.get("partition_by"),
             meta["current_snapshot_id"],
             meta,
         )
@@ -948,7 +887,6 @@ class Warehouse:
             "evolve-spec",
             list(prev["manifest"]),
             meta["schema"],
-            new_pcol,
             parent,
             meta,
         )
@@ -1016,8 +954,7 @@ class Warehouse:
         # touch-tracking first field
         files = self._write_data(name, new_rows, meta, parent, meta["partition_by"])
         return self._commit(
-            name, operation, carry + files, meta["schema"],
-            meta["partition_by"], parent, meta,
+            name, operation, carry + files, meta["schema"], parent, meta,
         )
 
     def delete_where(self, name: str, predicate: str) -> dict:
@@ -1072,7 +1009,6 @@ class Warehouse:
             "delete-mor",
             list(prev["manifest"]),
             meta["schema"],
-            meta.get("partition_by"),
             parent,
             meta,
             snap_extra=add_entry,
@@ -1319,9 +1255,11 @@ class Warehouse:
 
         ``snapshot_id`` / ``as_of_ms`` select the snapshot (VERSION AS OF /
         TIMESTAMP AS OF). ``where`` prunes files on the manifest (partition
-        values, min/max stats, hidden-partition transforms) and is applied
-        as a normal pushed filter. The snapshot's merge-on-read delete
-        entries apply to exactly the files they scope. Whatever the commit
+        values, min/max stats, hidden-partition transforms), each entry's
+        values bound to the snapshot's columns by field id
+        (:meth:`_prune_files`), and is applied as a normal pushed filter.
+        The snapshot's merge-on-read delete entries apply to exactly the
+        files they scope. Whatever the commit
         history, the read is the single scan :meth:`_scan_files` plans.
         """
         meta = self._load_meta(name)
@@ -1409,15 +1347,15 @@ class Warehouse:
         later or dropped-then-re-added reads NULL over older files, whatever
         snapshots have expired. Partition columns are no exception: each
         file holds a copy (``_write_data``), so the manifest's partition
-        values only prune here. Files that bind alike share one parquet
-        scan with a read schema from metadata: a table without schema
-        evolution is ONE FileScan. A merge-on-read delete binds its names
-        through the ``schema`` and ``fids`` it was recorded with; one whose
-        scope covers every scanned file applies as ``NOT coalesce(pred,
-        false)``, and one scoping some of them as ``NOT (__file IN (scope)
-        AND coalesce(pred, false))`` on the scan's file key, its scope
-        paths URI-quoted as ``_metadata.file_path`` renders them: a filter,
-        no join. ``removed=True`` returns the deleted rows instead, with
+        values only prune (:meth:`_prune_files`, bound by id alike). Files
+        that bind alike share one parquet scan with a read schema from
+        metadata: a table without schema evolution is ONE FileScan. A
+        merge-on-read delete binds its names through the ``schema`` and
+        ``fids`` it was recorded with; one whose scope covers every scanned
+        file applies as ``NOT coalesce(pred, false)``, and one scoping some
+        of them as ``NOT (__file IN (scope) AND coalesce(pred, false))`` on
+        the scan's file key, its scope paths URI-quoted as
+        ``_metadata.file_path`` renders them: a filter, no join. ``removed=True`` returns the deleted rows instead, with
         ``__file`` (URI-quoted) and ``__pos``.
         """
         from apache_iceberg_demo_spark.sources.iceberg_v2 import (
@@ -1428,8 +1366,7 @@ class Warehouse:
 
         declared = self._declared_schema(snap)
         if where is not None:
-            files = [f for f in files if not self._can_skip(f, where)]
-            files = self._transform_prune(meta, snap, files, where)
+            files = self._prune_files(meta, snap, files, where)
         if not files:
             # the everything-pruned and the empty-manifest case (ADVICE r01)
             return self.spark.createDataFrame([], schema=declared)
@@ -1499,14 +1436,92 @@ class Warehouse:
     def _declared_schema(meta_or_snap: dict):
         return StructType.fromJson(json.loads(meta_or_snap["schema"]))
 
+    def _prune_files(
+        self, meta: dict, snap: dict, files: list[dict], where: str
+    ) -> list[dict]:
+        """The entries of ``files`` that ``where`` may match as of ``snap``.
+        Each entry's view binds its ``stats`` and ``partition`` keys through
+        the entry's own ``fids`` (a partition value through its in-file
+        copy's id) to ``snap``'s column names; an id ``snap``'s schema lacks
+        drops out, so a renamed, dropped or re-added column never prunes on
+        another column's values. :meth:`_can_skip` decides on the view, and
+        the table spec's hidden transforms prune through the spec reader's
+        ``_transform_skip``. Plain dicts: no Spark call per entry."""
+        from apache_iceberg_demo_spark.sources import transforms as T
+        from apache_iceberg_demo_spark.sources.iceberg_v2 import (
+            _SPARK_TO_ICEBERG,
+            _transform_skip,
+        )
+
+        fids = snap["fids"]
+        fields = {
+            fids[x.name]: {
+                "name": x.name,
+                "type": _SPARK_TO_ICEBERG.get(
+                    x.dataType.simpleString(), x.dataType.simpleString()
+                ),
+            }
+            for x in self._declared_schema(snap).fields
+            if x.name in fids
+        }
+        name_of = {fid: fld["name"] for fid, fld in fields.items()}
+        spec_fields = [
+            {"name": tr.derived, "transform": tr.spec_name,
+             "source-id": fids[tr.source]}
+            for tr in T.parse_spec_list(meta.get("partition_spec"))
+            if tr.kind != "identity" and tr.source in fids
+        ]
+        conjuncts = T.simple_conjuncts(where) if spec_fields else []
+        kept = []
+        for f in files:
+            ids = f["fids"]
+            view = {
+                "partition": {
+                    name_of[i]: v for k, v in f["partition"].items()
+                    if (i := ids.get(_part_copy(k))) in name_of
+                },
+                "stats": {
+                    name_of[i]: st for k, st in f["stats"].items()
+                    if (i := ids.get(k)) in name_of
+                },
+            }
+
+            # a file's transformed partition value is a point range, found
+            # by the term's derived name (a spec evolved onto a transform
+            # gives that column no field id). The file derived it from its
+            # column of the source's name, so it binds only while that
+            # column carries the source's id
+            def _point(pf, tr, src_type, f=f):
+                if f["fids"].get(tr.source) != pf["source-id"]:
+                    return None
+                try:
+                    tv = T.partition_value_to_spec(
+                        tr, f["partition"].get(pf["name"]), src_type
+                    )
+                except (ValueError, TypeError):
+                    return None
+                return None if tv is None else (tv, tv)
+
+            if not (
+                self._can_skip(view, where)
+                or _transform_skip(spec_fields, fields, conjuncts, _point)
+            ):
+                kept.append(f)
+        return kept
+
     @staticmethod
-    def _can_skip(file_entry: dict, where: str) -> bool:
-        """Conservative min/max file skipping for `col op literal`
-        predicates, BETWEEN, and AND-conjunctions of those (the Iceberg
-        manifest-filter fast path). Anything not recognized → never skip
-        (correctness first); in a conjunction, ONE provably-disjoint
-        conjunct suffices to skip the file."""
+    def _can_skip(view: dict, where: str) -> bool:
+        """The one file pruner: True iff no row of the file (or manifest)
+        ``view`` describes can match ``where``. The view is name-keyed and
+        bound by field id by its builder (:meth:`_prune_files`, the spec
+        reader): ``partition`` (identity or derived partition values),
+        ``stats`` (``[min, max]``) and optionally ``nulls`` (``(null count,
+        value count or None)``). Recognized: ``col op literal``, BETWEEN,
+        ``col IS [NOT] NULL`` and AND-conjunctions of those. Anything else
+        never skips (correctness first); in a conjunction, ONE provably
+        disjoint conjunct suffices."""
         from apache_iceberg_demo_spark.sources.transforms import (
+            exact_number,
             split_and_conjuncts,
         )
 
@@ -1520,22 +1535,26 @@ class Warehouse:
         if parts is None:
             return False
         if len(parts) > 1:
-            return any(Warehouse._can_skip(file_entry, p) for p in parts)
+            return any(Warehouse._can_skip(view, p) for p in parts)
         where = parts[0]
         # IS [NOT] NULL against a partition VALUE is exact either way: an
         # identity (or derived-transform) partition value of None means
         # every row is NULL for that column, non-None means no row is —
         # so IS NULL skips non-null partitions and IS NOT NULL skips the
-        # null partition (r14; min/max stats carry no null evidence, so
-        # non-partition columns never skip here).
+        # null partition (r14). Other columns skip only on null counts:
+        # min/max stats carry no null evidence.
         m0 = re.fullmatch(
             r"\s*(\w+)\s+IS\s+(NOT\s+)?NULL\s*", where, re.IGNORECASE
         )
         if m0:
-            if m0.group(1) in file_entry["partition"]:
-                pv0 = file_entry["partition"][m0.group(1)]
-                return (pv0 is None) if m0.group(2) else (pv0 is not None)
-            return False
+            col, is_not = m0.group(1), bool(m0.group(2))
+            if col in view["partition"]:
+                pv0 = view["partition"][col]
+                return (pv0 is None) if is_not else (pv0 is not None)
+            nulls, values = view.get("nulls", {}).get(col, (None, None))
+            if is_not:
+                return nulls is not None and nulls == values
+            return nulls == 0
         m = re.fullmatch(
             r"\s*(\w+)\s*(<=|>=|<|>|=|==)\s*('([^']*)'|[-0-9.]+)\s*", where
         )
@@ -1547,13 +1566,15 @@ class Warehouse:
         else:
             # [-0-9.]+ admits junk like `1.2.3` or a bare `-`: never skip
             # on it, never crash the read (ADVICE r12 class). Integral
-            # literals parse as EXACT ints — see _exact_number (r14).
-            lit = _exact_number(raw)
+            # literals parse as EXACT ints: float()-ing an int64 >= 2^53
+            # collapses neighbors, and a strict < / > against a collapsed
+            # pair WRONGLY SKIPS a file holding matching rows (r14).
+            lit = exact_number(raw)
             if lit is None:
                 return False
         # partition-value pruning first (exact)
-        if col in file_entry["partition"]:
-            pv: object = file_entry["partition"][col]
+        if col in view["partition"]:
+            pv: object = view["partition"][col]
             if pv is None:
                 # a null partition value means EVERY row in the file has
                 # NULL for this column — no comparison predicate can
@@ -1564,11 +1585,11 @@ class Warehouse:
                 # "1995-03" month dir): incomparable — keep the file.
                 # Numeric dirs parse exactly (int64 dirs ≥ 2^53 float-
                 # collapsed pre-r14 and could wrongly skip).
-                pv = _exact_number(pv)
+                pv = exact_number(pv)
                 if pv is None:
                     return False
             return not _cmp_holds(pv, op, lit, pv, pv)
-        st = file_entry["stats"].get(col)
+        st = view["stats"].get(col)
         if not st:
             return False
         mn, mx = st
@@ -1771,8 +1792,7 @@ class Warehouse:
         if meta_extra is not None:
             meta_extra(meta)
         return self._commit(
-            name, operation, prev["manifest"], new_schema.json(),
-            meta.get("partition_by"), parent, meta,
+            name, operation, prev["manifest"], new_schema.json(), parent, meta,
         )
 
     def add_column(self, name: str, col: str, dtype: str) -> dict:
@@ -2062,17 +2082,6 @@ class Warehouse:
         return self.create_or_replace(
             name, df, partition_by=meta.get("partition_spec") or part_by
         )
-
-
-def _exact_number(s):
-    """Exact numeric parse (int when integral, float otherwise) — shared
-    with the transform pruner. float()-ing an int64 ≥ 2^53 collapses
-    neighbors and a strict < / > against a collapsed pair WRONGLY SKIPS a
-    file holding matching rows (r14 probe: k < 2^53+1 skipped the file
-    whose min was 2^53)."""
-    from apache_iceberg_demo_spark.sources.transforms import exact_number
-
-    return exact_number(s)
 
 
 def _decimal_raw_stats(md, ci: int, st):

@@ -1712,6 +1712,29 @@ def test_name_mapping_resolves_renamed_lineage(spark, tmp_path):
     assert spec == bespoke and len(spec) == 25
     assert all(r.nation is not None for r in spec)
 
+    # bounds bind through each file's own ids as its metrics do: the file
+    # written under the original spelling (whose snapshot expired) bounds
+    # the renamed column's field too, so the reader can prune on it
+    snap = next(
+        s for s in meta["snapshots"]
+        if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    _, _, mfs = read_ocf(_from_uri(snap["manifest-list"]))
+    files = [
+        e["data_file"]
+        for m in mfs if m.get("content", 0) == 0
+        for e in read_ocf(_from_uri(m["manifest_path"]))[2]
+        if e["status"] != 2
+    ]
+    assert len(files) >= 2
+    for d in files:
+        assert entry["field-id"] in {kv["key"] for kv in d["lower_bounds"]}
+        assert entry["field-id"] in {kv["key"] for kv in d["upper_bounds"]}
+    pred = "nation = 'ALGERIA'"
+    assert sorted(
+        read_iceberg_v2(spark, location, where=pred).collect()
+    ) == sorted(read_iceberg_v2(spark, location).where(pred).collect())
+
 
 def test_export_refuses_drop_then_readd(spark, tmp_path):
     """A name bound to two different field ids (drop-then-re-add) stays
@@ -2614,8 +2637,8 @@ def test_advice_r12_regressions(spark, tmp_path):
     (1) a malformed numeric literal that still matches the [-0-9.]+
     regex (`1.2.3`, bare `-`) drops the conjunct instead of crashing
     the pruner with ValueError; (2) when the source column can't be
-    resolved from the table schema, _transform_prune returns the file
-    list UNCHANGED (a "string" src_type default could hash an
+    resolved from the table schema, the native pruner (_prune_files)
+    returns the file list UNCHANGED (a "string" src_type default could hash an
     int-keyed bucket literal in the utf-8 layout and unsoundly prune a
     matching file); (3) CursorExpiredError tolerates a None
     oldest_available (degenerate metadata: null/absent
@@ -2650,10 +2673,10 @@ def test_advice_r12_regressions(spark, tmp_path):
     broken["schema"] = _json.dumps(schema_json)
     broken_meta = dict(meta)
     broken_meta["schema"] = broken["schema"]
-    kept = wh._transform_prune(broken_meta, broken, files, "o_custkey = 5")
+    kept = wh._prune_files(broken_meta, broken, files, "o_custkey = 5")
     assert kept == files  # conservative: schema miss → keep everything
     # sanity: with the schema intact the same predicate DOES prune
-    pruned = wh._transform_prune(meta, snap, files, "o_custkey = 5")
+    pruned = wh._prune_files(meta, snap, files, "o_custkey = 5")
     assert len(pruned) < len(files)
 
     # (3a) None oldest_available stays typed (no int(None) TypeError)

@@ -211,3 +211,15 @@ def test_can_skip_is_null_inverse(spark, tmp_path):
     assert sorted(
         r.k for r in wh.read("d", where="tag IS NOT NULL").collect()
     ) == [1, 2, 3, 6, 7, 8, 9, 10]
+    # a top-level OR disables null pruning on both readers: the spec
+    # reader's null counts must not drop the non-null partitions for the
+    # `tag IS NULL` that only one side of the OR names
+    loc = export_iceberg_v2(wh, "d", str(tmp_path / "ice"))
+    pred = "tag IS NULL AND k = 4 OR v = 10.0"
+    assert sorted(r.k for r in wh.read("d", where=pred).collect()) == [1, 4]
+    assert sorted(
+        r.k for r in read_iceberg_v2(spark, loc, where=pred).collect()
+    ) == [1, 4]
+    assert sorted(
+        r.k for r in read_iceberg_v2(spark, loc, where="tag IS NULL").collect()
+    ) == [4, 5]

@@ -1040,7 +1040,7 @@ def test_malformed_numeric_literals_drop_not_crash(raws):
 )
 @settings(max_examples=300, deadline=None)
 def test_multi_field_transform_prune_is_sound(day_off, key, lit_day, lit_key, op):
-    """Multi-field _transform_prune soundness: a file whose row matches
+    """Multi-field native pruning soundness: a file whose row matches
     BOTH conjuncts (a date inequality through days() and a key equality
     through bucket(4)) is NEVER pruned — any field's false-disjointness
     would silently drop the row."""
@@ -1058,23 +1058,32 @@ def test_multi_field_transform_prune_is_sound(day_off, key, lit_day, lit_key, op
         "fields": [
             {"name": "ts", "type": "date", "nullable": True, "metadata": {}},
             {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+            # the derived partition columns, as create_or_replace records
+            {"name": "ts_days", "type": "string", "nullable": True,
+             "metadata": {}},
+            {"name": "k_bucket", "type": "integer", "nullable": True,
+             "metadata": {}},
         ],
     }
     meta = {
         "partition_spec": "days(ts), bucket(4, k)",
         "schema": _json.dumps(schema),
     }
-    snap = {"schema": _json.dumps(schema)}
+    snap = {
+        "schema": _json.dumps(schema),
+        "fids": {"ts": 1, "k": 2, "ts_days": 3, "k_bucket": 4},
+    }
     f = {
         "partition": {
             "ts_days": d.isoformat(),
             "k_bucket": str(bucket_value(key, 4)),
         },
         "stats": {},
+        "fids": {"ts": 1, "k": 2, "__part_ts_days": 3, "__part_k_bucket": 4},
     }
     where = f"ts {op} '{lit_d.isoformat()}' AND k = {lit_key}"
     wh = Warehouse.__new__(Warehouse)  # no spark needed for the pruner
-    kept = wh._transform_prune(meta, snap, [f], where)
+    kept = wh._prune_files(meta, snap, [f], where)
     row_matches = {
         "=": d == lit_d, ">=": d >= lit_d, "<=": d <= lit_d,
         ">": d > lit_d, "<": d < lit_d,

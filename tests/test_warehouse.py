@@ -1610,6 +1610,53 @@ def test_rename_then_readd_reads_null_over_old_files(spark, wh):
     ]
 
 
+@pytest.mark.parametrize(
+    "case", ["swap", "drop_rename", "partition_readd", "bucket_source_rename"]
+)
+def test_pruned_read_binds_by_field_id(spark, wh, case):
+    """A pruned read equals the unpruned one after evolution moves a name
+    onto another field id: each file's stats and partition values bind
+    through the ids it was written under, never by the name. ``swap``
+    exchanges two columns by renames, ``drop_rename`` drops ``a`` and
+    renames ``b`` to it, ``partition_readd`` drops and re-adds a column
+    the files were partitioned by, and ``bucket_source_rename`` moves a
+    bucket spec's source name onto another column (the files' bucket
+    values were derived from the old one)."""
+    if case == "bucket_source_rename":
+        wh.create_or_replace(
+            "t", spark.createDataFrame([(1, 3, 100)], "id bigint, a int, b int"),
+            partition_by="bucket(4, a)",
+        )
+        wh.rename_column("t", "a", "c")  # the spec follows: bucket(4, c)
+        wh.rename_column("t", "b", "a")
+        wh.evolve_partition_spec("t", "bucket(4, a)")
+        preds = {"a = 100": [1], "c = 3": [1], "a = 3": []}
+    elif case == "partition_readd":
+        wh.create_or_replace(
+            "t", spark.createDataFrame([(1, 5), (2, 6)], "id bigint, p int"),
+            partition_by="p",
+        )
+        wh.evolve_partition_spec("t", None)
+        wh.drop_column("t", "p")
+        wh.add_column("t", "p", "int")
+        preds = {"p IS NULL": [1, 2], "p = 5": []}
+    else:
+        wh.create_or_replace(
+            "t", spark.createDataFrame([(1, 7, 100)], "id bigint, a int, b int")
+        )
+        if case == "swap":
+            for old, new in [("a", "tmp"), ("b", "a"), ("tmp", "b")]:
+                wh.rename_column("t", old, new)
+            preds = {"a = 100": [1], "b = 7": [1], "a = 7": []}
+        else:
+            wh.drop_column("t", "a")
+            wh.rename_column("t", "b", "a")
+            preds = {"a = 100": [1], "a = 7": []}
+    for pred, ids in preds.items():
+        assert sorted(r.id for r in wh.read("t").where(pred).collect()) == ids
+        assert sorted(r.id for r in wh.read("t", where=pred).collect()) == ids
+
+
 def test_rollback_across_rename_restores_old_values(spark, wh):
     """Rolling back past a rename restores the target's column identities:
     x binds its old files through its old field id again, on the rolled-back

@@ -8,6 +8,10 @@ pure-Python row model beside it. After every step:
 
 - ``read()`` equals the model;
 - ``read(where="p = k")`` equals the model filtered on ``p``;
+- while a column is named ``b``, ``read(where="b IS NULL")`` and (for a
+  bigint ``b``) ``read(where="b = v")`` equal the model filtered on ``b``:
+  stats pruning must bind by field id, and ``b`` may by then name a
+  re-added column or another column renamed onto the dropped name;
 - the previous snapshot, unless expired, time-travels to the previous
   model state.
 
@@ -226,8 +230,14 @@ class WarehouseModel(RuleBasedStateMachine):
     @rule(data=st.data())
     def rename_column(self, data):
         old = data.draw(st.sampled_from(self._droppable()))
-        self.fresh += 1
-        new = f"r{self.fresh}"
+        # the target may be a dropped name: files written under it must
+        # not lend it their values or their stats
+        new = data.draw(st.sampled_from(
+            [c for c in self.dropped if c not in self.cols] + [None]
+        ))
+        if new is None:
+            self.fresh += 1
+            new = f"r{self.fresh}"
         self.wh.rename_column(TABLE, old, new)
         self.cols = {(new if c == old else c): t for c, t in self.cols.items()}
         self.dropped.append(old)  # a later add_column may re-add the old name
@@ -247,6 +257,17 @@ class WarehouseModel(RuleBasedStateMachine):
             self.wh.read(TABLE, where=f"p = {k}"), self.cols,
             [r for r in self.rows if r["p"] == k], f"read(where='p = {k}')",
         )
+        b_preds = []
+        if "b" in self.cols:
+            b_preds.append(("b IS NULL", lambda r: r["b"] is None))
+        if self.cols.get("b") == "bigint":
+            v = INTS[1 + len(self.history) % (len(INTS) - 1)]
+            b_preds.append((f"b = {v}", lambda r: r["b"] == v))
+        for pred, hit in b_preds:
+            self._check(
+                self.wh.read(TABLE, where=pred), self.cols,
+                [r for r in self.rows if hit(r)], f"read(where='{pred}')",
+            )
         if len(self.history) > 1:
             sid, cols, rows = self.history[-2]
             self._check(

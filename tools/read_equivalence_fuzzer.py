@@ -7,7 +7,13 @@ the same through export -> read_iceberg_v2. Catches any unsound prune
 tables take a merge-on-read delete and then an append, so the delete scopes
 only some of their files (the native read's file-key filter; position or
 equality deletes in the export); those draws come from a second stream, so
-a seed's tables and predicates are the ones it drew before.
+a seed's tables and predicates are the ones it drew before. A third stream
+evolves a non-partition column on about half the tables before their
+predicates: a rename (predicates follow the new name), a drop and re-add
+(then an append), a swap of two numeric columns by renames, or a drop of
+one numeric column with another renamed onto its name. The last three
+bind a name to two field ids, which the export refuses by design; their
+spec-reader side is skipped and logged as ``[refused]``.
 
 Usage: python tools/read_equivalence_fuzzer.py [SEED] [N_TABLES] [N_PREDS]
 Round-14 sweeps: seeds 14/99/7/23/41, ~2500 predicate evaluations — the
@@ -16,6 +22,7 @@ empty-string fix set in tests/test_empty_string_partitions_r14.py.
 """
 import os
 import random
+import re
 import shutil
 import sys
 
@@ -28,6 +35,7 @@ N_TABLES = int(sys.argv[2]) if len(sys.argv) > 2 else 12
 N_PREDS = int(sys.argv[3]) if len(sys.argv) > 3 else 24
 rng = random.Random(SEED)
 mor = random.Random(SEED + 1)
+evo = random.Random(SEED + 2)
 
 ROOT = os.environ.get("SPARK_GRAFT_FUZZ_DIR", "/tmp/fuzz_read")
 shutil.rmtree(ROOT, ignore_errors=True)
@@ -81,6 +89,47 @@ SPECS = [
     "days(ts), bucket(2, k)", "tag, bucket(2, k)",
 ]
 
+TYPES = {"i": "int", "k": "bigint", "tag": "string", "v": "double",
+         "ts": "timestamp"}
+
+
+def evolve(name, spec):
+    """Draw one schema change of a non-partition column from ``evo``;
+    returns (what was done, old name -> new name, export refuses)."""
+    free = [c for c in TYPES if not re.search(rf"\b{c}\b", spec or "")]
+    numeric = [c for c in free if c in ("i", "k", "v")]
+    op = evo.choice(["rename", "readd", "swap", "drop_rename"])
+    if op in ("swap", "drop_rename") and len(numeric) < 2:
+        op = "readd"
+    if op == "rename":
+        c = evo.choice(free)
+        wh.rename_column(name, c, c + "_r")
+        return f"rename {c}", {c: c + "_r"}, False
+    if op == "readd":
+        c = evo.choice(free)
+        wh.drop_column(name, c)
+        wh.add_column(name, c, TYPES[c])
+        wh.append(name, make_frame(make_rows(evo.randint(5, 20), evo)))
+        return f"readd {c}", {}, True
+    a, b = evo.sample(numeric, 2)
+    if op == "swap":
+        for old, new in [(a, "tmp"), (b, a), ("tmp", b)]:
+            wh.rename_column(name, old, new)
+    else:
+        wh.drop_column(name, a)
+        wh.rename_column(name, b, a)
+        wh.add_column(name, b, TYPES[b])
+    return f"{op} {a} {b}", {}, True
+
+
+def renamed(pred, renames):
+    """``pred`` with each renamed column's name replaced outside quotes."""
+    parts = pred.split("'")
+    for old, new in renames.items():
+        parts[::2] = [re.sub(rf"\b{old}\b", new, x) for x in parts[::2]]
+    return "'".join(parts)
+
+
 def sql_quote(s):
     return "'" + s.replace("'", "''") + "'"
 
@@ -116,6 +165,7 @@ def make_pred():
 fails = 0
 checked = 0
 with_deletes = 0
+evolved = 0
 for t in range(N_TABLES):
     spec = rng.choice(SPECS)
     n = rng.randint(5, 40)
@@ -133,18 +183,26 @@ for t in range(N_TABLES):
         ))
         wh.append(name, make_frame(make_rows(mor.randint(5, 20), mor)))
         with_deletes += 1
-    base_cols = ["i", "k", "tag", "v", "ts"]
+    renames, refused = {}, False
+    if evo.random() < 0.5:
+        what, renames, refused = evolve(name, spec)
+        evolved += 1
+        print(f"[evolve] t{t} spec={spec!r}: {what}")
+    base_cols = [renames.get(c, c) for c in ["i", "k", "tag", "v", "ts"]]
     full = wh.read(name)
     loc = None
     try:
         loc = export_iceberg_v2(wh, name, os.path.join(ROOT, f"ice{t}"))
         sfull = read_iceberg_v2(spark, loc)
     except Exception as e:
-        print(f"[FAIL] export/read table {t} spec={spec}: {e}")
-        fails += 1
+        if refused and "re-added" in str(e):
+            print(f"[refused] export t{t}: {e}")
+        else:
+            print(f"[FAIL] export/read table {t} spec={spec}: {e}")
+            fails += 1
         loc = None
     for _ in range(N_PREDS):
-        pred = make_pred()
+        pred = renamed(make_pred(), renames)
         try:
             expect = sorted(
                 map(tuple,
@@ -175,6 +233,7 @@ for t in range(N_TABLES):
                 print(f"[FAIL] spec-reader t{t} spec={spec!r} pred={pred!r}: "
                       f"{len(sgot)} vs {len(expect)} rows")
 print(f"checked {checked} predicate evaluations across {N_TABLES} tables "
-      f"({with_deletes} with a partially scoped delete); failures: {fails}")
+      f"({with_deletes} with a partially scoped delete, {evolved} evolved); "
+      f"failures: {fails}")
 spark.stop()
 sys.exit(1 if fails else 0)
