@@ -1010,9 +1010,10 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
     # ids a live data file was written under (renames move the name, keep
     # the fid — warehouse.rename_column), so old files' spellings resolve
     # after their writing snapshot expired. One case stays refused: a name
-    # bound to two DIFFERENT fids (drop-then-re-add) — name-based
-    # resolution would resurrect dropped values; rewrite_data_files()
-    # materializes current names and clears it.
+    # bound to two DIFFERENT fids (a drop then re-add, or a swap by
+    # renames) — name-based resolution would read the other field's
+    # values. rewrite_data_files() writes every row under the current
+    # binding; expiring the snapshots before it clears the old one.
     seen_fids: dict[str, int] = {}
     names_by_fid: dict[int, list[str]] = {}
 
@@ -1026,10 +1027,11 @@ def export_iceberg_v2(wh, name: str, location: Optional[str] = None) -> str:
             return
         if seen_fids.setdefault(col, fid) != fid:
             raise ValueError(
-                f"table {name!r}: column {col!r} was dropped and "
-                "re-added (two field ids in lineage); name-binding "
-                "export would resurrect dropped values — run "
-                "rewrite_data_files() first"
+                f"table {name!r}: column {col!r} is bound to two field "
+                "ids in lineage (dropped and re-added, or swapped by "
+                "renames); a name-binding export would read the other "
+                "field's values — run rewrite_data_files(), then "
+                "expire_snapshots() up to that commit (keep_last=1)"
             )
         names = names_by_fid.setdefault(fid, [])
         if col not in names:

@@ -42,7 +42,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
 def _hive_unescape(s: str) -> str:
@@ -312,7 +312,7 @@ class Warehouse:
                 # null partition values to the __HIVE_DEFAULT_PARTITION__
                 # dir — normalize to a real None here so every consumer
                 # (export null serialization, contains_null summaries,
-                # pruning, partition routing) sees null, not a sentinel
+                # pruning, copy-on-write grouping) sees null, not a sentinel
                 # string that parses as a date/int never written
                 part_vals = {}
                 rel = os.path.relpath(path, data_dir)
@@ -429,33 +429,6 @@ class Warehouse:
         return snapshot
 
     # ---------- write paths ----------
-
-    #: routing key for a NULL partition value in touched-partition sets.
-    #: NULL never equals anything in SQL, so `pv.isin(touched)` silently
-    #: dropped null-partition rows from every row-level rewrite — DELETE /
-    #: UPDATE simply didn't apply to them (round-13 probe). Coalescing to
-    #: a sentinel no real value can collide with (NUL byte) makes null a
-    #: routable partition value on both the frame and the manifest side.
-    _NULL_PART = "\x00__NULL_PARTITION__"
-
-    @classmethod
-    def _pv_expr(cls, part_col: str):
-        """Null-safe string routing key for a partition column. EMPTY
-        STRING unifies with null: Spark's dynamic-partition writer sends
-        both to ``__HIVE_DEFAULT_PARTITION__`` (verified — the hive
-        layout cannot distinguish them), so the manifest records null for
-        a ''-valued partition and a routing key of '' would never match
-        its file. r14 fuzzer: DELETE of ``tag = ''`` rows on a
-        truncate-string table silently skipped, UPDATE duplicated them."""
-        return F.coalesce(
-            F.nullif(F.col(part_col).cast("string"), F.lit("")),
-            F.lit(cls._NULL_PART),
-        )
-
-    @classmethod
-    def _part_key(cls, value) -> str:
-        """Manifest-side twin of :meth:`_pv_expr`."""
-        return cls._NULL_PART if value is None or value == "" else str(value)
 
     @staticmethod
     def _pcols(partition_by) -> list[str]:
@@ -605,11 +578,10 @@ class Warehouse:
         frame read from the table. Files written before an evolution onto
         a transform lack the derived column entirely (so a read either
         omits it from the declared schema or null-fills it for legacy
-        vintages); row-level ops that route rows by partition value must
-        recompute it from the SOURCE columns or they crash on the missing
-        column — or worse, silently drop legacy rows whose NULL value
-        matches no touched partition. Deterministic re-derivation
-        overwrites any stored copy with the same value."""
+        vintages); a copy-on-write rewrite lays its rows out under the
+        current spec, so it recomputes them from the SOURCE columns.
+        Deterministic re-derivation overwrites any stored copy with the
+        same value."""
         spec = meta.get("partition_spec")
         if spec and "(" in str(spec):
             df, _ = self._apply_transform(df, spec)
@@ -853,9 +825,10 @@ class Warehouse:
         data file moves. Writes after this commit lay out under the new spec
         (plain column or hidden transform, as in create_or_replace); files
         written under earlier specs stay live with their old layout and scans
-        merge both vintages. Row-level DELETE/UPDATE remains exact across
-        vintages: old-spec files a predicate might touch are lazily rewritten
-        under the current spec (_partial_rewrite).
+        merge both vintages. Row-level ops stay exact across vintages: an
+        old-spec file group that holds a matched row is lazily rewritten
+        under the current spec, and the other groups carry
+        (:meth:`_copy_on_write`).
 
         At 100 TB this is the feature that lets a table repartition (e.g.
         days(ts) → hours(ts) as volume grows) without a table-sized rewrite —
@@ -891,95 +864,69 @@ class Warehouse:
             meta,
         )
 
-    def _partial_rewrite(
-        self, name: str, touched_vals: set, new_rows: DataFrame, operation: str
-    ) -> dict:
-        """Copy-on-write commit rewriting only the TOUCHED partitions:
-        untouched partitions' file entries carry into the new manifest
-        byte-identical (the Iceberg row-level-op shape shared by MERGE /
-        DELETE / UPDATE). On an unpartitioned table ``new_rows`` is the
-        whole table and nothing carries.
+    def _copy_on_write(self, name: str, operation: str, matched, rewrite) -> dict:
+        """The one copy-on-write commit behind DELETE, UPDATE, MERGE and
+        SCD2. One scan of the current snapshot (its merge-on-read deletes
+        applied, the current spec's derived columns re-derived, ``__file``
+        kept) is handed to ``matched``, which returns the rows the op
+        changes; the data files holding one are found by file path. Every
+        entry whose recorded ``partition`` equals such a file's is touched,
+        so a partition is rewritten whole and keeps one file per value. The
+        rest carry byte-identical: other partition values, other tuples of
+        a multi-field spec, and earlier-spec groups (grouped by their own
+        partition dict) without a match. An unpartitioned table is one
+        group. ``rewrite(touched, rows)`` turns the touched entries' rows
+        into their replacement (``rows`` is the whole scan, for an insert's
+        anti-join); it is re-derived, written under the current spec and
+        committed beside the carried entries. An empty rewrite adds no
+        file."""
+        from apache_iceberg_demo_spark.sources.iceberg_v2 import (
+            _uri_path_quote,
+            file_scope_sql,
+        )
 
-        On a MULTI-field spec the touched set is computed on the FIRST
-        partition column only — sound (a file whose first-field value is
-        untouched holds no matching rows, since touched_vals covers every
-        matching row's first-field value) but coarser than per-tuple
-        tracking; the rewrite itself re-lays data under the FULL spec."""
         meta = self._load_meta(name)
-        pcols = self._pcols(meta["partition_by"])
-        prev = self._snapshot(meta, meta["current_snapshot_id"])
-        # the write below partitions by the CURRENT spec's derived columns;
-        # rows read from pre-evolution vintages (and, after an evolution
-        # ONTO a transform, every row — the declared schema predates the
-        # derived column) must have them recomputed from source data
-        new_rows = self._with_derived(new_rows, meta)
-        if not pcols:
-            carry = []  # unpartitioned: the rewrite is the whole table
-        elif touched_vals:
-            part_col = pcols[0]
-            # files written under an EARLIER partition spec (evolve_partition_
-            # spec) have no entry for the current part col — they can hide
-            # matching rows in any partition, so they are conservatively
-            # rewritten under the current spec (lazy migration, the
-            # copy-on-write answer to Iceberg's mixed-spec manifests). Their
-            # untouched-partition rows re-enter via the scan below, minus
-            # the rows merge-on-read deletes removed (the rewritten files
-            # leave those entries' scope); their touched-partition rows are
-            # already in the caller's new_rows.
-            legacy = [f for f in prev["manifest"] if part_col not in f["partition"]]
-            carry = [
-                f
-                for f in prev["manifest"]
-                if part_col in f["partition"]
-                and self._part_key(f["partition"][part_col]) not in touched_vals
-            ]
-            if legacy:
-                pv = self._pv_expr(part_col)
-                # re-derive BEFORE the partition filter: legacy files
-                # don't store a transform's derived column, and a
-                # null-filled pv would make ~isin drop every legacy row
-                scan = self._scan_files(
-                    name, meta, prev, legacy, None, prev.get("delete_predicates", [])
-                )
-                keep_legacy = self._with_derived(scan, meta).filter(
-                    ~pv.isin(*touched_vals)
-                )
-                new_rows = new_rows.unionByName(
-                    keep_legacy.select(*new_rows.columns)
-                )
-        else:
-            carry = list(prev["manifest"])
         parent = meta["current_snapshot_id"]
-        # write under the FULL spec (all partition columns), not just the
-        # touch-tracking first field
-        files = self._write_data(name, new_rows, meta, parent, meta["partition_by"])
+        prev = self._snapshot(meta, parent)
+        rows = self._with_derived(self._scan_files(
+            name, meta, prev, prev["manifest"], None,
+            prev.get("delete_predicates", []), with_file=True,
+        ), meta)
+        hit = {r[0] for r in matched(rows).select("__file").distinct().collect()}
+        path = {f["path"]: os.path.abspath(self._abs_path(name, f["path"]))
+                for f in prev["manifest"]}
+
+        def part(f: dict) -> tuple:
+            return tuple(sorted(f["partition"].items()))
+
+        parts = {part(f) for f in prev["manifest"] if _uri_path_quote(path[f["path"]]) in hit}
+        touched = [path[f["path"]] for f in prev["manifest"] if part(f) in parts]
+        carry = [f for f in prev["manifest"] if part(f) not in parts]
+        if carry:
+            rows_in = rows.filter(file_scope_sql(touched) if touched else "false")
+        else:
+            rows_in = rows
+        new_rows = self._with_derived(rewrite(rows_in.drop("__file"), rows), meta)
+        files = self._write_data(name, new_rows, meta, parent, meta.get("partition_by"))
+        for f in files:
+            if not f["row_count"]:  # the one file an empty unpartitioned write leaves
+                _unlink_if_present(self._abs_path(name, f["path"]))
         return self._commit(
-            name, operation, carry + files, meta["schema"], parent, meta,
+            name, operation, carry + [f for f in files if f["row_count"]],
+            meta["schema"], parent, meta,
         )
 
     def delete_where(self, name: str, predicate: str) -> dict:
         """Row-level DELETE (copy-on-write): rows matching ``predicate`` are
         removed in a new snapshot; NULL predicate results keep the row (SQL
-        DELETE semantics). On a partitioned table only partitions holding a
-        matching row are rewritten."""
-        meta = self._load_meta(name)
-        pcols = self._pcols(meta.get("partition_by"))
-        part_col = pcols[0] if pcols else None
-        # derived partition columns recomputed from source data: after an
-        # evolution onto a transform the declared schema may not carry
-        # them at all, and legacy vintages null-fill them
-        target = self._with_derived(self.read(name), meta)
-        cond = F.coalesce(F.expr(predicate), F.lit(False))
-        if not part_col:
-            return self._partial_rewrite(name, set(), target.filter(~cond), "delete")
-        pv = self._pv_expr(part_col)
-        touched = {
-            r["p"] for r in target.filter(cond).select(pv.alias("p")).distinct().collect()
-        }
-        kept = target.filter(
-            pv.isin(*touched) if touched else F.lit(False)
-        ).filter(~cond)
-        return self._partial_rewrite(name, touched, kept, "delete")
+        DELETE semantics). Only the partitions holding a matching row are
+        rewritten (:meth:`_copy_on_write`)."""
+        hit = f"coalesce(({predicate}), false)"
+        return self._copy_on_write(
+            name, "delete",
+            lambda rows: rows.filter(hit),
+            lambda touched, _rows: touched.filter(f"NOT {hit}"),
+        )
 
     def delete_where_mor(self, name: str, predicate: str) -> dict:
         """Row-level DELETE, MERGE-ON-READ (Iceberg v2): a METADATA-ONLY
@@ -1025,46 +972,31 @@ class Warehouse:
             return cur
         materialized = self.read(name)  # delete-applied view
         return self.create_or_replace(
-            name, materialized, partition_by=meta.get("partition_spec")
+            name, materialized, partition_by=meta.get("partition_spec"),
+            cluster_by=meta.get("sort_order"),
         )
 
     def update_where(self, name: str, predicate: str, assignments: dict) -> dict:
         """Row-level UPDATE (copy-on-write): SET ``col = sql_expr`` on rows
-        matching ``predicate``. Partition-aware like MERGE — an update that
-        moves a row across partitions rewrites both its old and new
-        partition."""
-        meta = self._load_meta(name)
-        pcols = self._pcols(meta.get("partition_by"))
-        part_col = pcols[0] if pcols else None
-        # mark matches BEFORE applying assignments: re-evaluating the
-        # predicate on updated rows would miss any row the update moved out
-        # of the predicate (e.g. a partition-column change)
-        marked = self._with_derived(self.read(name), meta).withColumn(
-            "_upd", F.coalesce(F.expr(predicate), F.lit(False))
+        matching ``predicate``. The partitions holding a matching row are
+        rewritten (:meth:`_copy_on_write`); a row the update moves to
+        another partition is written there as a new file beside it."""
+        hit = f"coalesce(({predicate}), false)"
+
+        def rewrite(touched: DataFrame, _rows: DataFrame) -> DataFrame:
+            # mark matches BEFORE applying assignments: re-evaluating the
+            # predicate on updated rows would miss any row the update moved
+            # out of the predicate
+            out = touched.withColumn("_upd", F.expr(hit))
+            for col, expr in assignments.items():
+                out = out.withColumn(
+                    col, F.when(F.col("_upd"), F.expr(expr)).otherwise(F.col(col))
+                )
+            return out.drop("_upd")
+
+        return self._copy_on_write(
+            name, "update", lambda rows: rows.filter(hit), rewrite
         )
-        updated_all = marked
-        for col, expr in assignments.items():
-            updated_all = updated_all.withColumn(
-                col, F.when(F.col("_upd"), F.expr(expr)).otherwise(F.col(col))
-            )
-        # an assignment may SET a transform's source column — recompute
-        # the derived columns AFTER assignments so a moved row's NEW
-        # partition is tracked (and written) in the right place
-        updated_all = self._with_derived(updated_all, meta)
-        if not part_col:
-            return self._partial_rewrite(
-                name, set(), updated_all.drop("_upd"), "update"
-            )
-        pv = self._pv_expr(part_col)
-        old_parts = marked.filter("_upd").select(pv.alias("p"))
-        new_parts = updated_all.filter("_upd").select(pv.alias("p"))
-        touched = {
-            r["p"] for r in old_parts.unionByName(new_parts).distinct().collect()
-        }
-        rewritten = updated_all.filter(
-            pv.isin(*touched) if touched else F.lit(False)
-        ).drop("_upd")
-        return self._partial_rewrite(name, touched, rewritten, "update")
 
     def tag_snapshot(self, name: str, tag: str, snapshot_id: Optional[int] = None) -> None:
         """Iceberg named ref: pin a human-readable tag to a snapshot id
@@ -1339,6 +1271,7 @@ class Warehouse:
         where: Optional[str],
         deletes: list[dict] = (),
         removed: bool = False,
+        with_file: bool = False,
     ) -> DataFrame:
         """The one scan behind every native read of ``files`` as of ``snap``
         (whose schema is authoritative: time travel reads the old schema).
@@ -1355,8 +1288,10 @@ class Warehouse:
         file applies as ``NOT coalesce(pred, false)``, and one scoping some
         of them as ``NOT (__file IN (scope) AND coalesce(pred, false))`` on
         the scan's file key, its scope paths URI-quoted as
-        ``_metadata.file_path`` renders them: a filter, no join. ``removed=True`` returns the deleted rows instead, with
-        ``__file`` (URI-quoted) and ``__pos``.
+        ``_metadata.file_path`` renders them: a filter, no join.
+        ``with_file=True`` keeps that key as ``__file`` beside the columns;
+        ``removed=True`` returns the deleted rows instead, with ``__file``
+        and ``__pos``.
         """
         from apache_iceberg_demo_spark.sources.iceberg_v2 import (
             FILE_KEY_SQL,
@@ -1365,11 +1300,15 @@ class Warehouse:
         )
 
         declared = self._declared_schema(snap)
+        keys = [StructField("__file", StringType())] if with_file or removed else []
+        keys += [StructField("__pos", LongType())] if removed else []
         if where is not None:
             files = self._prune_files(meta, snap, files, where)
         if not files:
             # the everything-pruned and the empty-manifest case (ADVICE r01)
-            return self.spark.createDataFrame([], schema=declared)
+            return self.spark.createDataFrame(
+                [], schema=StructType(declared.fields + keys)
+            )
         # (column, type, field id): the declared columns, then any field a
         # delete predicate names that no declared column carries
         cols = [(x.name, x.dataType, snap["fids"][x.name]) for x in declared.fields]
@@ -1407,7 +1346,7 @@ class Warehouse:
         # The projections are SQL strings: each Column-API call is several
         # Py4J round trips, and a 16-column read with one delete made ~1,600
         # of them before its first job.
-        with_file = removed or any(s is not None for _, _, s in scoped)
+        file_key = bool(keys) or any(s is not None for _, _, s in scoped)
         df = None
         for key, group in groups.items():
             part = scan_parquet_files(
@@ -1415,7 +1354,7 @@ class Warehouse:
                 StructType([StructField(src, types[c]) for c, src in key]),
             ).selectExpr(
                 *[f"{_quote(src)} AS {hidden[c]}" for c, src in key],
-                *([FILE_KEY_SQL] if with_file else []),
+                *([FILE_KEY_SQL] if file_key else []),
                 *(["_metadata.row_index AS __pos"] if removed else []),
             )
             df = part if df is None else df.unionByName(part)
@@ -1428,7 +1367,7 @@ class Warehouse:
             ).filter(hit if removed else f"NOT ({hit})").drop(*names)
         df = df.selectExpr(
             *[f"{hidden[x.name]} AS {_quote(x.name)}" for x in declared.fields],
-            *(["__file", "__pos"] if removed else []),
+            *[k.name for k in keys],
         )
         return df.filter(where) if where is not None else df
 
@@ -1943,31 +1882,26 @@ class Warehouse:
         when_not_matched_insert: bool = True,
     ) -> dict:
         """MERGE INTO (upsert) — Iceberg/Delta's row-level write, emulated on
-        the snapshot format with one distributed plan:
-
-            target ─ anti-join(source keys) ─┐
-                                             ├─ union → replace snapshot
-            source (update + insert rows) ───┘
+        the snapshot format through :meth:`_copy_on_write`:
 
         - matched + update: source row replaces the target row
         - matched + no-update: target row kept (source matched rows dropped)
         - not-matched + insert: source row appended
 
-        One shuffle on the merge keys (the anti join). On an UNPARTITIONED
-        table the rewrite is a full replace commit; on a PARTITIONED table
-        only the TOUCHED partitions (those holding a source row or a matched
-        target row) are rewritten — untouched partitions' file entries carry
-        over into the new manifest byte-identical, which is the 100 TB shape
-        (Iceberg's copy-on-write MERGE rewrites only affected files).
+        A target row whose key is in ``source`` matches when matched rows
+        update; the partitions holding one are rewritten as their unmatched
+        rows plus the admitted source rows, and every other entry carries
+        byte-identical. An insert-only merge matches nothing, so it touches
+        no file: the new rows land in new files. One shuffle on the merge
+        keys (the semi and anti joins).
         """
         meta = self._load_meta(name)
+        if not (when_matched_update or when_not_matched_insert):
+            return self._snapshot(meta, meta["current_snapshot_id"])
         pcols = self._pcols(meta.get("partition_by"))
-        part_col = pcols[0] if pcols else None
         spec = meta.get("partition_spec") or meta.get("partition_by")
-        target = self._with_derived(self.read(name), meta)
-        src_cols = [c for c in target.columns if c in source.columns]
-        src = source.select(*src_cols)
-        if pcols and any(c not in src.columns for c in pcols):
+        src = source
+        if any(c not in src.columns for c in pcols):
             # re-derive the hidden-transform partition columns on the source
             # (the writer owns the derivation, ADVICE r01)
             src, _ = self._apply_transform(src, spec)
@@ -1977,47 +1911,23 @@ class Warehouse:
                     f"merge source lacks partition column(s) {missing!r} and "
                     f"spec {spec!r} cannot derive them from the source columns"
                 )
-            src = src.select(*[c for c in target.columns if c in src.columns])
         keys = src.select(*on).dropDuplicates(on)
 
-        if part_col:
-            # touched partitions: where source rows land, plus where matched
-            # target rows currently live (an update can move a row across
-            # partitions — its old partition must be rewritten too)
-            pv = self._pv_expr(part_col)
-            touched_vals = {
-                r.p
-                for r in src.select(pv.alias("p"))
-                .unionByName(
-                    target.join(keys, on=on, how="left_semi").select(pv.alias("p"))
-                )
-                .distinct()
-                .collect()
-            }
-            target = target.filter(pv.isin(*touched_vals) if touched_vals else F.lit(False))
-        else:
-            touched_vals = set()
+        def matched(rows: DataFrame) -> DataFrame:
+            if not when_matched_update:
+                return rows.filter("false")
+            return rows.join(keys, on=on, how="left_semi")
 
-        untouched = target.join(keys, on=on, how="left_anti")
-        if when_matched_update and when_not_matched_insert:
-            result = untouched.unionByName(src)
-        elif when_matched_update:
-            matched_keys = target.select(*on).dropDuplicates(on)
-            result = untouched.unionByName(src.join(matched_keys, on=on, how="left_semi"))
-        elif when_not_matched_insert:
-            inserts = src.join(target.select(*on).dropDuplicates(on), on=on, how="left_anti")
-            result = target.unionByName(inserts)
-        else:
-            return self._snapshot(meta, meta["current_snapshot_id"])
+        def rewrite(touched: DataFrame, rows: DataFrame) -> DataFrame:
+            s = src.select(*[c for c in touched.columns if c in src.columns])
+            if not when_matched_update:  # nothing touched: the inserts only
+                return s.join(rows.select(*on).dropDuplicates(on), on=on, how="left_anti")
+            kept = touched.join(keys, on=on, how="left_anti")
+            if not when_not_matched_insert:
+                s = s.join(touched.select(*on).dropDuplicates(on), on=on, how="left_semi")
+            return kept.unionByName(s)
 
-        if not part_col:
-            return self.create_or_replace(name, result)
-        # partial-partition commit through the SHARED rewrite path: carries
-        # untouched files byte-identical, rewrites earlier-spec (legacy)
-        # files conservatively — merge's old hand-rolled tail CARRIED
-        # legacy files while their touched rows were also rewritten,
-        # duplicating rows after a spec evolution
-        return self._partial_rewrite(name, touched_vals, result, "merge")
+        return self._copy_on_write(name, "merge", matched, rewrite)
 
     def apply_scd2(
         self, name: str, changes: DataFrame, key: list[str], effective_ts_col: str
@@ -2030,33 +1940,34 @@ class Warehouse:
         (``valid_to`` = the change's effective timestamp) and a new current
         version is inserted. Non-changed keys pass through untouched.
 
-        One plan: current-rows ⋈ change-keys (to close) + untouched rows +
-        new versions, unioned into a replace commit — the standard lakehouse
-        SCD2 emulation (no MERGE engine needed; Spark 100 TB form is the
-        same with the rewrite restricted to touched partitions).
+        A copy-on-write commit (:meth:`_copy_on_write`): the current rows of
+        changed keys match, and the partitions holding one are rewritten
+        with those rows closed; the new versions are written beside them.
         """
-        target = self.read(name)
         eff = F.col(effective_ts_col)
-        new_versions = changes.withColumn("valid_from", eff).withColumn(
-            "valid_to", F.lit(None).cast("timestamp")
-        ).drop(effective_ts_col)
+        new_versions = self._with_derived(
+            changes.withColumn("valid_from", eff)
+            .withColumn("valid_to", F.lit(None).cast("timestamp"))
+            .drop(effective_ts_col),
+            self._load_meta(name),
+        )
         change_keys = changes.select(*key, eff.alias("_eff")).dropDuplicates(key)
 
-        current = target.filter(F.col("valid_to").isNull())
-        history = target.filter(F.col("valid_to").isNotNull())
-        closed = (
-            current.join(change_keys, on=key, how="inner")
-            .withColumn("valid_to", F.col("_eff"))
-            .drop("_eff")
-        )
-        untouched_current = current.join(change_keys.select(*key), on=key, how="left_anti")
-        result = history.unionByName(untouched_current).unionByName(closed).unionByName(
-            new_versions.select(*history.columns)
-        )
-        meta = self._load_meta(name)
-        return self.create_or_replace(
-            name, result, partition_by=meta.get("partition_spec")
-        )
+        def matched(rows: DataFrame) -> DataFrame:
+            return rows.filter(F.col("valid_to").isNull()).join(
+                change_keys.select(*key), on=key, how="left_semi"
+            )
+
+        def rewrite(touched: DataFrame, _rows: DataFrame) -> DataFrame:
+            # a current row of a changed key closes at the change's
+            # timestamp; history rows keep their valid_to
+            closed = touched.join(change_keys, on=key, how="left").select(*[
+                F.coalesce("valid_to", "_eff").alias(c) if c == "valid_to" else c
+                for c in touched.columns
+            ])
+            return closed.unionByName(new_versions.select(*touched.columns))
+
+        return self._copy_on_write(name, "scd2", matched, rewrite)
 
     def rewrite_data_files(self, name: str, target_file_mb: int = 128) -> dict:
         """Bin-packing compaction (Iceberg ``rewrite_data_files``): coalesce
@@ -2080,7 +1991,8 @@ class Warehouse:
         # hidden-transform metadata survives the compaction commit and later
         # appends still re-derive the partition column (ADVICE r01)
         return self.create_or_replace(
-            name, df, partition_by=meta.get("partition_spec") or part_by
+            name, df, partition_by=meta.get("partition_spec") or part_by,
+            cluster_by=meta.get("sort_order"),
         )
 
 
@@ -3040,9 +2952,9 @@ def c6_named_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def c6_row_level_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6: the row-level triad completed — standalone DELETE and UPDATE
     (copy-on-write, partial-partition) beside MERGE. DELETE removes matching
-    rows in a new snapshot; UPDATE rewrites matching rows in place
-    (including rows whose update MOVES them across partitions — both the old
-    and new partition rewrite).
+    rows in a new snapshot; UPDATE rewrites matching rows in place (a row
+    whose update MOVES it across partitions leaves its old partition's
+    rewrite and lands in a new file of the new one).
 
     Self-verified: deleted rows are gone and nothing else changed (content
     fingerprint of the untouched remainder is identical); updated values
@@ -3254,8 +3166,8 @@ def c6_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes land under the new layout while the old files stay put. The scan
     merges both vintages (each dir group restores its own partition column
     from paths; the other vintage carries it as data), and row-level DELETE
-    across the spec boundary lazily rewrites only the old-spec files it
-    might touch.
+    across the spec boundary lazily rewrites only the old-spec file groups
+    holding a matched row.
 
     Self-verifying: (1) the evolve commit carries its parent's manifest
     byte-identical (no data moved); (2) the mixed-vintage scan equals the

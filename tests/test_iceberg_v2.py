@@ -1736,18 +1736,35 @@ def test_name_mapping_resolves_renamed_lineage(spark, tmp_path):
     ) == sorted(read_iceberg_v2(spark, location).where(pred).collect())
 
 
-def test_export_refuses_drop_then_readd(spark, tmp_path):
-    """A name bound to two different field ids (drop-then-re-add) stays
-    refused: name-based resolution would resurrect the dropped values."""
+@pytest.mark.parametrize("case", ["drop_readd", "swap"])
+def test_export_refuses_drop_then_readd(spark, tmp_path, case):
+    """A name bound to two different field ids — a drop then re-add, or a
+    swap of two columns by renames — stays refused: name-based resolution
+    would read the other field's values. The message's advice works:
+    rewrite_data_files(), then expire the snapshots before it, and the
+    export reads back the current values."""
     from apache_iceberg_demo_spark.io import load
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     n = load(spark, SF, "nation")
     wh.create_or_replace("nt", n)
-    wh.drop_column("nt", "n_name")
-    wh.add_column("nt", "n_name", "string")
-    with pytest.raises(ValueError, match="re-added"):
+    if case == "drop_readd":
+        wh.drop_column("nt", "n_name")
+        wh.add_column("nt", "n_name", "string")
+    else:
+        wh.rename_column("nt", "n_name", "tmp")
+        wh.rename_column("nt", "n_regionkey", "n_name")
+        wh.rename_column("nt", "tmp", "n_regionkey")
+    want = sorted(tuple(r) for r in wh.read("nt").collect())
+    with pytest.raises(ValueError, match="two field ids") as err:
         export_iceberg_v2(wh, "nt", str(tmp_path / "ice"))
+    assert "rewrite_data_files()" in str(err.value)
+    assert "expire_snapshots()" in str(err.value)
+    wh.rewrite_data_files("nt")
+    wh.expire_snapshots("nt", keep_last=1)
+    loc = export_iceberg_v2(wh, "nt", str(tmp_path / "ice"))
+    got = read_iceberg_v2(spark, loc).select(*wh.read("nt").columns)
+    assert sorted(tuple(r) for r in got.collect()) == want
 
 
 def test_reexport_versions_metadata(spark, tmp_path):
@@ -1842,6 +1859,31 @@ def test_sort_order_and_summary_export(spark, tmp_path):
     assert snap["summary"]["operation"] == "overwrite"
     assert int(snap["summary"]["total-records"]) == 400
     assert snap["summary"]["total-data-files"].isdigit()
+
+
+@pytest.mark.parametrize("op", ["rewrite_data_files", "apply_deletes", "merge_into"])
+def test_rewrites_keep_sort_order(spark, tmp_path, op):
+    """Compaction, the materialization of merge-on-read deletes and an
+    unpartitioned MERGE rewrite a clustered table's files; the declared
+    sort order survives each, and the v2 export still declares it."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    ddl = "k bigint, v bigint"
+    wh.create_or_replace(
+        "t", spark.createDataFrame([(k, k % 3) for k in range(20)], ddl),
+        cluster_by=["k"],
+    )
+    if op == "rewrite_data_files":
+        wh.rewrite_data_files("t")
+    elif op == "apply_deletes":
+        wh.delete_where_mor("t", "v = 0")
+        wh.apply_deletes("t")
+    else:
+        wh.merge_into("t", spark.createDataFrame([(1, 9), (50, 9)], ddl), on=["k"])
+    meta = wh._load_meta("t")
+    assert meta["sort_order"] == ["k"]
+    assert wh._snapshot(meta, meta["current_snapshot_id"])["operation"] != "append"
+    exported = _load_meta(export_iceberg_v2(wh, "t", str(tmp_path / "ice")))
+    assert exported["default-sort-order-id"] == 1
 
 
 def test_divergent_branch_fast_append_inheritance(spark, tmp_path):
@@ -2883,28 +2925,55 @@ def test_multi_field_partition_spec_roundtrip(spark, tmp_path):
 
 
 def test_multi_field_spec_row_level_ops(spark, tmp_path):
-    """Row-level DELETE / UPDATE / MERGE on a multi-field-spec table:
-    touched-partition tracking runs on the FIRST field (sound, coarser),
-    the rewrite lands under the FULL two-column layout, and results stay
+    """Row-level DELETE / UPDATE on a multi-field-spec table: a DELETE
+    rewrites exactly the files of the ``(day, bucket)`` tuples holding a
+    matched row, and carries the other buckets of the same days; the
+    rewrite lands under the FULL two-column layout, and results stay
     exact."""
     from apache_iceberg_demo_spark.io import load
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    o = load(spark, SF, "orders").filter(
+    base = load(spark, SF, "orders").filter(
         (F.col("o_orderkey") % 20 == 0)
         & (F.col("o_orderdate") >= "1995-01-01")
         & (F.col("o_orderdate") < "1995-04-01")
     )
+    # each order gets two twins on its day under the next customer keys,
+    # so a day holds several buckets
+    o = base
+    for j in (1, 2):
+        o = o.unionByName(base.withColumns({
+            "o_orderkey": F.col("o_orderkey") + j * 10_000_000,
+            "o_custkey": F.col("o_custkey") + j,
+        }))
     wh.create_or_replace("t", o, partition_by="days(o_orderdate), bucket(4, o_custkey)")
 
-    k = o.select("o_custkey").first()[0]
+    k = base.select("o_custkey").first()[0]
+    pcols = ("o_orderdate_days", "o_custkey_bucket")
+
+    def tup(f):
+        return tuple(str(f["partition"][c]) for c in pcols)
+
+    meta = wh._load_meta("t")
+    before = wh._snapshot(meta, meta["current_snapshot_id"])["manifest"]
+    hit = {
+        tuple(str(v) for v in r)
+        for r in wh.read("t").filter(F.col("o_custkey") == k).select(*pcols).collect()
+    }
     wh.delete_where("t", f"o_custkey = {k}")
     after_del = wh.read("t")
     assert after_del.filter(F.col("o_custkey") == k).count() == 0
     assert after_del.count() == o.filter(F.col("o_custkey") != k).count()
-    # files still lay out under BOTH partition dirs
     meta = wh._load_meta("t")
     cur = wh._snapshot(meta, meta["current_snapshot_id"])
+    kept = {f["path"] for f in cur["manifest"]}
+    # exactly the matched tuples' files were rewritten; every other file,
+    # including other buckets of a matched day, carried
+    assert {tup(f) for f in before if f["path"] not in kept} == hit
+    assert all(f["path"] in kept for f in before if tup(f) not in hit)
+    hit_days = {d for d, _ in hit}
+    assert any(tup(f)[0] in hit_days and tup(f) not in hit for f in before)
+    # files still lay out under BOTH partition dirs
     assert all(
         {"o_orderdate_days", "o_custkey_bucket"} <= set(f["partition"])
         for f in cur["manifest"]
@@ -3161,9 +3230,9 @@ def test_row_level_ops_after_evolution_onto_transform(spark, tmp_path):
     """Round-13 probe finding, pinned: row-level ops on a table whose
     spec was EVOLVED ONTO a transform used to crash (the derived column
     is not in the declared schema, F.col() is unresolvable) — and rows
-    from pre-evolution vintages would null-fill it, so the legacy-file
-    filter in _partial_rewrite could silently drop them. All partition
-    routing now recomputes derived columns from source data:
+    from pre-evolution vintages would null-fill it, so a filter on the
+    derived column could silently drop them. The copy-on-write rewrite
+    now recomputes derived columns from source data:
     (1) unpartitioned -> days(), delete_where — exact result, every
     rewritten file lands under a real day dir, export validates and
     round-trips; (2) days() -> months() with legacy day files, delete —

@@ -8,10 +8,11 @@ partition values, bucket(N) of a NULL source through
 export -> reader prune -> validator, and ``_can_skip``'s IS NULL inverse
 (the all-rows-null comparison skip must NOT fire for IS NULL predicates).
 
-The r14 probe came back CLEAN on every surface (the r13 fixes —
-``_pv_expr``/``_part_key`` null routing, ``_manifest_for_dir`` real-None
-partition values, ``_uri_path_quote`` — already covered them); these tests
-pin that so a regression fails loudly instead of silently.
+The r14 probe came back CLEAN on every surface (the r13 fixes — null
+routing of row-level ops, since replaced by copy-on-write grouping on the
+manifest's partition dicts, ``_manifest_for_dir`` real-None partition
+values, ``_uri_path_quote`` — already covered them); these tests pin that
+so a regression fails loudly instead of silently.
 """
 import json
 import os

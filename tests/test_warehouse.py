@@ -387,6 +387,24 @@ def test_merge_into_partitioned_rewrites_only_touched(spark, wh):
     wh.append("t", extra.drop(pcol) if pcol in extra.columns else extra)
     assert wh.read("t").count() == li.count() + 50
 
+    # an insert-only merge matches nothing: every file carries, and only
+    # the source rows with a new key land, in new files
+    meta3 = wh._load_meta("t")
+    live = {f["path"] for f in wh._snapshot(meta3, meta3["current_snapshot_id"])["manifest"]}
+    on = ["l_orderkey", "l_linenumber", "l_shipdate"]
+    old = (
+        wh.read("t").orderBy(*on).limit(5).drop(pcol)
+        .withColumn("l_quantity", F.lit(-9.0))
+    )
+    new = old.withColumn("l_orderkey", F.col("l_orderkey") + 20_000_000)
+    wh.merge_into("t", old.unionByName(new), on=on, when_matched_update=False)
+    meta4 = wh._load_meta("t")
+    after = wh._snapshot(meta4, meta4["current_snapshot_id"])["manifest"]
+    assert live <= {f["path"] for f in after}
+    merged = wh.read("t")
+    assert merged.count() == li.count() + 50 + 5
+    assert merged.filter(F.col("l_quantity") == -9.0).count() == 5
+
 
 def test_incremental_read_returns_only_appended_rows(spark, wh):
     li = _lineitem(spark).drop("ship_day")
@@ -1524,8 +1542,8 @@ def test_merge_after_spec_evolution_no_duplication(spark, tmp_path):
     CARRIED legacy (earlier-spec) files while their touched rows were
     also rewritten — duplicating every merged row that lived in a
     pre-evolution file. merge_into now commits through the shared
-    _partial_rewrite path (legacy files rewritten conservatively,
-    untouched rows re-entering via the keep_legacy scan)."""
+    copy-on-write path: a legacy file group holding a matched row is
+    rewritten whole."""
     from apache_iceberg_demo_spark.io import load
 
     wh = Warehouse(spark, str(tmp_path / "wh"))

@@ -2,9 +2,10 @@
 
 A hypothesis ``RuleBasedStateMachine`` drives one partitioned table through
 appends, merge-on-read deletes (on stable columns and on a column that may
-later be renamed or dropped), their materialization, MERGE upserts, column
-add / drop (re-add included) / rename and snapshot expiry, and keeps a
-pure-Python row model beside it. After every step:
+later be renamed or dropped), their materialization, copy-on-write DELETE
+and UPDATE (an UPDATE may move rows to another partition), MERGE upserts,
+column add / drop (re-add included) / rename and snapshot expiry, and keeps
+a pure-Python row model beside it. After every step:
 
 - ``read()`` equals the model;
 - ``read(where="p = k")`` equals the model filtered on ``p``;
@@ -50,10 +51,11 @@ STRS = [None, "", "%", " ", "\U0001d518", "a b%c", "x"]
 PARTS = [0, 1, BIG, -(2**63)]
 TABLE = "t"
 
-# MoR delete predicates, each with its SQL three-valued model twin: a NULL
+# Delete predicates, each with its SQL three-valued model twin: a NULL
 # comparison keeps the row. DELETES name columns no rule drops or renames;
-# B_DELETES name ``b``, which a later rule may rename or drop, so the stored
-# predicate must keep binding the values it was recorded over.
+# B_DELETES name ``b``, which a later rule may rename or drop, so a stored
+# merge-on-read predicate must keep binding the values it was recorded
+# over. The copy-on-write DELETE and UPDATE rules match rows by them too.
 DELETES = [
     ("p = 1", lambda r: r["p"] == 1),
     (f"p = {BIG}", lambda r: r["p"] == BIG),
@@ -67,6 +69,16 @@ B_DELETES = [
     ("b = -1", lambda r: r["b"] == -1),
     (f"b = {BIG}", lambda r: r["b"] == BIG),
     ("b IS NULL", lambda r: r["b"] is None),
+]
+
+# UPDATE assignments on the partition columns, with the values the model
+# stores: each moves the matched rows to another (p, s) tuple, NULL and an
+# identity '' (stored as NULL) included
+UPDATES = [
+    ({"p": "1"}, {"p": 1}),
+    ({"p": "NULL"}, {"p": None}),
+    ({"s": "'%'"}, {"s": "%"}),
+    ({"s": "''"}, {"s": None}),
 ]
 
 
@@ -171,6 +183,28 @@ class WarehouseModel(RuleBasedStateMachine):
     @rule(i=st.integers(0, len(B_DELETES) - 1))
     def delete_where_mor_b(self, i):
         self._delete(*B_DELETES[i])
+
+    def _delete_cow(self, sql, hit) -> None:
+        self.wh.delete_where(TABLE, sql)
+        self.rows = [r for r in self.rows if not hit(r)]
+        self._record()
+
+    @rule(i=st.integers(0, len(DELETES) - 1))
+    def delete_where(self, i):
+        self._delete_cow(*DELETES[i])
+
+    @precondition(lambda self: self.cols.get("b") == "bigint")
+    @rule(i=st.integers(0, len(B_DELETES) - 1))
+    def delete_where_b(self, i):
+        self._delete_cow(*B_DELETES[i])
+
+    @rule(i=st.integers(0, len(DELETES) - 1), j=st.integers(0, len(UPDATES) - 1))
+    def update_where(self, i, j):
+        sql, hit = DELETES[i]
+        sets, stored = UPDATES[j]
+        self.wh.update_where(TABLE, sql, sets)
+        self.rows = [{**r, **stored} if hit(r) else r for r in self.rows]
+        self._record()
 
     @rule()
     def expire_snapshots(self):
